@@ -7,12 +7,17 @@ data (the whole dataset query executes here, timed as query_duration_sec)
 model.pkl + metadata.json with a revision -> registry write.
 
 Spark shape: steps stay driver-side except the data plan — ``get_data`` is
-one Catalyst DAG; CV folds are lazy filters over ONE cached aligned frame
-(each fold shares the scan); the fit is a single distributed aggregation
-(LinearModel sufficient statistics). Nothing but configs, Gram matrices and
-thresholds ever reaches the driver, so the same builder drives a 1000-
-executor cluster unchanged: thousands of machines = a driver loop or thread
-pool submitting concurrent jobs (SURVEY.md §3.3), not one pod per machine.
+one Catalyst DAG. X and y are joined once and every row is numbered with its
+TimeSeriesSplit segment, so each fold is a filter over ONE cached frame
+(``ml.cv``). For models with sufficient statistics (LinearModel, RidgeModel)
+one aggregation grouped by segment yields every fold fit, the final fit,
+the MinMax scaler stats, the fold metadata and the row count; one more
+scores every fold and takes the anomaly thresholds of the last. A
+DiffBasedAnomalyDetector(LinearModel) machine is 2 driver actions, 10-12
+Spark jobs. Nothing but configs, Gram matrices, scores and thresholds
+ever reaches the driver, so the same builder drives a 1000-executor
+cluster unchanged: thousands of machines = a driver loop or thread pool
+submitting concurrent jobs (SURVEY.md §3.3), not one pod per machine.
 """
 
 from __future__ import annotations
@@ -21,11 +26,15 @@ import time
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from gordo_spark.config import Machine
-from gordo_spark.ml.cv import split_metadata, timeseries_split
-from gordo_spark.ml.models import DiffBasedAnomalyDetector, model_from_definition
+from gordo_spark.ml.cv import TimeSeriesCV, numbered, score_model
+from gordo_spark.ml.models import (
+    DiffBasedAnomalyDetector,
+    DiffBasedKFCVAnomalyDetector,
+    model_from_definition,
+)
 from gordo_spark.plans.dataset import TimeSeriesDataset
 from gordo_spark.sources.store import DiskRegistry, ModelStore, calculate_cache_key
 
@@ -51,84 +60,6 @@ def dataset_from_dict(d: dict) -> TimeSeriesDataset:
                 t["name"] if isinstance(t, dict) else t for t in kwargs[key]
             ]
     return TimeSeriesDataset(**kwargs)
-
-
-def score_model(
-    model,
-    test: DataFrame,
-    targets: list[str],
-    ts_col: str = "ts",
-    scale: dict[str, tuple[float, float]] | None = None,
-) -> dict[str, dict[str, float]]:
-    """M5 — mse/mae/r2/explained_variance per target plus the across-target
-    mean, in ONE aggregation over the fold's test frame.
-
-    ``test`` carries the feature columns plus targets renamed ``_yt_<t>``
-    (targets default to the feature tags, so the rename avoids ambiguous
-    column references in the predict expressions). ``scale`` is the
-    ``scoring_scaler`` stats ``{t: (center, spread)}`` applied to y and
-    y_hat before the metrics (reference gordo/builder/build_model.py:
-    377-446 — scaled metrics comparable across tags; r2/ev are affine-
-    invariant, mse/mae scale by 1/spread)."""
-
-    def _s(col, t):
-        if scale is None:
-            return col
-        a, b = scale[t]
-        return (col - F.lit(float(a))) / F.lit(float(b) if b else 1.0)
-
-    yscaled = [_s(F.col(f"`_yt_{t}`"), t).alias(f"_y_{t}") for t in targets]
-    if hasattr(model, "predict_exprs"):
-        pred = test.select(
-            ts_col,
-            *yscaled,
-            *[
-                _s(e, t).alias(f"_p_{t}")
-                for e, t in zip(model.predict_exprs("_p_"), targets)
-            ],
-        )
-    else:
-        # offset/lookback models predict via a ts-keyed frame (shorter than
-        # the input); metrics run over the joined rows
-        raw = model.predict(
-            test.select(
-                ts_col, *[F.col("`" + c + "`").alias(c) for c in model.feature_cols]
-            ),
-            ts_col,
-            "_p_",
-        )
-        pred = test.select(ts_col, *yscaled).join(
-            raw.select(
-                ts_col,
-                *[_s(F.col(f"`_p_{t}`"), t).alias(f"_p_{t}") for t in targets],
-            ),
-            ts_col,
-        )
-    aggs = []
-    for t in targets:
-        d = F.col(f"`_y_{t}`") - F.col(f"`_p_{t}`")
-        aggs += [
-            F.avg(d * d).alias(f"mse_{t}"),
-            F.avg(F.abs(d)).alias(f"mae_{t}"),
-            (1 - F.avg(d * d) / F.var_pop(f"`_y_{t}`")).alias(f"r2_{t}"),
-            (1 - F.var_pop(d) / F.var_pop(f"`_y_{t}`")).alias(f"ev_{t}"),
-        ]
-    row = pred.agg(*aggs).collect()[0]
-    out: dict[str, dict[str, float]] = {}
-    for t in targets:
-        out[t] = {
-            "mean-squared-error": row[f"mse_{t}"],
-            "mean-absolute-error": row[f"mae_{t}"],
-            "r2-score": row[f"r2_{t}"],
-            "explained-variance-score": row[f"ev_{t}"],
-        }
-    n = float(len(targets))
-    out["aggregate"] = {
-        m: sum(out[t][m] for t in targets) / n
-        for m in ("mean-squared-error", "mean-absolute-error", "r2-score",
-                  "explained-variance-score")
-    }
-    return out
 
 
 @dataclass
@@ -192,61 +123,38 @@ class ModelBuilder:
             )
         else:
             X, y = dataset.get_data(spark)
-        # folds, metrics, thresholds and the final fit all reuse this frame
-        X = X.cache()
-        y = y.cache()
         query_duration = time.time() - t0
 
         model = model_from_definition(m.model)
         evaluation = m.evaluation or {}
         n_splits = int(evaluation.get("n_splits", 3))
         cv_mode = evaluation.get("cv_mode", "full_build")
-        targets = [c for c in y.columns if c != "ts"]
+        base = getattr(model, "base", model)
+        feats = base.feature_cols or [c for c in X.columns if c != "ts"]
+        targets = base.target_cols or [c for c in y.columns if c != "ts"]
+        if isinstance(model, DiffBasedAnomalyDetector):
+            base.feature_cols, base.target_cols = feats, targets
 
         t1 = time.time()
-        feats = [c for c in X.columns if c != "ts"]
-        yren = y.select(
-            "ts", *[F.col("`" + t + "`").alias(f"_yt_{t}") for t in targets]
-        )
-        XY = X.join(yren, "ts").cache()
-        folds_meta = split_metadata(XY, n_splits)
-        scoring_scaler = evaluation.get("scoring_scaler")
-        scores = []
-        for train, test in timeseries_split(XY, n_splits):
-            fold_model = model_from_definition(m.model)
-            base = getattr(fold_model, "base", fold_model)
-            base.fit(
-                train.select("ts", *[F.col("`" + c + "`").alias(c) for c in feats]),
-                train.select(
-                    "ts", *[F.col(f"`_yt_{t}`").alias(t) for t in targets]
-                ),
+        # folds, metrics, thresholds and the final fit all read this one
+        # numbered, cached frame, released however the block exits
+        with numbered(X, y, targets, n_splits) as data:
+            cv = TimeSeriesCV(model, data, feats, targets, n_splits)
+            kfold = isinstance(model, DiffBasedKFCVAnomalyDetector)
+            tss = isinstance(model, DiffBasedAnomalyDetector) and not kfold
+            scores = score_model(
+                cv, evaluation.get("scoring_scaler"), model if tss else None
             )
-            scale = None
-            if scoring_scaler:
-                from gordo_spark.ml.scalers import MinMaxScalerExpr, RobustScalerExpr
-
-                cls = {"minmax": MinMaxScalerExpr, "robust": RobustScalerExpr}[
-                    scoring_scaler
-                ]
-                scale = (
-                    cls(targets)
-                    .fit(
-                        train.select(
-                            *[F.col(f"`_yt_{t}`").alias(t) for t in targets]
-                        )
-                    )
-                    .stats
-                )
-            scores.append(score_model(base, test, targets, scale=scale))
-        if isinstance(model, DiffBasedAnomalyDetector):
-            model.base.feature_cols = [c for c in X.columns if c != "ts"]
-            model.base.target_cols = targets
-            model.cross_validate(X, y, n_splits=n_splits)
-        cv_duration = time.time() - t1
+            if kfold:
+                # KFold thresholds come from its own shuffled CV
+                model.cross_validate(*cv.xy(), n_splits=n_splits)
+            cv_duration = time.time() - t1
+            if cv_mode != "cross_val_only":
+                cv.refit()
 
         # A5 — per-metric mean/std/min/max across folds + per-fold raws
         agg_scores: dict[str, dict] = {}
-        for metric in scores[0]["aggregate"] if scores else []:
+        for metric in scores[0]["aggregate"]:
             vals = [s["aggregate"][metric] for s in scores]
             mean = sum(vals) / len(vals)
             var = sum((v - mean) ** 2 for v in vals) / len(vals)
@@ -256,9 +164,6 @@ class ModelBuilder:
             }
 
         path = None
-        if cv_mode != "cross_val_only":
-            model.fit(X, y)
-
         metadata = {
             "name": m.name,
             "build-metadata": {
@@ -269,13 +174,13 @@ class ModelBuilder:
                     "query_duration_sec": query_duration,
                     "cv_duration_sec": cv_duration,
                     "cross_validation": {
-                        "folds": folds_meta,
+                        "folds": cv.folds,
                         "scores": agg_scores,
                         "per_fold": scores,
                     },
                 },
                 "dataset": {
-                    "row_count": X.count(),
+                    "row_count": cv.row_count,
                     "tag_list": dataset.tag_list,
                     "target_tag_list": dataset.target_tag_list or dataset.tag_list,
                     "resolution": dataset.resolution,
@@ -309,9 +214,6 @@ class ModelBuilder:
             from gordo_spark.reporters import run_reporters
 
             run_reporters(spark, m, metadata)
-        XY.unpersist()
-        X.unpersist()
-        y.unpersist()
         return BuildResult(model, metadata, path, cached=False)
 
 

@@ -1,14 +1,22 @@
-"""M3/M4/M7 — cross-validation splits as time filters.
+"""M3/M4/M5/M7 — cross-validation: splits, fold fits, fold scores.
 
 Reference semantics: default CV is sklearn ``TimeSeriesSplit(n_splits=3)``
 (gordo/builder/build_model.py:256-261 in /root/reference); the KFold variant
 is ``KFold(n_splits=5, shuffle=True, random_state=0)``
 (gordo/machine/model/anomaly/diff.py:566-623).
 
-Spark shape: a fold is a *predicate*, not a materialized slice — each fold's
-train/test DataFrames are lazy filters over one cached aligned frame, so N
-folds share one scan. TimeSeriesSplit reproduces sklearn's exact index
-arithmetic.
+Spark shape of the TimeSeriesSplit path: the rows are numbered ONCE. Each
+row carries its segment ``_seg`` (``with_segments``): fold ``i`` trains on
+``_seg <= i`` and tests on ``_seg == i + 1``, so every fold is a predicate
+over one cached frame (``numbered``). ``TimeSeriesCV`` then gets the fold
+metadata, the MinMax scaler stats and — for models with sufficient
+statistics (``LinearModel`` / ``RidgeModel``) — every fold fit and the final
+fit from ONE aggregation grouped by ``_seg``: per-segment Gram blocks summed
+into prefixes on the driver. ``score_model`` scores every fold (and takes the
+anomaly thresholds of the last) in one more aggregation. Models without
+sufficient statistics fit per fold on the ``_seg <= i`` filters and feed
+the same scoring aggregation. Robust-scaler quantiles do not combine across
+segments, so they take one pass of their own, for every fold at once.
 
 Shuffled KFold membership (default) reproduces sklearn
 ``KFold(n_splits, shuffle=True, random_state=seed)`` EXACTLY: sklearn
@@ -24,8 +32,32 @@ oracle can reproduce (used by the m4 contract query).
 
 from __future__ import annotations
 
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
+from functools import reduce
+
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from gordo_spark.ml.models import (
+    DiffBasedAnomalyDetector,
+    LinearModel,
+    gram_aggs,
+    gram_blocks,
+    model_from_definition,
+)
+from gordo_spark.ml.scalers import center_spread
+from gordo_spark.operators.smoothing import rolling_min
+
+SEG = "_seg"
+METRICS = (
+    "mean-squared-error", "mean-absolute-error", "r2-score",
+    "explained-variance-score",
+)
+
+
+def _q(c: str) -> Column:
+    return F.col("`" + c + "`")
 
 
 def _with_rn(df: DataFrame, ts_col: str) -> DataFrame:
@@ -33,25 +65,43 @@ def _with_rn(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("_rn", F.row_number().over(w) - 1)
 
 
+def with_segments(
+    df: DataFrame, n_splits: int = 3, ts_col: str = "ts"
+) -> DataFrame:
+    """Append ``_seg``, the row's sklearn TimeSeriesSplit segment: 0 for
+    rows that are only ever trained on, ``s`` for the test block of fold
+    ``s - 1``. sklearn arithmetic: test_size = n // (n_splits + 1) and the
+    first test block starts at n - n_splits * test_size. Lazy — the row
+    number and n come from one window, so no count() runs; with fewer than
+    ``n_splits + 1`` rows every row is segment 0."""
+    w = Window.partitionBy().orderBy(ts_col)
+    rn = F.row_number().over(w) - 1
+    n = F.count(F.lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    size = F.floor(n / (n_splits + 1))
+    first = n - size * n_splits
+    seg = F.when(
+        (size > 0) & (rn >= first),
+        F.floor((rn - first) / F.greatest(size, F.lit(1))) + 1,
+    ).otherwise(0)
+    return df.withColumn(SEG, seg.cast("int"))
+
+
 def timeseries_split(
     df: DataFrame, n_splits: int = 3, ts_col: str = "ts"
 ) -> list[tuple[DataFrame, DataFrame]]:
-    """sklearn TimeSeriesSplit parity: test_size = n // (n_splits+1);
-    fold i trains on rows [0, n - (n_splits - i)*test_size)."""
-    n = df.count()
-    test_size = n // (n_splits + 1)
-    if test_size < 1:
-        raise ValueError(f"too few rows ({n}) for {n_splits} splits")
-    rn = _with_rn(df, ts_col)
-    folds = []
-    for i in range(n_splits):
-        train_end = n - (n_splits - i) * test_size
-        train = rn.filter(F.col("_rn") < train_end).drop("_rn")
-        test = rn.filter(
-            (F.col("_rn") >= train_end) & (F.col("_rn") < train_end + test_size)
-        ).drop("_rn")
-        folds.append((train, test))
-    return folds
+    """sklearn TimeSeriesSplit parity as (train, test) filters over
+    ``with_segments``: fold i trains on rows [0, n - (n_splits - i) *
+    test_size) and tests on the next test_size rows."""
+    seg = with_segments(df, n_splits, ts_col)
+    return [
+        (
+            seg.filter(F.col(SEG) <= i).drop(SEG),
+            seg.filter(F.col(SEG) == i + 1).drop(SEG),
+        )
+        for i in range(n_splits)
+    ]
 
 
 def sklearn_kfold_membership(
@@ -123,23 +173,250 @@ def kfold_split(
     return folds
 
 
-def split_metadata(
-    df: DataFrame, n_splits: int = 3, ts_col: str = "ts"
-) -> list[dict]:
-    """M7 — fold train/test start/end/count (driver-side summary)."""
-    out = []
-    for i, (train, test) in enumerate(timeseries_split(df, n_splits, ts_col)):
-        tr = train.agg(
-            F.min(ts_col).alias("s"), F.max(ts_col).alias("e"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        te = test.agg(
-            F.min(ts_col).alias("s"), F.max(ts_col).alias("e"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        out.append(
-            {
-                "fold": i,
-                "train_start": tr["s"], "train_end": tr["e"], "train_count": tr["n"],
-                "test_start": te["s"], "test_end": te["e"], "test_count": te["n"],
-            }
-        )
+@contextmanager
+def numbered(
+    X: DataFrame,
+    y: DataFrame,
+    targets: Sequence[str],
+    n_splits: int,
+    ts_col: str = "ts",
+) -> Iterator[DataFrame]:
+    """X joined to y once (targets renamed ``_yt_<t>``, so targets that are
+    also inputs stay unambiguous), numbered by ``with_segments`` and cached
+    for the duration of the block."""
+    data = with_segments(
+        X.join(y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col),
+        n_splits,
+        ts_col,
+    ).cache()
+    try:
+        yield data
+    finally:
+        data.unpersist()
+
+
+def _by_fold(values: Sequence[Column]) -> Column:
+    """``values[i]`` on the test segment of fold i (``_seg == i + 1``)."""
+    out = F.when(F.col(SEG) == 1, values[0])
+    for i, v in enumerate(values[1:], 2):
+        out = out.when(F.col(SEG) == i, v)
     return out
+
+
+class TimeSeriesCV:
+    """TimeSeriesSplit fold fits of ``model`` over a ``numbered`` frame.
+
+    One aggregation grouped by ``_seg`` gives ``folds`` (train/test
+    start/end/count per fold), ``row_count``, the MinMax stats of every
+    fold and, when the model has sufficient statistics, every fold fit
+    plus the final fit. Other models fit each fold on its ``_seg <= i``
+    filter. ``models[i]`` is fold i's fitted clone of the base estimator."""
+
+    def __init__(
+        self,
+        model,
+        data: DataFrame,
+        feats: Sequence[str],
+        targets: Sequence[str],
+        n_splits: int,
+        ts_col: str = "ts",
+    ):
+        self.model, self.data = model, data
+        self.feats, self.targets = list(feats), list(targets)
+        self.n_splits, self.ts_col = n_splits, ts_col
+        base = getattr(model, "base", model)
+        aggs = [
+            F.count(F.lit(1)).alias("_n"),
+            F.min(ts_col).alias("_t0"),
+            F.max(ts_col).alias("_t1"),
+        ]
+        for j, t in enumerate(self.targets):
+            aggs += [F.min(_q(f"_yt_{t}")).alias(f"_mn_{j}"), F.max(_q(f"_yt_{t}")).alias(f"_mx_{j}")]
+        gram = isinstance(base, LinearModel)
+        if gram:
+            aggs += gram_aggs(self.feats, [f"_yt_{t}" for t in self.targets])
+        rows = sorted(data.groupBy(SEG).agg(*aggs).collect(), key=lambda r: r[SEG])
+        self.row_count = sum(r["_n"] for r in rows)
+        if self.row_count // (n_splits + 1) < 1:
+            raise ValueError(f"too few rows ({self.row_count}) for {n_splits} splits")
+        self._segs = rows
+        self._robust: list[dict] | None = None
+        self.folds = []
+        for i in range(n_splits):
+            train, test = rows[: i + 1], rows[i + 1]
+            self.folds.append(
+                {
+                    "fold": i,
+                    "train_start": min(r["_t0"] for r in train),
+                    "train_end": max(r["_t1"] for r in train),
+                    "train_count": sum(r["_n"] for r in train),
+                    "test_start": test["_t0"], "test_end": test["_t1"],
+                    "test_count": test["_n"],
+                }
+            )
+        # running sums of the per-segment Gram blocks: entry i covers
+        # segments 0..i, the last entry every row
+        self._gram = None
+        if gram:
+            self._gram = []
+            for xtx, xty in (gram_blocks(r, len(self.feats), len(self.targets)) for r in rows):
+                if self._gram:
+                    xtx, xty = self._gram[-1][0] + xtx, self._gram[-1][1] + xty
+                self._gram.append((xtx, xty))
+        self.models = []
+        for i in range(n_splits):
+            m = model_from_definition(base.into_definition())
+            m.feature_cols, m.target_cols = list(self.feats), list(self.targets)
+            if gram:
+                m.coef_ = m._solve(*self._gram[i])
+            else:
+                m.fit(*self.xy(i))
+            self.models.append(m)
+
+    def xy(self, upto: int | None = None) -> tuple[DataFrame, DataFrame]:
+        """(X, y) of segments 0..upto (every row when None), targets under
+        their own names."""
+        d = self.data if upto is None else self.data.filter(F.col(SEG) <= upto)
+        ts = self.ts_col
+        return (
+            d.select(ts, *[_q(c).alias(c) for c in self.feats]),
+            d.select(ts, *[_q(f"_yt_{t}").alias(t) for t in self.targets]),
+        )
+
+    def stats(self, kind: str, upto: int) -> dict[str, tuple[float, float]]:
+        """Scaler stats of the targets over segments 0..upto, in the shape of
+        ``MinMaxScalerExpr`` / ``RobustScalerExpr`` ``.stats``. Robust
+        quantiles come from one extra pass that serves every fold."""
+        if kind == "minmax":
+            rows = self._segs[: upto + 1]
+            return {
+                t: (min(r[f"_mn_{j}"] for r in rows), max(r[f"_mx_{j}"] for r in rows))
+                for j, t in enumerate(self.targets)
+            }
+        if self._robust is None:
+            aggs = []
+            for b in range(self.n_splits + 1):
+                for j, t in enumerate(self.targets):
+                    v = F.when(F.col(SEG) <= b, _q(f"_yt_{t}"))
+                    aggs += [
+                        F.percentile(v, 0.5).alias(f"_md_{b}_{j}"),
+                        (F.percentile(v, 0.75) - F.percentile(v, 0.25)).alias(f"_iqr_{b}_{j}"),
+                    ]
+            row = self.data.agg(*aggs).collect()[0]
+            self._robust = [
+                {t: (row[f"_md_{b}_{j}"], row[f"_iqr_{b}_{j}"]) for j, t in enumerate(self.targets)}
+                for b in range(self.n_splits + 1)
+            ]
+        return self._robust[upto]
+
+    def predictions(self) -> DataFrame:
+        """(ts, _seg, _yt_<t>..., _p_<t>...): each fold's predictions on its
+        own test segment. Expression models predict in one projection;
+        others (offset/lookback, Python estimators) predict each test
+        segment and join on ts, so their output may be shorter."""
+        ts, ys = self.ts_col, [_q(f"_yt_{t}") for t in self.targets]
+        if all(hasattr(m, "predict_exprs") for m in self.models):
+            exprs = [m.predict_exprs("_p_") for m in self.models]
+            return self.data.filter(F.col(SEG) >= 1).select(
+                ts, SEG, *ys,
+                *[
+                    _by_fold([e[j] for e in exprs]).alias(f"_p_{t}")
+                    for j, t in enumerate(self.targets)
+                ],
+            )
+        parts = []
+        for i, m in enumerate(self.models):
+            test = self.data.filter(F.col(SEG) == i + 1)
+            raw = m.predict(test.select(ts, *[_q(c).alias(c) for c in self.feats]), ts, "_p_")
+            parts.append(test.select(ts, SEG, *ys).join(raw, ts))
+        return reduce(DataFrame.unionByName, parts)
+
+    def refit(self) -> None:
+        """Final fit of the model on every row: from the summed Gram blocks
+        when the model has sufficient statistics, else ``model.fit``."""
+        model = self.model
+        if self._gram is None:
+            model.fit(*self.xy())
+            return
+        base = getattr(model, "base", model)
+        base.feature_cols, base.target_cols = list(self.feats), list(self.targets)
+        base.coef_ = base._solve(*self._gram[-1])
+        if isinstance(model, DiffBasedAnomalyDetector):
+            # scaler on y after training (diff.py:166-174)
+            model.scaler = model._scaler_cls()(self.targets)
+            model.scaler.stats = self.stats(model.scaler_kind, self.n_splits)
+
+
+def score_model(
+    cv: TimeSeriesCV,
+    scoring_scaler: str | None = None,
+    detector: DiffBasedAnomalyDetector | None = None,
+) -> list[dict[str, dict[str, float]]]:
+    """M5 — per fold, mse/mae/r2/explained_variance per target plus the
+    across-target mean, for every fold in ONE aggregation grouped by
+    ``_seg`` over the fold predictions.
+
+    ``scoring_scaler`` (``minmax`` | ``robust``) scales y and y_hat by the
+    fold's train-target stats before the metrics (reference
+    gordo/builder/build_model.py:377-446 — scaled metrics comparable
+    across tags; r2/ev are affine-invariant, mse/mae scale by 1/spread).
+
+    With ``detector``, the same aggregation also sets its thresholds from
+    the LAST fold (diff.py:229-264): per tag the unscaled |error|, and the
+    total as the mean squared error scaled by the detector's scaler fit on
+    the fold's train targets, each through ``rolling(6,
+    min_periods=6).min()`` and then ``max``."""
+    k, ts = cv.n_splits, cv.ts_col
+    cols = []
+    for t in cv.targets:
+        y, p = _q(f"_yt_{t}"), _q(f"_p_{t}")
+        if scoring_scaler:
+            cs = [center_spread(scoring_scaler, cv.stats(scoring_scaler, i)[t]) for i in range(k)]
+            a = _by_fold([F.lit(float(c)) for c, _ in cs])
+            b = _by_fold([F.lit(float(s)) for _, s in cs])
+            y, p = (y - a) / b, (p - a) / b
+        cols += [y.alias(f"_ys_{t}"), (y - p).alias(f"_d_{t}")]
+    errs: list[str] = []
+    if detector is not None:
+        total = None
+        for t in cv.targets:
+            err = F.abs(_q(f"_p_{t}") - _q(f"_yt_{t}"))
+            spread = _by_fold(
+                [F.lit(detector._spread(cv.stats(detector.scaler_kind, i)[t])) for i in range(k)]
+            )
+            s = err / spread
+            total = s * s if total is None else total + s * s
+            cols.append(err.alias(f"_e_{t}"))
+        cols.append((total / F.lit(float(len(cv.targets)))).alias("_e_total"))
+        errs = [f"_e_{t}" for t in cv.targets] + ["_e_total"]
+    frame = cv.predictions().select(ts, SEG, *cols)
+    if errs:
+        w = Window.partitionBy(SEG).orderBy(ts)
+        frame = frame.select("*", *[rolling_min(e, 6, w).alias(f"_th{e}") for e in errs])
+    aggs = []
+    for t in cv.targets:
+        d, ys = _q(f"_d_{t}"), _q(f"_ys_{t}")
+        aggs += [
+            F.avg(d * d).alias(f"mse_{t}"),
+            F.avg(F.abs(d)).alias(f"mae_{t}"),
+            (1 - F.avg(d * d) / F.var_pop(ys)).alias(f"r2_{t}"),
+            (1 - F.var_pop(d) / F.var_pop(ys)).alias(f"ev_{t}"),
+        ]
+    aggs += [F.max(_q(f"_th{e}")).alias(f"_th{e}") for e in errs]
+    rows = {r[SEG]: r for r in frame.groupBy(SEG).agg(*aggs).collect()}
+    per_fold = []
+    for i in range(k):
+        row = rows[i + 1]
+        out = {
+            t: dict(zip(METRICS, (row[f"mse_{t}"], row[f"mae_{t}"], row[f"r2_{t}"], row[f"ev_{t}"])))
+            for t in cv.targets
+        }
+        out["aggregate"] = {
+            m: sum(out[t][m] for t in cv.targets) / float(len(cv.targets)) for m in METRICS
+        }
+        per_fold.append(out)
+    if detector is not None:
+        last = rows[k]
+        detector.tag_thresholds_ = {t: last[f"_th_e_{t}"] for t in cv.targets}
+        detector.total_threshold_ = last["_th_e_total"]
+    return per_fold

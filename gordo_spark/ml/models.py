@@ -27,9 +27,8 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-from gordo_spark.ml.cv import timeseries_split
-from gordo_spark.ml.scalers import MinMaxScalerExpr
-from gordo_spark.operators.anomaly import anomaly_frame, fold_threshold
+from gordo_spark.ml.scalers import MinMaxScalerExpr, center_spread
+from gordo_spark.operators.anomaly import anomaly_frame
 
 _MODEL_REGISTRY: dict[str, type] = {}
 
@@ -89,6 +88,32 @@ def _q(c: str) -> Column:
     return F.col("`" + c + "`")
 
 
+def gram_aggs(feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
+    """Sufficient statistics of an OLS fit with intercept as aggregate
+    columns: the upper triangle of X'X (``_xx_i_j``, term 0 the intercept)
+    and X'y (``_xy_i_j``). Sums, so they add up across row groups."""
+    terms = [F.lit(1.0)] + [_q(c) for c in feats]
+    aggs = []
+    for i, a in enumerate(terms):
+        for j in range(i, len(terms)):
+            aggs.append(F.sum(a * terms[j]).alias(f"_xx_{i}_{j}"))
+    for i, a in enumerate(terms):
+        for j, c in enumerate(ys):
+            aggs.append(F.sum(a * _q(c)).alias(f"_xy_{i}_{j}"))
+    return aggs
+
+
+def gram_blocks(row, n_feats: int, n_ys: int) -> tuple[np.ndarray, np.ndarray]:
+    """(X'X, X'y) as arrays from a row carrying ``gram_aggs``."""
+    p = n_feats + 1
+    xtx = np.zeros((p, p))
+    for i in range(p):
+        for j in range(i, p):
+            xtx[i, j] = xtx[j, i] = row[f"_xx_{i}_{j}"]
+    xty = np.array([[row[f"_xy_{i}_{j}"] for j in range(n_ys)] for i in range(p)])
+    return xtx, xty
+
+
 @register_model("LinearModel")
 class LinearModel:
     """Exact multi-output OLS with intercept; fit = one Spark aggregation."""
@@ -103,27 +128,8 @@ class LinearModel:
         targets = self.target_cols or [c for c in y.columns if c != ts_col]
         self.feature_cols, self.target_cols = feats, targets
         joined = X.join(y.select(ts_col, *[_q(t).alias(f"_y_{t}") for t in targets]), ts_col)
-        terms = ["1"] + feats
-        aggs = []
-        # upper triangle of X'X (with intercept term "1")
-        for i, a in enumerate(terms):
-            for b in terms[i:]:
-                ca = F.lit(1.0) if a == "1" else _q(a)
-                cb = F.lit(1.0) if b == "1" else _q(b)
-                aggs.append(F.sum(ca * cb).alias(f"_xx_{i}_{terms.index(b, i)}"))
-        for i, a in enumerate(terms):
-            ca = F.lit(1.0) if a == "1" else _q(a)
-            for j, t in enumerate(targets):
-                aggs.append(F.sum(ca * F.col(f"`_y_{t}`")).alias(f"_xy_{i}_{j}"))
-        row = joined.agg(*aggs).collect()[0]
-        p = len(terms)
-        xtx = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                xtx[i, j] = xtx[j, i] = row[f"_xx_{i}_{j}"]
-        xty = np.array(
-            [[row[f"_xy_{i}_{j}"] for j in range(len(targets))] for i in range(p)]
-        )
+        row = joined.agg(*gram_aggs(feats, [f"_y_{t}" for t in targets])).collect()[0]
+        xtx, xty = gram_blocks(row, len(feats), len(targets))
         self.coef_ = self._solve(xtx, xty)
         return self
 
@@ -229,10 +235,7 @@ class DiffBasedAnomalyDetector:
     def _spread(self, stat: tuple[float, float]) -> float:
         """Error-scaling divisor from a stats tuple: max-min for minmax,
         IQR for robust (1.0 when degenerate)."""
-        a, b = stat
-        if self.scaler_kind == "minmax":
-            return (b - a) if b != a else 1.0
-        return b if b else 1.0
+        return center_spread(self.scaler_kind, stat)[1]
 
     def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts") -> "DiffBasedAnomalyDetector":
         self.base.fit(X, y, ts_col)
@@ -293,17 +296,15 @@ class DiffBasedAnomalyDetector:
     def cross_validate(
         self, X: DataFrame, y: DataFrame, n_splits: int = 3, ts_col: str = "ts"
     ) -> "DiffBasedAnomalyDetector":
-        """Per-fold fit/predict; thresholds from the LAST fold only."""
+        """TimeSeriesSplit fold fits; thresholds from the LAST fold only
+        (the fold-fused routine of ``ml.cv`` that the builder runs too)."""
+        from gordo_spark.ml.cv import TimeSeriesCV, numbered, score_model
+
         targets = self.base.target_cols or [c for c in y.columns if c != ts_col]
         feats = self.base.feature_cols or [c for c in X.columns if c != ts_col]
-        wide = X.join(
-            y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col
-        )
-        last_train, last_test = timeseries_split(wide, n_splits, ts_col)[-1]
-        err = self._fold_errors(last_train, last_test, targets, feats, ts_col)
-        th = fold_threshold(err, [f"err__{t}" for t in targets] + ["err__total"], ts_col)
-        self.tag_thresholds_ = {t: th[f"err__{t}"] for t in targets}
-        self.total_threshold_ = th["err__total"]
+        with numbered(X, y, targets, n_splits, ts_col) as data:
+            cv = TimeSeriesCV(self, data, feats, targets, n_splits, ts_col)
+            score_model(cv, detector=self)
         return self
 
     def get_metadata(self) -> dict:

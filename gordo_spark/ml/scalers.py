@@ -19,6 +19,15 @@ def _q(c: str) -> Column:
     return F.col("`" + c + "`")
 
 
+def center_spread(kind: str, stat: tuple[float, float]) -> tuple[float, float]:
+    """(center, divisor) of one column's ``stats`` entry: (min, max - min)
+    for ``minmax``, (median, IQR) for ``robust``; a zero divisor becomes
+    1.0, as in the scalers' ``expr``."""
+    a, b = stat
+    spread = (b - a) if kind == "minmax" else b
+    return a, (spread if spread else 1.0)
+
+
 class MinMaxScalerExpr:
     """sklearn MinMaxScaler (feature_range (0,1)): (x - min)/(max - min)."""
 

@@ -22,8 +22,9 @@ Given aligned ``y`` (targets) and ``model_output`` per timestamp:
 
 Thresholds (A7/A8): TimeSeriesSplit mode = last CV fold's
 ``rolling(6).min().max()`` of the validation error (diff.py:229-264 — the
-*last* fold, not an aggregate: SURVEY.md §7 hard-parts); KFold mode = 0.99
-quantile of the smoothed out-of-fold error (diff.py:617-635).
+*last* fold, not an aggregate: SURVEY.md §7 hard-parts; computed with the
+fold scores by ``ml.cv.score_model``); KFold mode = 0.99 quantile of the
+smoothed out-of-fold error (diff.py:617-635).
 
 Everything here is one ``select`` of column expressions over the aligned
 frame — no joins, no UDFs; thresholds are broadcast scalars. At 100 TB this
@@ -37,7 +38,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from gordo_spark.functions.timeutil import offset_alias_to_interval
-from gordo_spark.operators.smoothing import SMOOTHERS, ewma, rolling_min
+from gordo_spark.operators.smoothing import SMOOTHERS, ewma
 
 
 def scale_minmax(col: Column, mn: float, mx: float) -> Column:
@@ -180,46 +181,6 @@ def anomaly_frame(
             )
         out = out.select(*[F.col("`" + c + "`") for c in out.columns], *extra)
     return out
-
-
-def fold_threshold(
-    validation_err: DataFrame,
-    cols: Sequence[str],
-    ts_col: str = "ts",
-    roll: int = 6,
-) -> dict[str, float]:
-    """A8 — per-column ``rolling(6, min_periods=6).min().max()`` over one CV
-    fold's validation error (diff.py:229-254). Returns broadcastable
-    scalars."""
-    w = Window.partitionBy().orderBy(ts_col)
-    rolled = validation_err.select(
-        *[rolling_min(c, roll, w).alias(c) for c in cols]
-    )
-    row = rolled.agg(
-        *[F.max(F.col("`" + c + "`")).alias(c) for c in cols]
-    ).collect()[0]
-    return {c: row[c] for c in cols}
-
-
-def quantile_threshold(
-    err: DataFrame, cols: Sequence[str], q: float = 0.99
-) -> dict[str, float]:
-    """A7 — exact q-quantile per column (KFold mode, diff.py:625-635;
-    pandas quantile = linear interpolation = Spark/DuckDB ``percentile``)."""
-    row = err.agg(
-        *[F.expr(f"percentile(`{c}`, {q})").alias(c) for c in cols]
-    ).collect()[0]
-    return {c: row[c] for c in cols}
-
-
-def explained_variance(df: DataFrame, y_col: str, yhat_col: str) -> float:
-    """A9/M5 — sklearn explained_variance_score = 1 - Var(y - yhat)/Var(y)
-    (population variance in sklearn; var_pop here for parity)."""
-    row = df.agg(
-        F.var_pop(F.col(y_col) - F.col(yhat_col)).alias("ve"),
-        F.var_pop(F.col(y_col)).alias("vy"),
-    ).collect()[0]
-    return 1.0 - (row["ve"] / row["vy"] if row["vy"] else 0.0)
 
 
 def fleet_consensus_flags(

@@ -802,30 +802,6 @@ def _poisson1_w(u: Column) -> Column:
     return w.cast("double")
 
 
-def _poisson1_w_sql(hex_col: str, lane: int) -> str:
-    """The SAME weight as ``_poisson1_w(_md5_lane_u16(...))`` as ONE SQL
-    string: u = (h16 + 0.5)/2^16 from 4 hex chars of ``hex_col``, nested
-    CASE CDF inversion, cast double. Why a string: plan BUILD cost — the
-    Column-API chain is ~50 py4j round-trips per replicate, and B=100
-    weight columns turned bootstrap plan construction into seconds of
-    gateway chatter; one selectExpr parses all of them JVM-side in a
-    single call. Literal ``D`` suffixes keep every constant DOUBLE
-    (bare decimals parse as DECIMAL in Spark SQL). Values are
-    bit-identical to the Column form — same op sequence."""
-    u = (
-        f"((CAST(CAST(conv(substring({hex_col}, {lane * 4 + 1}, 4), 16, 10)"
-        f" AS BIGINT) AS DOUBLE) + 0.5D) / 65536.0D)"
-    )
-    chain = f"{len(_POISSON1_CDF)}"
-    for k in range(len(_POISSON1_CDF) - 1, -1, -1):
-        chain = f"CASE WHEN t < {_POISSON1_CDF[k]!r}D THEN {k} ELSE {chain} END"
-    # bind u ONCE through a lambda variable (the qround _guarded_floor
-    # discipline): the CASE mentions the uniform 7 times, and codegen
-    # does not hoist subexpressions out of conditional branches — bare
-    # text would re-derive conv(substring(..)) per comparison
-    return f"CAST(element_at(transform(array({u}), t -> {chain}), 1) AS DOUBLE)"
-
-
 def bootstrap_ci_mean(
     df: DataFrame,
     value_col: str,

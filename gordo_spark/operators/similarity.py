@@ -145,25 +145,6 @@ def hyperplanes(dim: int, bits: int = 8, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit_j = 1 iff dot(v, plane_j) > 0.
-
-    One Arrow-batched matmul against the (bits x d) plane matrix per batch;
-    the per-plane sign bits are weighted and summed in numpy.
-    """
-    P = np.asarray(planes, dtype=np.float64).T  # d x bits
-    weights = (1 << np.arange(P.shape[1])).astype(np.int64)
-
-    @pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        V = np.stack(v.to_numpy())
-        return pd.Series(((V @ P) > 0) @ weights)
-
-    return _bucket(_as_double(vec_col))
-
-
 def cosine_neardup_pairs(
     vectors: DataFrame,
     threshold: float = 0.9,

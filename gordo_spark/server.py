@@ -234,21 +234,21 @@ class GordoServer:
                 return self._stamped(resp, args)
             if route == "anomaly/prediction" and method == "POST":
                 payload = self._payload(environ)
-                try:
-                    resp = anomaly_response(
-                        self.spark,
-                        self.store_root,
-                        machine,
-                        payload,
-                        revision,
-                        all_columns=_truthy(args.get("all_columns")),
-                    )
-                except AttributeError:
+                model, _, _ = _serving_load(self.store_root, machine, revision)
+                if not hasattr(model, "anomaly"):
                     # model has no .anomaly -> 422 (blueprints/anomaly.py:55)
                     return self._json(
                         422,
                         {"error": "model does not support anomaly detection"},
                     )
+                resp = anomaly_response(
+                    self.spark,
+                    self.store_root,
+                    machine,
+                    payload,
+                    revision,
+                    all_columns=_truthy(args.get("all_columns")),
+                )
                 return self._stamped(resp, args)
         except FileNotFoundError as exc:
             return self._json(404, {"error": str(exc)})

@@ -1,6 +1,8 @@
 """End-to-end builder lifecycle tests (reference gordo build parity,
 SURVEY.md §3.1): config -> data -> CV -> fit -> persist -> cache hit."""
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from gordo_spark.builder import ModelBuilder, build_machines, dataset_from_dict
@@ -214,3 +216,163 @@ def test_model_metadata_merged_into_build_record(spark, machine, tmp_path):
     assert len(mm["feature-thresholds"]) == 3
     assert mm["aggregate-threshold"] > 0
     assert mm["base-estimator"]["fitted"] is True
+
+
+# --------------------------------------------------------------------------
+# fold-fused build: numpy/pandas oracle, cache hygiene, job budget
+
+
+@pytest.fixture(scope="module")
+def xy_wide(spark):
+    """The ``xy`` shape of test_ml: targets t1, t2 differ from inputs a, b."""
+    rng = np.random.default_rng(3)
+    n = 400
+    ts = pd.date_range("2019-01-01", periods=n, freq="10min")
+    a, b = rng.random(n), rng.random(n)
+    t1 = 2.0 * a - 1.5 * b + 0.3 + rng.normal(0, 0.01, n)
+    t2 = -a + 0.5 * b + 1.0 + rng.normal(0, 0.01, n)
+    pdf = pd.DataFrame({"ts": ts, "a": a, "b": b, "t1": t1, "t2": t2})
+    return spark.createDataFrame(pdf), pdf
+
+
+def _xy_machine(n_splits, scoring_scaler=None, scaler="minmax"):
+    evaluation = {"cv_mode": "full_build", "n_splits": n_splits}
+    if scoring_scaler:
+        evaluation["scoring_scaler"] = scoring_scaler
+    return Machine.from_config(
+        {
+            "name": "xy-machine",
+            "dataset": {
+                "tag_list": ["a", "b"],
+                "target_tag_list": ["t1", "t2"],
+                "resolution": "10T",
+            },
+            "model": {"kind": "DiffBasedAnomalyDetector", "window": 6, "scaler": scaler},
+            "evaluation": evaluation,
+        }
+    )
+
+
+def _center_spread(kind, v):
+    """sklearn MinMaxScaler / RobustScaler centre and divisor per column."""
+    if kind == "minmax":
+        lo, hi = v.min(axis=0), v.max(axis=0)
+        return lo, np.where(hi != lo, hi - lo, 1.0)
+    q1, md, q3 = np.percentile(v, [25, 50, 75], axis=0)
+    return md, np.where(q3 != q1, q3 - q1, 1.0)
+
+
+def _oracle(pdf, n_splits, scoring_scaler, scaler):
+    """sklearn TimeSeriesSplit + lstsq fits + metrics + diff.py thresholds."""
+    n = len(pdf)
+    size = n // (n_splits + 1)
+    A = np.column_stack([np.ones(n), pdf["a"], pdf["b"]])
+    Y = pdf[["t1", "t2"]].to_numpy()
+    folds, per_fold = [], []
+    for i in range(n_splits):
+        end = n - (n_splits - i) * size
+        tr, te = slice(0, end), slice(end, end + size)
+        folds.append(
+            {
+                "fold": i,
+                "train_start": pdf.ts.iloc[0], "train_end": pdf.ts.iloc[end - 1],
+                "train_count": end,
+                "test_start": pdf.ts.iloc[end], "test_end": pdf.ts.iloc[end + size - 1],
+                "test_count": size,
+            }
+        )
+        coef, *_ = np.linalg.lstsq(A[tr], Y[tr], rcond=None)
+        pred, y = A[te] @ coef, Y[te]
+        ys, ps = y, pred
+        if scoring_scaler:
+            c, s = _center_spread(scoring_scaler, Y[tr])
+            ys, ps = (y - c) / s, (pred - c) / s
+        d = ys - ps
+        mse, mae = (d**2).mean(axis=0), np.abs(d).mean(axis=0)
+        r2 = 1 - mse / ys.var(axis=0)
+        ev = 1 - d.var(axis=0) / ys.var(axis=0)
+        per_fold.append(np.column_stack([mse, mae, r2, ev]))
+        # thresholds come from the last fold's errors (diff.py:229-264)
+        err = np.abs(pred - y)
+        _, spread = _center_spread(scaler, Y[tr])
+        total = ((err / spread) ** 2).mean(axis=1)
+    roll = lambda v: pd.Series(v).rolling(6, min_periods=6).min().max()  # noqa: E731
+    coef, *_ = np.linalg.lstsq(A, Y, rcond=None)
+    center, spread = _center_spread(scaler, Y)
+    return {
+        "folds": folds,
+        "per_fold": per_fold,
+        "tags": [roll(err[:, j]) for j in range(2)],
+        "total": roll(total),
+        "coef": coef,
+        "scaler": (center, center + spread) if scaler == "minmax" else (center, spread),
+    }
+
+
+@pytest.mark.parametrize(
+    "n_splits,scoring_scaler,scaler",
+    [(2, None, "minmax"), (3, "minmax", "minmax"), (3, "robust", "robust"), (2, None, "robust")],
+)
+def test_fused_build_matches_numpy_oracle(spark, xy_wide, n_splits, scoring_scaler, scaler):
+    wide, pdf = xy_wide
+    r = ModelBuilder(
+        _xy_machine(n_splits, scoring_scaler, scaler), wide_frame=wide
+    ).build(spark)
+    exp = _oracle(pdf, n_splits, scoring_scaler, scaler)
+    close = dict(rtol=1e-9, atol=1e-12)
+    md = r.metadata["build-metadata"]
+    cvm = md["model"]["cross_validation"]
+    assert md["dataset"]["row_count"] == len(pdf)
+
+    assert len(cvm["folds"]) == n_splits
+    for got, want in zip(cvm["folds"], exp["folds"]):
+        assert {
+            k: pd.Timestamp(v) if k.endswith(("_start", "_end")) else v
+            for k, v in got.items()
+        } == want
+    if n_splits == 3:  # sklearn TimeSeriesSplit on 400 rows: test_size 100
+        assert [f["train_count"] for f in cvm["folds"]] == [100, 200, 300]
+
+    names = ["mean-squared-error", "mean-absolute-error", "r2-score", "explained-variance-score"]
+    for got, want in zip(cvm["per_fold"], exp["per_fold"]):
+        for j, t in enumerate(["t1", "t2"]):
+            np.testing.assert_allclose([got[t][m] for m in names], want[j], **close)
+        np.testing.assert_allclose(
+            [got["aggregate"][m] for m in names], want.mean(axis=0), **close
+        )
+    raw = np.array([[f["aggregate"][m] for m in names] for f in cvm["per_fold"]])
+    np.testing.assert_allclose(
+        [cvm["scores"][m]["mean"] for m in names], raw.mean(axis=0), **close
+    )
+
+    th = md["model"]["thresholds"]
+    np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], exp["tags"], **close)
+    np.testing.assert_allclose(th["total"], exp["total"], **close)
+    np.testing.assert_allclose(r.model.base.coef_, exp["coef"], **close)
+    stats = r.model.scaler.stats
+    np.testing.assert_allclose([stats["t1"][0], stats["t2"][0]], exp["scaler"][0], **close)
+    np.testing.assert_allclose([stats["t1"][1], stats["t2"][1]], exp["scaler"][1], **close)
+
+
+def test_failed_build_releases_cached_frames(spark, xy_wide):
+    wide, _ = xy_wide
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="too few rows"):
+        ModelBuilder(_xy_machine(3), wide_frame=wide.limit(3)).build(spark)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_solo_build_job_budget(spark, xy_wide):
+    """A DiffBasedAnomalyDetector(LinearModel) machine: one aggregation fits
+    every fold, one more scores them and takes the thresholds."""
+    wide, _ = xy_wide
+    sc = spark.sparkContext
+    sc.setJobGroup("job-budget", "solo build")
+    try:
+        ModelBuilder(_xy_machine(3), wide_frame=wide).build(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # 4 jobs for the fit aggregation (join, numbering, grouping), 1 to score
+    assert len(sc.statusTracker().getJobIdsForGroup("job-budget")) <= 5

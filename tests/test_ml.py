@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gordo_spark.ml.cv import kfold_split, split_metadata, timeseries_split
+from gordo_spark.ml.cv import kfold_split, timeseries_split
 from gordo_spark.ml.models import DiffBasedAnomalyDetector, LinearModel, model_from_definition
 from gordo_spark.ml.scalers import MinMaxScalerExpr, RobustScalerExpr
 
@@ -62,13 +62,6 @@ def test_kfold_split_partitions(spark, xy):
     counts = [t.count() for _, t in folds]
     assert sum(counts) == 400
     assert all(c == 80 for c in counts)
-
-
-def test_split_metadata(spark, xy):
-    X, _, _ = xy
-    meta = split_metadata(X, n_splits=3)
-    assert len(meta) == 3
-    assert meta[0]["train_count"] == 100 and meta[-1]["train_count"] == 300
 
 
 def test_linear_model_matches_numpy_ols(spark, xy):

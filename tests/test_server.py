@@ -364,3 +364,29 @@ def test_cli_serve_smoke(served_root, tmp_path):
             proc.kill()
             raise AssertionError("serve did not exit on SIGTERM")
     assert rc == 0
+
+
+class _BuggyDetector:
+    """Has ``anomaly``, but scoring hits an AttributeError inside it — a
+    bug to report, not a model that lacks anomaly detection."""
+
+    feature_cols = target_cols = TAGS
+
+    def anomaly(self, X, y, resolution="10T", ts_col="ts"):
+        return None.columns
+
+
+def test_attribute_error_inside_anomaly_is_not_a_422(spark, served_root, tmp_path):
+    from gordo_spark.ml.models import LinearModel
+
+    _, payload = served_root
+    store = ModelStore(str(tmp_path / "models"))
+    store.dump(_BuggyDetector(), "buggy", {})
+    store.dump(LinearModel(TAGS, TAGS), "plain", {}, revision=store.latest_revision())
+    app = build_app(spark, store.root)
+    r = call(app, "/buggy/anomaly/prediction", "POST", payload)
+    assert r["status"] == 500
+    assert "AttributeError" in json.loads(r["body"])["error"]
+    # a model without .anomaly is still the 422 of blueprints/anomaly.py
+    r = call(app, "/plain/anomaly/prediction", "POST", payload)
+    assert r["status"] == 422
