@@ -6,8 +6,10 @@ data (the whole dataset query executes here, timed as query_duration_sec)
 -> cross-validate (per-fold metrics + thresholds) -> fit -> persist
 model.pkl + metadata.json with a revision -> registry write.
 
-Spark shape: steps stay driver-side except the data plan — ``get_data`` is
-one Catalyst DAG. X and y are joined once and every row is numbered with its
+Spark shape: steps stay driver-side except the data plan — the aligned wide
+frame is one Catalyst DAG, whether the machine scans solo or reads its share
+of a shared scan. Features and targets are one projection of that frame,
+never split into X and y and joined back, and every row is numbered with its
 TimeSeriesSplit segment, so each fold is a filter over ONE cached frame
 (``ml.cv``). For models with sufficient statistics (LinearModel, RidgeModel)
 one aggregation grouped by segment yields every fold fit, the final fit,
@@ -23,7 +25,7 @@ submitting concurrent jobs (SURVEY.md §3.3), not one pod per machine.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,18 +35,14 @@ from gordo_spark.ml.cv import TimeSeriesCV, numbered, score_model
 from gordo_spark.ml.models import (
     DiffBasedAnomalyDetector,
     DiffBasedKFCVAnomalyDetector,
+    _q,
     model_from_definition,
 )
+from gordo_spark.operators import require_n_samples
 from gordo_spark.plans.dataset import TimeSeriesDataset
 from gordo_spark.sources.store import DiskRegistry, ModelStore, calculate_cache_key
 
-_DATASET_FIELDS = {
-    "tag_list", "train_start_date", "train_end_date", "target_tag_list",
-    "additional_tags", "resolution", "aggregation_methods",
-    "interpolation_method", "interpolation_limit", "row_filter",
-    "row_filter_buffer_size", "filter_periods", "known_filter_periods",
-    "n_samples_threshold", "data_provider",
-}
+_DATASET_FIELDS = {f.name for f in fields(TimeSeriesDataset)}
 
 
 def dataset_from_dict(d: dict) -> TimeSeriesDataset:
@@ -110,19 +108,8 @@ class ModelBuilder:
 
         t0 = time.time()
         dataset = dataset_from_dict(m.dataset)
-        if self.wide_frame is not None:
-            from gordo_spark.operators import require_n_samples, split_xy
-
-            wide = require_n_samples(self.wide_frame, dataset.n_samples_threshold)
-            X, y = split_xy(
-                wide,
-                dataset._expand(dataset.tag_list),
-                dataset._expand(dataset.target_tag_list)
-                if dataset.target_tag_list
-                else None,
-            )
-        else:
-            X, y = dataset.get_data(spark)
+        wide = self.wide_frame if self.wide_frame is not None else dataset.wide_frame(spark)
+        wide = require_n_samples(wide, dataset.n_samples_threshold)
         query_duration = time.time() - t0
 
         model = model_from_definition(m.model)
@@ -130,15 +117,18 @@ class ModelBuilder:
         n_splits = int(evaluation.get("n_splits", 3))
         cv_mode = evaluation.get("cv_mode", "full_build")
         base = getattr(model, "base", model)
-        feats = base.feature_cols or [c for c in X.columns if c != "ts"]
-        targets = base.target_cols or [c for c in y.columns if c != "ts"]
+        feats = base.feature_cols or dataset.x_cols
+        targets = base.target_cols or dataset.y_cols
         if isinstance(model, DiffBasedAnomalyDetector):
             base.feature_cols, base.target_cols = feats, targets
+        frame = wide.select(
+            "ts", *[_q(c) for c in feats], *[_q(t).alias(f"_yt_{t}") for t in targets]
+        )
 
         t1 = time.time()
         # folds, metrics, thresholds and the final fit all read this one
         # numbered, cached frame, released however the block exits
-        with numbered(X, y, targets, n_splits) as data:
+        with numbered(frame, n_splits) as data:
             cv = TimeSeriesCV(model, data, feats, targets, n_splits)
             kfold = isinstance(model, DiffBasedKFCVAnomalyDetector)
             tss = isinstance(model, DiffBasedAnomalyDetector) and not kfold
@@ -147,7 +137,7 @@ class ModelBuilder:
             )
             if kfold:
                 # KFold thresholds come from its own shuffled CV
-                model.cross_validate(*cv.xy(), n_splits=n_splits)
+                model.kfold_thresholds(data, n_splits)
             cv_duration = time.time() - t1
             if cv_mode != "cross_val_only":
                 cv.refit()

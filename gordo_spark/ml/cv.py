@@ -5,14 +5,16 @@ Reference semantics: default CV is sklearn ``TimeSeriesSplit(n_splits=3)``
 is ``KFold(n_splits=5, shuffle=True, random_state=0)``
 (gordo/machine/model/anomaly/diff.py:566-623).
 
-Spark shape of the TimeSeriesSplit path: the rows are numbered ONCE. Each
-row carries its segment ``_seg`` (``with_segments``): fold ``i`` trains on
-``_seg <= i`` and tests on ``_seg == i + 1``, so every fold is a predicate
-over one cached frame (``numbered``). ``TimeSeriesCV`` then gets the fold
-metadata, the MinMax scaler stats and — for models with sufficient
-statistics (``LinearModel`` / ``RidgeModel``) — every fold fit and the final
-fit from ONE aggregation grouped by ``_seg``: per-segment Gram blocks summed
-into prefixes on the driver. ``score_model`` scores every fold (and takes the
+Spark shape of the TimeSeriesSplit path: the training frame holds the
+features plus the targets as ``_yt_<t>``; the builder projects it from the
+aligned wide frame, so no X/y join precedes the numbering. Its rows are
+numbered ONCE. Each row carries its segment ``_seg`` (``with_segments``):
+fold ``i`` trains on ``_seg <= i`` and tests on ``_seg == i + 1``, so every
+fold is a predicate over one cached frame (``numbered``). ``TimeSeriesCV``
+then gets the fold metadata, the MinMax scaler stats and — for models with
+sufficient statistics (``LinearModel`` / ``RidgeModel``) — every fold fit
+and the final fit from ONE aggregation grouped by ``_seg``: per-segment Gram
+blocks summed into prefixes on the driver. ``score_model`` scores every fold (and takes the
 anomaly thresholds of the last) in one more aggregation. Models without
 sufficient statistics fit per fold on the ``_seg <= i`` filters and feed
 the same scoring aggregation. Robust-scaler quantiles do not combine across
@@ -42,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from gordo_spark.ml.models import (
     DiffBasedAnomalyDetector,
     LinearModel,
+    _q,
     gram_aggs,
     gram_blocks,
     model_from_definition,
@@ -54,10 +57,6 @@ METRICS = (
     "mean-squared-error", "mean-absolute-error", "r2-score",
     "explained-variance-score",
 )
-
-
-def _q(c: str) -> Column:
-    return F.col("`" + c + "`")
 
 
 def _with_rn(df: DataFrame, ts_col: str) -> DataFrame:
@@ -175,20 +174,13 @@ def kfold_split(
 
 @contextmanager
 def numbered(
-    X: DataFrame,
-    y: DataFrame,
-    targets: Sequence[str],
-    n_splits: int,
-    ts_col: str = "ts",
+    frame: DataFrame, n_splits: int, ts_col: str = "ts"
 ) -> Iterator[DataFrame]:
-    """X joined to y once (targets renamed ``_yt_<t>``, so targets that are
-    also inputs stay unambiguous), numbered by ``with_segments`` and cached
-    for the duration of the block."""
-    data = with_segments(
-        X.join(y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col),
-        n_splits,
-        ts_col,
-    ).cache()
+    """The training frame — features plus targets as ``_yt_<t>``, e.g. a
+    projection of one aligned wide frame or ``models.with_targets`` —
+    numbered by ``with_segments`` and cached for the duration of the
+    block."""
+    data = with_segments(frame, n_splits, ts_col).cache()
     try:
         yield data
     finally:

@@ -88,6 +88,15 @@ def _q(c: str) -> Column:
     return F.col("`" + c + "`")
 
 
+def with_targets(
+    X: DataFrame, y: DataFrame, targets: Sequence[str], ts_col: str = "ts"
+) -> DataFrame:
+    """X joined on ts to y's ``targets``, renamed ``_yt_<t>`` so targets
+    that are also inputs stay unambiguous — the one place a separate X and
+    y become one training frame."""
+    return X.join(y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col)
+
+
 def gram_aggs(feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
     """Sufficient statistics of an OLS fit with intercept as aggregate
     columns: the upper triangle of X'X (``_xx_i_j``, term 0 the intercept)
@@ -127,8 +136,9 @@ class LinearModel:
         feats = self.feature_cols or [c for c in X.columns if c != ts_col]
         targets = self.target_cols or [c for c in y.columns if c != ts_col]
         self.feature_cols, self.target_cols = feats, targets
-        joined = X.join(y.select(ts_col, *[_q(t).alias(f"_y_{t}") for t in targets]), ts_col)
-        row = joined.agg(*gram_aggs(feats, [f"_y_{t}" for t in targets])).collect()[0]
+        row = with_targets(X, y, targets, ts_col).agg(
+            *gram_aggs(feats, [f"_yt_{t}" for t in targets])
+        ).collect()[0]
         xtx, xty = gram_blocks(row, len(feats), len(targets))
         self.coef_ = self._solve(xtx, xty)
         return self
@@ -302,7 +312,7 @@ class DiffBasedAnomalyDetector:
 
         targets = self.base.target_cols or [c for c in y.columns if c != ts_col]
         feats = self.base.feature_cols or [c for c in X.columns if c != ts_col]
-        with numbered(X, y, targets, n_splits, ts_col) as data:
+        with numbered(with_targets(X, y, targets, ts_col), n_splits, ts_col) as data:
             cv = TimeSeriesCV(self, data, feats, targets, n_splits, ts_col)
             score_model(cv, detector=self)
         return self
@@ -347,9 +357,7 @@ class DiffBasedAnomalyDetector:
 
     def anomaly(self, X: DataFrame, y: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
         targets = self.base.target_cols
-        xy = X.join(
-            y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col
-        )
+        xy = with_targets(X, y, targets, ts_col)
         # the error's truth side is ALWAYS the caller's y (diff.py:356-359)
         # — carried as _y__<t> so a y differing from the X-side tag columns
         # is honored; model_input__ stays the X side
@@ -439,22 +447,27 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
     def cross_validate(
         self, X: DataFrame, y: DataFrame, n_splits: int | None = None, ts_col: str = "ts"
     ) -> "DiffBasedKFCVAnomalyDetector":
+        base = self.base
+        base.feature_cols = base.feature_cols or [c for c in X.columns if c != ts_col]
+        base.target_cols = base.target_cols or [c for c in y.columns if c != ts_col]
+        return self.kfold_thresholds(
+            with_targets(X, y, base.target_cols, ts_col), n_splits, ts_col
+        )
+
+    def kfold_thresholds(
+        self, frame: DataFrame, n_splits: int | None = None, ts_col: str = "ts"
+    ) -> "DiffBasedKFCVAnomalyDetector":
+        """Thresholds from KFold CV over ``frame``: the base estimator's
+        feature columns plus its targets as ``_yt_<t>`` (``with_targets``)."""
         from pyspark.sql import Window
 
+        from gordo_spark.ml.cv import fold_column
         from gordo_spark.operators.smoothing import SMOOTHERS
 
         k = n_splits or self.n_splits
-        feats = self.base.feature_cols or [c for c in X.columns if c != ts_col]
-        targets = self.base.target_cols or [c for c in y.columns if c != ts_col]
-        self.base.feature_cols, self.base.target_cols = feats, targets
-
-        from gordo_spark.ml.cv import fold_column
-
-        wide = X.join(
-            y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col
-        )
+        feats, targets = self.base.feature_cols, self.base.target_cols
         data = fold_column(
-            wide, k, ts_col, membership=self.fold_membership, seed=0
+            frame, k, ts_col, membership=self.fold_membership, seed=0
         ).cache()
 
         # each fold's errors via the shared predict-join helper (works for

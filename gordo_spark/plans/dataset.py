@@ -86,6 +86,19 @@ class TimeSeriesDataset:
         m = self.aggregation_methods
         return [m] if isinstance(m, str) else list(m)
 
+    @property
+    def x_cols(self) -> list[str]:
+        """Wide-frame columns of the model inputs (the expanded ``x_tags``)."""
+        return self._expand(self.x_tags)
+
+    @property
+    def y_cols(self) -> list[str]:
+        """Wide-frame columns of the targets. y defaults to tag_list, NOT
+        x_tags — additional_tags are extra INPUTS only (reference
+        server/properties.py:86-104 falls back to the plain tag_list when
+        target_tag_list is absent)."""
+        return self._expand(self.target_tag_list or self.tag_list)
+
     def _expand(self, tags: list[str]) -> list[str]:
         """Wide-column names: plain tag for a single aggregation, else one
         ``<tag>__<agg>`` column per (tag, agg) — the reference's MultiIndex
@@ -162,13 +175,5 @@ class TimeSeriesDataset:
 
     def get_data(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
         """(X, y) — the reference's dataset.get_data() parity point."""
-        wide = self.wide_frame(spark)
-        wide = require_n_samples(wide, self.n_samples_threshold)
-        # y defaults to tag_list, NOT x_tags — additional_tags are extra
-        # INPUTS only (reference server/properties.py:86-104 falls back to
-        # the plain tag_list when target_tag_list is absent)
-        return split_xy(
-            wide,
-            self._expand(self.x_tags),
-            self._expand(self.target_tag_list or self.tag_list),
-        )
+        wide = require_n_samples(self.wide_frame(spark), self.n_samples_threshold)
+        return split_xy(wide, self.x_cols, self.y_cols)

@@ -83,6 +83,42 @@ def _grid_aligned(ds: TimeSeriesDataset) -> bool:
     return True
 
 
+def _scan_groups(
+    datasets: dict[str, TimeSeriesDataset],
+) -> tuple[list[str], list[tuple[TimeSeriesDataset, dict[str, TimeSeriesDataset]]]]:
+    """(solo machine names, [(prototype, members)] per shared-scan group).
+    Grid-aligned machines group by ``_plan_key``; the prototype scans the
+    union of the members' tags over the envelope of their ranges, with the
+    per-machine filters cleared (they run in each machine's tail)."""
+    groups: dict[str, list[str]] = defaultdict(list)
+    solo: list[str] = []
+    for name, ds in datasets.items():
+        if _grid_aligned(ds):
+            groups[_plan_key(ds)].append(name)
+        else:
+            solo.append(name)
+    shared = []
+    for names in groups.values():
+        members = {n: datasets[n] for n in names}
+        all_tags = list(
+            dict.fromkeys(t for ds in members.values() for t in ds.all_tags)
+        )
+        starts = [ds.train_start_date for ds in members.values()]
+        ends = [ds.train_end_date for ds in members.values()]
+        proto = replace(
+            next(iter(members.values())),
+            tag_list=all_tags,
+            target_tag_list=None,
+            train_start_date=None if any(s is None for s in starts) else min(starts),
+            train_end_date=None if any(e is None for e in ends) else max(ends),
+            row_filter="",
+            known_filter_periods=None,
+            filter_periods=None,
+        )
+        shared.append((proto, members))
+    return solo, shared
+
+
 def shared_wide_frames(
     spark: SparkSession,
     datasets: dict[str, TimeSeriesDataset],
@@ -101,35 +137,9 @@ def shared_wide_frames(
     resolution grid fall back to their solo plan (see _grid_aligned), so
     the bit-parity guarantee holds unconditionally.
     """
-    groups: dict[str, list[str]] = defaultdict(list)
-    solo: list[str] = []
-    for name, ds in datasets.items():
-        if _grid_aligned(ds):
-            groups[_plan_key(ds)].append(name)
-        else:
-            solo.append(name)
-
-    frames: dict[str, DataFrame] = {}
-    for name in solo:
-        frames[name] = datasets[name].wide_frame(spark)
-    for names in groups.values():
-        members = {n: datasets[n] for n in names}
-        all_tags = list(
-            dict.fromkeys(t for ds in members.values() for t in ds.all_tags)
-        )
-        starts = [ds.train_start_date for ds in members.values()]
-        ends = [ds.train_end_date for ds in members.values()]
-        proto = replace(
-            next(iter(members.values())),
-            tag_list=all_tags,
-            target_tag_list=None,
-            train_start_date=None if any(s is None for s in starts) else min(starts),
-            train_end_date=None if any(e is None for e in ends) else max(ends),
-            # per-machine filters are applied in the tail, not the shared part
-            row_filter="",
-            known_filter_periods=None,
-            filter_periods=None,
-        )
+    solo, shared = _scan_groups(datasets)
+    frames = {name: datasets[name].wide_frame(spark) for name in solo}
+    for proto, members in shared:
         res = proto.long_resampled(spark)
         if cache and len(members) > 1:
             res = res.cache()
@@ -216,39 +226,14 @@ def fleet_long_frame(
     partitions — the fleet IS the parallelism.
     """
     sep = "\x00"  # never in a tag name; splits the composite key safely
-    groups: dict[str, list[str]] = defaultdict(list)
-    solo: list[str] = []
-    for name, ds in datasets.items():
-        if _grid_aligned(ds):
-            groups[_plan_key(ds)].append(name)
-        else:
-            solo.append(name)
-
-    parts: list[DataFrame] = []
-    for name in solo:
-        ds = datasets[name]
-        parts.append(
-            ds.long_filled(spark).select(
-                F.lit(name).alias(machine_col), "tag", "ts", "value"
-            )
+    solo, shared = _scan_groups(datasets)
+    parts = [
+        datasets[name].long_filled(spark).select(
+            F.lit(name).alias(machine_col), "tag", "ts", "value"
         )
-    for names in groups.values():
-        members = {n: datasets[n] for n in names}
-        all_tags = list(
-            dict.fromkeys(t for ds in members.values() for t in ds.all_tags)
-        )
-        starts = [ds.train_start_date for ds in members.values()]
-        ends = [ds.train_end_date for ds in members.values()]
-        proto = replace(
-            next(iter(members.values())),
-            tag_list=all_tags,
-            target_tag_list=None,
-            train_start_date=None if any(s is None for s in starts) else min(starts),
-            train_end_date=None if any(e is None for e in ends) else max(ends),
-            row_filter="",
-            known_filter_periods=None,
-            filter_periods=None,
-        )
+        for name in solo
+    ]
+    for proto, members in shared:
         res = proto.long_resampled(spark)
         spec = fleet_spec_frame(spark, members, machine_col)
         clipped = (

@@ -234,7 +234,7 @@ class GordoServer:
                 return self._stamped(resp, args)
             if route == "anomaly/prediction" and method == "POST":
                 payload = self._payload(environ)
-                model, _, _ = _serving_load(self.store_root, machine, revision)
+                model, _, rev = _serving_load(self.store_root, machine, revision)
                 if not hasattr(model, "anomaly"):
                     # model has no .anomaly -> 422 (blueprints/anomaly.py:55)
                     return self._json(
@@ -246,7 +246,8 @@ class GordoServer:
                     self.store_root,
                     machine,
                     payload,
-                    revision,
+                    # the revision just checked, not a second latest_revision()
+                    rev,
                     all_columns=_truthy(args.get("all_columns")),
                 )
                 return self._stamped(resp, args)

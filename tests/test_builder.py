@@ -1,12 +1,15 @@
 """End-to-end builder lifecycle tests (reference gordo build parity,
 SURVEY.md §3.1): config -> data -> CV -> fit -> persist -> cache hit."""
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from gordo_spark.builder import ModelBuilder, build_machines, dataset_from_dict
 from gordo_spark.config import Machine
+from gordo_spark.plans.dataset import TimeSeriesDataset
 from gordo_spark.sources.store import DiskRegistry, ModelStore
 
 
@@ -42,6 +45,11 @@ def test_dataset_from_dict_ignores_unknown_keys(sf_dir):
     )
     assert ds.tag_list == ["click", "view"]
     assert ds.resolution == "1H"
+    # every TimeSeriesDataset field passes through
+    values = {f.name: f"<{f.name}>" for f in dataclasses.fields(TimeSeriesDataset)}
+    values.update(tag_list=["a"], target_tag_list=["b"], additional_tags=["c"])
+    ds = dataset_from_dict({**values, "type": "TimeSeriesDataset"})
+    assert dataclasses.asdict(ds) == values
 
 
 def test_build_full_lifecycle_and_cache(spark, machine, tmp_path):
@@ -89,6 +97,31 @@ def test_build_machines_concurrent(spark, machine, tmp_path):
     results = build_machines(spark, [machine, m2], store, max_workers=2)
     assert set(results) == {"test-machine", "second-machine"}
     assert all(not r.cached and r.path for r in results.values())
+
+
+def test_shared_scan_build_keeps_additional_tags(spark, machine):
+    """A shared-scan build trains on the same inputs as the solo build:
+    ``additional_tags`` are model inputs either way."""
+    machine.dataset = {
+        **machine.dataset, "tag_list": ["click", "view"], "additional_tags": ["purchase"]
+    }
+    machine.model = {"kind": "DiffBasedAnomalyDetector", "window": 6}
+    twin = Machine.from_config({**machine.to_dict(), "name": "twin-machine"})
+    solo = ModelBuilder(machine).build(spark)
+    shared = build_machines(spark, [machine, twin], max_workers=2)[machine.name]
+    assert solo.model.base.feature_cols == ["click", "view", "purchase"]
+    assert shared.model.base.feature_cols == solo.model.base.feature_cols
+    assert shared.model.base.target_cols == solo.model.base.target_cols == ["click", "view"]
+    close = dict(rtol=1e-9, atol=1e-12)
+    np.testing.assert_allclose(shared.model.base.coef_, solo.model.base.coef_, **close)
+    th_solo = solo.metadata["build-metadata"]["model"]["thresholds"]
+    th_shared = shared.metadata["build-metadata"]["model"]["thresholds"]
+    assert list(th_shared["tags"]) == list(th_solo["tags"])
+    np.testing.assert_allclose(
+        [*th_shared["tags"].values(), th_shared["total"]],
+        [*th_solo["tags"].values(), th_solo["total"]],
+        **close,
+    )
 
 
 def test_scoring_scaler_scales_mae_not_r2(spark, machine, tmp_path):
@@ -374,5 +407,6 @@ def test_solo_build_job_budget(spark, xy_wide):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    # 4 jobs for the fit aggregation (join, numbering, grouping), 1 to score
-    assert len(sc.statusTracker().getJobIdsForGroup("job-budget")) <= 5
+    # 3 jobs for the fit aggregation (input, numbering, grouping), 1 to
+    # score; features and targets are one projection, so no X/y join
+    assert len(sc.statusTracker().getJobIdsForGroup("job-budget")) <= 4

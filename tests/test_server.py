@@ -390,3 +390,23 @@ def test_attribute_error_inside_anomaly_is_not_a_422(spark, served_root, tmp_pat
     # a model without .anomaly is still the 422 of blueprints/anomaly.py
     r = call(app, "/plain/anomaly/prediction", "POST", payload)
     assert r["status"] == 422
+
+
+def test_anomaly_scores_the_revision_it_checked(spark, served_root, tmp_path, monkeypatch):
+    """The route resolves the latest revision once: a revision published
+    between its ``anomaly`` check and the scoring is not scored."""
+    import itertools
+
+    from gordo_spark.ml.models import LinearModel
+
+    root, payload = served_root
+    model, metadata = ModelStore(root).load("srv-machine")
+    store = ModelStore(str(tmp_path / "models"))
+    store.dump(model, "srv-machine", metadata, revision="1000000001")
+    # the newer revision has no anomaly(): scoring it unchecked would fail
+    store.dump(LinearModel(TAGS, TAGS), "srv-machine", metadata, revision="1000000002")
+    revs = itertools.chain(["1000000001"], itertools.repeat("1000000002"))
+    monkeypatch.setattr(ModelStore, "latest_revision", lambda self: next(revs))
+    r = call(build_app(spark, store.root), "/srv-machine/anomaly/prediction", "POST", payload)
+    assert r["status"] == 200, r["body"]
+    assert json.loads(r["body"])["revision"] == r["headers"]["revision"] == "1000000001"
