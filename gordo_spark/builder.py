@@ -15,8 +15,12 @@ TimeSeriesSplit segment, so each fold is a filter over ONE cached frame
 one aggregation grouped by segment yields every fold fit, the final fit,
 the MinMax scaler stats, the fold metadata and the row count; one more
 scores every fold and takes the anomaly thresholds of the last. A
-DiffBasedAnomalyDetector(LinearModel) machine is 2 driver actions, 10-12
-Spark jobs. Nothing but configs, Gram matrices, scores and thresholds
+DiffBasedAnomalyDetector(LinearModel) machine is 2 driver actions: 4 Spark
+jobs over an in-memory frame, 9 over a parquet-backed one. A KFold
+detector (DiffBasedKFCVAnomalyDetector) adds its KFold thresholds from the
+same fold engine grouped by fold: 9 jobs in all in memory (7 with modulo
+fold membership, which needs no row count). Nothing but configs, Gram
+matrices, scores and thresholds
 ever reaches the driver, so the same builder drives a 1000-executor
 cluster unchanged: thousands of machines = a driver loop or thread pool
 submitting concurrent jobs (SURVEY.md §3.3), not one pod per machine.
@@ -31,7 +35,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from gordo_spark.config import Machine
-from gordo_spark.ml.cv import TimeSeriesCV, numbered, score_model
+from gordo_spark.ml.cv import FoldCV, Folds, cached, score_model, with_segments
 from gordo_spark.ml.models import (
     DiffBasedAnomalyDetector,
     DiffBasedKFCVAnomalyDetector,
@@ -128,15 +132,16 @@ class ModelBuilder:
         t1 = time.time()
         # folds, metrics, thresholds and the final fit all read this one
         # numbered, cached frame, released however the block exits
-        with numbered(frame, n_splits) as data:
-            cv = TimeSeriesCV(model, data, feats, targets, n_splits)
+        with cached(with_segments(frame, n_splits)) as data:
+            cv = FoldCV(model, data, feats, targets, Folds.timeseries(n_splits))
             kfold = isinstance(model, DiffBasedKFCVAnomalyDetector)
             tss = isinstance(model, DiffBasedAnomalyDetector) and not kfold
             scores = score_model(
                 cv, evaluation.get("scoring_scaler"), model if tss else None
             )
             if kfold:
-                # KFold thresholds come from its own shuffled CV
+                # KFold thresholds come from the same fold engine over
+                # the fold groups of fold_column
                 model.kfold_thresholds(data, n_splits)
             cv_duration = time.time() - t1
             if cv_mode != "cross_val_only":

@@ -36,7 +36,8 @@ _UNKNOWN_STATS_FLOOR = 1 << 60
 
 def adaptive_partitions(df: DataFrame, target_bytes: int = 128 << 20) -> int:
     """Partition count for pre-partitioning ``df`` by a join key:
-    ``max(defaultParallelism, est_size / target_bytes)`` (capped).
+    ``max(1, est_size / target_bytes)`` (capped), with no core-count floor
+    (see the comment at the return).
 
     The estimate is the sum of the optimized plan's LEAF relation
     sizes (file-size-derived for scans — the only reliable layer of
@@ -44,11 +45,11 @@ def adaptive_partitions(df: DataFrame, target_bytes: int = 128 << 20) -> int:
     row-count guesses and can overshoot by 1000x, measured 2.1 TB for
     a 25 MB join at sf0.1). A keyed projection of a join/union never
     exceeds its inputs by more than a small factor, so leaf bytes are
-    the right scale proxy: at bench scale (MBs) this returns
-    ``defaultParallelism`` and at warehouse scale enough partitions to
-    keep each in the 128 MB - 1 GB band the shuffle guide recommends.
-    Falls back to ``defaultParallelism`` if the JVM estimate is
-    unavailable.
+    the right scale proxy: at bench scale (MBs) this returns 1 and at
+    warehouse scale enough partitions to keep each in the 128 MB - 1 GB
+    band the shuffle guide recommends. Falls back to
+    ``defaultParallelism`` if the JVM estimate is unavailable or a leaf
+    has no size statistics.
     """
     base = df.sparkSession.sparkContext.defaultParallelism
     try:

@@ -5,20 +5,25 @@ Reference semantics: default CV is sklearn ``TimeSeriesSplit(n_splits=3)``
 is ``KFold(n_splits=5, shuffle=True, random_state=0)``
 (gordo/machine/model/anomaly/diff.py:566-623).
 
-Spark shape of the TimeSeriesSplit path: the training frame holds the
-features plus the targets as ``_yt_<t>``; the builder projects it from the
-aligned wide frame, so no X/y join precedes the numbering. Its rows are
-numbered ONCE. Each row carries its segment ``_seg`` (``with_segments``):
-fold ``i`` trains on ``_seg <= i`` and tests on ``_seg == i + 1``, so every
-fold is a predicate over one cached frame (``numbered``). ``TimeSeriesCV``
-then gets the fold metadata, the MinMax scaler stats and — for models with
-sufficient statistics (``LinearModel`` / ``RidgeModel``) — every fold fit
-and the final fit from ONE aggregation grouped by ``_seg``: per-segment Gram
-blocks summed into prefixes on the driver. ``score_model`` scores every fold (and takes the
-anomaly thresholds of the last) in one more aggregation. Models without
-sufficient statistics fit per fold on the ``_seg <= i`` filters and feed
-the same scoring aggregation. Robust-scaler quantiles do not combine across
-segments, so they take one pass of their own, for every fold at once.
+Spark shape: one fold engine serves both splitters. The training frame
+holds the features plus the targets as ``_yt_<t>``; the builder projects it
+from the aligned wide frame, so no X/y join precedes the numbering. Its rows
+are numbered ONCE and each row carries a fold group: ``_seg`` for
+TimeSeriesSplit (``with_segments``; fold ``i`` trains on segments ``0..i``
+and tests on ``i + 1``) or ``_fold`` for KFold (``fold_column``; fold ``f``
+trains on every other group and tests on ``f``), so every fold is a
+predicate over one frame cached for the CV (``cached``). ``Folds`` names
+each fold's train groups and test group. ``FoldCV`` then gets the fold
+metadata, the MinMax scaler stats and — for models with sufficient
+statistics (``LinearModel`` / ``RidgeModel``) — every fold fit and the final
+fit from ONE aggregation grouped by the fold column: per-group Gram blocks
+summed on the driver over each fit's groups. Models without sufficient
+statistics fit per fold on the train filters. Robust-scaler quantiles do not
+combine across groups, so they take one pass of their own, for every fold at
+once. ``score_model`` scores every fold (and takes the anomaly thresholds of
+the last) in one more aggregation; the KFold detector instead takes a
+quantile of the smoothed out-of-fold errors. Both read the same error
+columns (``detector_errors``).
 
 Shuffled KFold membership (default) reproduces sklearn
 ``KFold(n_splits, shuffle=True, random_state=seed)`` EXACTLY: sklearn
@@ -37,6 +42,7 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -50,9 +56,11 @@ from gordo_spark.ml.models import (
     model_from_definition,
 )
 from gordo_spark.ml.scalers import center_spread
+from gordo_spark.operators.anomaly import row_mean_square
 from gordo_spark.operators.smoothing import rolling_min
 
 SEG = "_seg"
+FOLD = "_fold"
 METRICS = (
     "mean-squared-error", "mean-absolute-error", "r2-score",
     "explained-variance-score",
@@ -129,7 +137,7 @@ def fold_column(
     ts_col: str = "ts",
     membership: str = "shuffle",
     seed: int = 0,
-    col: str = "_fold",
+    col: str = FOLD,
 ) -> DataFrame:
     """Append a fold-membership column.
 
@@ -166,43 +174,56 @@ def kfold_split(
     withf = fold_column(df, n_splits, ts_col, membership, seed)
     folds = []
     for i in range(n_splits):
-        test = withf.filter(F.col("_fold") == i).drop("_fold")
-        train = withf.filter(F.col("_fold") != i).drop("_fold")
+        test = withf.filter(F.col(FOLD) == i).drop(FOLD)
+        train = withf.filter(F.col(FOLD) != i).drop(FOLD)
         folds.append((train, test))
     return folds
 
 
 @contextmanager
-def numbered(
-    frame: DataFrame, n_splits: int, ts_col: str = "ts"
-) -> Iterator[DataFrame]:
-    """The training frame — features plus targets as ``_yt_<t>``, e.g. a
-    projection of one aligned wide frame or ``models.with_targets`` —
-    numbered by ``with_segments`` and cached for the duration of the
-    block."""
-    data = with_segments(frame, n_splits, ts_col).cache()
+def cached(frame: DataFrame) -> Iterator[DataFrame]:
+    """``frame`` cached for the duration of the block, released however
+    the block exits — e.g. the training frame (features plus targets as
+    ``_yt_<t>``) numbered by ``with_segments`` or ``fold_column``."""
+    data = frame.cache()
     try:
         yield data
     finally:
         data.unpersist()
 
 
-def _by_fold(values: Sequence[Column]) -> Column:
-    """``values[i]`` on the test segment of fold i (``_seg == i + 1``)."""
-    out = F.when(F.col(SEG) == 1, values[0])
-    for i, v in enumerate(values[1:], 2):
-        out = out.when(F.col(SEG) == i, v)
-    return out
+class Folds(NamedTuple):
+    """Fold ``i`` trains on the rows whose ``col`` is in ``train[i]`` and
+    tests on the rows whose ``col`` is ``test[i]``."""
+
+    col: str
+    train: list[tuple[int, ...]]
+    test: list[int]
+
+    @classmethod
+    def timeseries(cls, n_splits: int) -> "Folds":
+        """Over ``with_segments``: train on segments 0..i, test on i + 1."""
+        train = [tuple(range(i + 1)) for i in range(n_splits)]
+        return cls(SEG, train, list(range(1, n_splits + 1)))
+
+    @classmethod
+    def kfold(cls, n_splits: int) -> "Folds":
+        """Over ``fold_column``: train on every other fold, test on f."""
+        groups = range(n_splits)
+        return cls(FOLD, [tuple(g for g in groups if g != f) for f in groups], list(groups))
 
 
-class TimeSeriesCV:
-    """TimeSeriesSplit fold fits of ``model`` over a ``numbered`` frame.
+class FoldCV:
+    """Fold fits of ``model`` over a frame whose ``folds.col`` column holds
+    each row's fold group (``with_segments`` for TimeSeriesSplit,
+    ``fold_column`` for KFold).
 
-    One aggregation grouped by ``_seg`` gives ``folds`` (train/test
-    start/end/count per fold), ``row_count``, the MinMax stats of every
-    fold and, when the model has sufficient statistics, every fold fit
-    plus the final fit. Other models fit each fold on its ``_seg <= i``
-    filter. ``models[i]`` is fold i's fitted clone of the base estimator."""
+    One aggregation grouped by that column gives ``folds`` (train/test
+    start/end/count per fold), ``row_count``, the per-group MinMax stats
+    and, when the model has sufficient statistics, per-group Gram blocks;
+    each fold fit and the final fit sum the blocks of their groups. Other
+    models fit each fold on its train filter. ``models[i]`` is fold i's
+    fitted clone of the base estimator."""
 
     def __init__(
         self,
@@ -210,12 +231,12 @@ class TimeSeriesCV:
         data: DataFrame,
         feats: Sequence[str],
         targets: Sequence[str],
-        n_splits: int,
+        folds: Folds,
         ts_col: str = "ts",
     ):
-        self.model, self.data = model, data
+        self.model, self.data, self.spec = model, data, folds
         self.feats, self.targets = list(feats), list(targets)
-        self.n_splits, self.ts_col = n_splits, ts_col
+        self.n_splits, self.ts_col = len(folds.test), ts_col
         base = getattr(model, "base", model)
         aggs = [
             F.count(F.lit(1)).alias("_n"),
@@ -227,15 +248,17 @@ class TimeSeriesCV:
         gram = isinstance(base, LinearModel)
         if gram:
             aggs += gram_aggs(self.feats, [f"_yt_{t}" for t in self.targets])
-        rows = sorted(data.groupBy(SEG).agg(*aggs).collect(), key=lambda r: r[SEG])
-        self.row_count = sum(r["_n"] for r in rows)
-        if self.row_count // (n_splits + 1) < 1:
-            raise ValueError(f"too few rows ({self.row_count}) for {n_splits} splits")
-        self._segs = rows
+        rows = {r[folds.col]: r for r in data.groupBy(folds.col).agg(*aggs).collect()}
+        self.row_count = sum(r["_n"] for r in rows.values())
+        if any(g not in rows for g in folds.test):
+            raise ValueError(f"too few rows ({self.row_count}) for {self.n_splits} splits")
+        self._groups = rows
+        # train groups per fold, then every group for the final fit
+        self._train = [*folds.train, tuple(sorted(rows))]
         self._robust: list[dict] | None = None
         self.folds = []
-        for i in range(n_splits):
-            train, test = rows[: i + 1], rows[i + 1]
+        for i, g in enumerate(folds.test):
+            train, test = [rows[h] for h in self._train[i]], rows[g]
             self.folds.append(
                 {
                     "fold": i,
@@ -246,17 +269,18 @@ class TimeSeriesCV:
                     "test_count": test["_n"],
                 }
             )
-        # running sums of the per-segment Gram blocks: entry i covers
-        # segments 0..i, the last entry every row
+        # Gram blocks summed per fit — never total minus a block, whose
+        # subtraction cancels
         self._gram = None
         if gram:
-            self._gram = []
-            for xtx, xty in (gram_blocks(r, len(self.feats), len(self.targets)) for r in rows):
-                if self._gram:
-                    xtx, xty = self._gram[-1][0] + xtx, self._gram[-1][1] + xty
-                self._gram.append((xtx, xty))
+            p, m = len(self.feats), len(self.targets)
+            blocks = {g: gram_blocks(r, p, m) for g, r in rows.items()}
+            self._gram = [
+                reduce(lambda a, b: (a[0] + b[0], a[1] + b[1]), [blocks[g] for g in train])
+                for train in self._train
+            ]
         self.models = []
-        for i in range(n_splits):
+        for i in range(self.n_splits):
             m = model_from_definition(base.into_definition())
             m.feature_cols, m.target_cols = list(self.feats), list(self.targets)
             if gram:
@@ -265,31 +289,43 @@ class TimeSeriesCV:
                 m.fit(*self.xy(i))
             self.models.append(m)
 
-    def xy(self, upto: int | None = None) -> tuple[DataFrame, DataFrame]:
-        """(X, y) of segments 0..upto (every row when None), targets under
-        their own names."""
-        d = self.data if upto is None else self.data.filter(F.col(SEG) <= upto)
+    def _in(self, groups: Sequence[int]) -> Column:
+        return F.col(self.spec.col).isin(*groups)
+
+    def xy(self, fold: int | None = None) -> tuple[DataFrame, DataFrame]:
+        """(X, y) of fold ``fold``'s train rows (every row when None),
+        targets under their own names."""
+        d = self.data if fold is None else self.data.filter(self._in(self._train[fold]))
         ts = self.ts_col
         return (
             d.select(ts, *[_q(c).alias(c) for c in self.feats]),
             d.select(ts, *[_q(f"_yt_{t}").alias(t) for t in self.targets]),
         )
 
-    def stats(self, kind: str, upto: int) -> dict[str, tuple[float, float]]:
-        """Scaler stats of the targets over segments 0..upto, in the shape of
-        ``MinMaxScalerExpr`` / ``RobustScalerExpr`` ``.stats``. Robust
-        quantiles come from one extra pass that serves every fold."""
+    def by_fold(self, values: Sequence[Column]) -> Column:
+        """``values[i]`` on the test rows of fold i."""
+        col, test = F.col(self.spec.col), self.spec.test
+        out = F.when(col == test[0], values[0])
+        for g, v in zip(test[1:], values[1:]):
+            out = out.when(col == g, v)
+        return out
+
+    def stats(self, kind: str, fold: int) -> dict[str, tuple[float, float]]:
+        """Scaler stats of fold ``fold``'s train targets (every row when
+        ``fold == n_splits``), in the shape of ``MinMaxScalerExpr`` /
+        ``RobustScalerExpr`` ``.stats``. Robust quantiles come from one
+        extra pass that serves every fold."""
         if kind == "minmax":
-            rows = self._segs[: upto + 1]
+            rows = [self._groups[g] for g in self._train[fold]]
             return {
                 t: (min(r[f"_mn_{j}"] for r in rows), max(r[f"_mx_{j}"] for r in rows))
                 for j, t in enumerate(self.targets)
             }
         if self._robust is None:
             aggs = []
-            for b in range(self.n_splits + 1):
+            for b, train in enumerate(self._train):
                 for j, t in enumerate(self.targets):
-                    v = F.when(F.col(SEG) <= b, _q(f"_yt_{t}"))
+                    v = F.when(self._in(train), _q(f"_yt_{t}"))
                     aggs += [
                         F.percentile(v, 0.5).alias(f"_md_{b}_{j}"),
                         (F.percentile(v, 0.75) - F.percentile(v, 0.25)).alias(f"_iqr_{b}_{j}"),
@@ -297,30 +333,30 @@ class TimeSeriesCV:
             row = self.data.agg(*aggs).collect()[0]
             self._robust = [
                 {t: (row[f"_md_{b}_{j}"], row[f"_iqr_{b}_{j}"]) for j, t in enumerate(self.targets)}
-                for b in range(self.n_splits + 1)
+                for b in range(len(self._train))
             ]
-        return self._robust[upto]
+        return self._robust[fold]
 
     def predictions(self) -> DataFrame:
-        """(ts, _seg, _yt_<t>..., _p_<t>...): each fold's predictions on its
-        own test segment. Expression models predict in one projection;
-        others (offset/lookback, Python estimators) predict each test
-        segment and join on ts, so their output may be shorter."""
-        ts, ys = self.ts_col, [_q(f"_yt_{t}") for t in self.targets]
+        """(ts, <fold col>, _yt_<t>..., _p_<t>...): each fold's predictions
+        on its own test rows. Expression models predict in one projection;
+        others (offset/lookback, Python estimators) predict each fold's
+        test rows and join on ts, so their output may be shorter."""
+        ts, col, ys = self.ts_col, self.spec.col, [_q(f"_yt_{t}") for t in self.targets]
         if all(hasattr(m, "predict_exprs") for m in self.models):
             exprs = [m.predict_exprs("_p_") for m in self.models]
-            return self.data.filter(F.col(SEG) >= 1).select(
-                ts, SEG, *ys,
+            return self.data.filter(self._in(self.spec.test)).select(
+                ts, col, *ys,
                 *[
-                    _by_fold([e[j] for e in exprs]).alias(f"_p_{t}")
+                    self.by_fold([e[j] for e in exprs]).alias(f"_p_{t}")
                     for j, t in enumerate(self.targets)
                 ],
             )
         parts = []
-        for i, m in enumerate(self.models):
-            test = self.data.filter(F.col(SEG) == i + 1)
+        for m, g in zip(self.models, self.spec.test):
+            test = self.data.filter(F.col(col) == g)
             raw = m.predict(test.select(ts, *[_q(c).alias(c) for c in self.feats]), ts, "_p_")
-            parts.append(test.select(ts, SEG, *ys).join(raw, ts))
+            parts.append(test.select(ts, col, *ys).join(raw, ts))
         return reduce(DataFrame.unionByName, parts)
 
     def refit(self) -> None:
@@ -339,14 +375,29 @@ class TimeSeriesCV:
             model.scaler.stats = self.stats(model.scaler_kind, self.n_splits)
 
 
+def detector_errors(cv: FoldCV, detector: DiffBasedAnomalyDetector) -> list[Column]:
+    """The diff.py error columns over ``cv.predictions()`` (diff.py:222-233):
+    ``_e_<t>`` the unscaled ``|p - y|`` per tag, ``_e_total`` the mean over
+    tags of ``(err / spread)^2``, each spread from the detector's scaler fit
+    on the row's fold's train targets."""
+    errs, scaled = [], []
+    for t in cv.targets:
+        err = F.abs(_q(f"_p_{t}") - _q(f"_yt_{t}"))
+        stats = [cv.stats(detector.scaler_kind, i)[t] for i in range(cv.n_splits)]
+        spread = cv.by_fold([F.lit(detector._spread(s)) for s in stats])
+        errs.append(err.alias(f"_e_{t}"))
+        scaled.append(err / spread)
+    return [*errs, row_mean_square(scaled).alias("_e_total")]
+
+
 def score_model(
-    cv: TimeSeriesCV,
+    cv: FoldCV,
     scoring_scaler: str | None = None,
     detector: DiffBasedAnomalyDetector | None = None,
 ) -> list[dict[str, dict[str, float]]]:
     """M5 — per fold, mse/mae/r2/explained_variance per target plus the
-    across-target mean, for every fold in ONE aggregation grouped by
-    ``_seg`` over the fold predictions.
+    across-target mean, for every fold in ONE aggregation grouped by the
+    fold column over the fold predictions.
 
     ``scoring_scaler`` (``minmax`` | ``robust``) scales y and y_hat by the
     fold's train-target stats before the metrics (reference
@@ -354,36 +405,26 @@ def score_model(
     across tags; r2/ev are affine-invariant, mse/mae scale by 1/spread).
 
     With ``detector``, the same aggregation also sets its thresholds from
-    the LAST fold (diff.py:229-264): per tag the unscaled |error|, and the
-    total as the mean squared error scaled by the detector's scaler fit on
-    the fold's train targets, each through ``rolling(6,
-    min_periods=6).min()`` and then ``max``."""
-    k, ts = cv.n_splits, cv.ts_col
+    the LAST fold (diff.py:229-264): the ``detector_errors`` of each fold's
+    test rows, each through ``rolling(6, min_periods=6).min()`` and then
+    ``max``."""
+    k, ts, col = cv.n_splits, cv.ts_col, cv.spec.col
     cols = []
     for t in cv.targets:
         y, p = _q(f"_yt_{t}"), _q(f"_p_{t}")
         if scoring_scaler:
             cs = [center_spread(scoring_scaler, cv.stats(scoring_scaler, i)[t]) for i in range(k)]
-            a = _by_fold([F.lit(float(c)) for c, _ in cs])
-            b = _by_fold([F.lit(float(s)) for _, s in cs])
+            a = cv.by_fold([F.lit(float(c)) for c, _ in cs])
+            b = cv.by_fold([F.lit(float(s)) for _, s in cs])
             y, p = (y - a) / b, (p - a) / b
         cols += [y.alias(f"_ys_{t}"), (y - p).alias(f"_d_{t}")]
     errs: list[str] = []
     if detector is not None:
-        total = None
-        for t in cv.targets:
-            err = F.abs(_q(f"_p_{t}") - _q(f"_yt_{t}"))
-            spread = _by_fold(
-                [F.lit(detector._spread(cv.stats(detector.scaler_kind, i)[t])) for i in range(k)]
-            )
-            s = err / spread
-            total = s * s if total is None else total + s * s
-            cols.append(err.alias(f"_e_{t}"))
-        cols.append((total / F.lit(float(len(cv.targets)))).alias("_e_total"))
+        cols += detector_errors(cv, detector)
         errs = [f"_e_{t}" for t in cv.targets] + ["_e_total"]
-    frame = cv.predictions().select(ts, SEG, *cols)
+    frame = cv.predictions().select(ts, col, *cols)
     if errs:
-        w = Window.partitionBy(SEG).orderBy(ts)
+        w = Window.partitionBy(col).orderBy(ts)
         frame = frame.select("*", *[rolling_min(e, 6, w).alias(f"_th{e}") for e in errs])
     aggs = []
     for t in cv.targets:
@@ -395,10 +436,10 @@ def score_model(
             (1 - F.var_pop(d) / F.var_pop(ys)).alias(f"ev_{t}"),
         ]
     aggs += [F.max(_q(f"_th{e}")).alias(f"_th{e}") for e in errs]
-    rows = {r[SEG]: r for r in frame.groupBy(SEG).agg(*aggs).collect()}
+    rows = {r[col]: r for r in frame.groupBy(col).agg(*aggs).collect()}
     per_fold = []
-    for i in range(k):
-        row = rows[i + 1]
+    for g in cv.spec.test:
+        row = rows[g]
         out = {
             t: dict(zip(METRICS, (row[f"mse_{t}"], row[f"mae_{t}"], row[f"r2_{t}"], row[f"ev_{t}"])))
             for t in cv.targets
@@ -408,7 +449,7 @@ def score_model(
         }
         per_fold.append(out)
     if detector is not None:
-        last = rows[k]
+        last = rows[cv.spec.test[-1]]
         detector.tag_thresholds_ = {t: last[f"_th_e_{t}"] for t in cv.targets}
         detector.total_threshold_ = last["_th_e_total"]
     return per_fold

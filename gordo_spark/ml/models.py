@@ -15,7 +15,9 @@ registry (gordo/machine/model/factories/*). Here:
   estimator, scaler fit on y after training, TimeSeriesSplit CV with
   thresholds from the LAST fold's rolling(6).min().max() (diff.py:229-264 —
   deliberately the last fold, not an aggregate), anomaly() emitting the full
-  column block (delegates to operators.anomaly.anomaly_frame).
+  column block (delegates to operators.anomaly.anomaly_frame). Its KFold
+  variant ``DiffBasedKFCVAnomalyDetector`` runs on the same ``ml.cv`` fold
+  engine.
 - model registry (``register_model``) mirroring the reference's
   ``register_model_builder`` extension point (gordo/machine/model/register.py).
 """
@@ -253,67 +255,18 @@ class DiffBasedAnomalyDetector:
         self.scaler = self._scaler_cls()(self.base.target_cols).fit(y)
         return self
 
-    def _clone_base(self):
-        """Fresh unfitted copy of the base estimator (definition
-        round-trip), so fold fits never mutate the deployed model."""
-        return model_from_definition(self.base.into_definition())
-
-    def _fold_errors(
-        self, train: DataFrame, test: DataFrame, targets, feats, ts_col: str
-    ) -> DataFrame:
-        """Fit a base clone on ``train``, predict ``test``, return the error
-        frame (ts, err__<t>..., err__total).
-
-        Reference parity (diff.py:222-233): per-tag errors are the UNSCALED
-        absolute error (``mae = |y_true - y_pred|``, which feeds
-        ``feature_thresholds_``); ``err__total`` is the SCALED mse per
-        timestep (``_scaled_mse_per_timestep``, which feeds
-        ``aggregate_threshold_``), with the scaler fit on the fold's train
-        targets. Predictions come via ``predict`` + ts join — uniform across
-        expression models and offset/lookback models (whose output is
-        shorter and keyed by target ts)."""
-        fold_model = self._clone_base()
-        fold_model.feature_cols = list(feats)
-        fold_model.target_cols = list(targets)
-        fold_model.fit(
-            train.select(ts_col, *[_q(c).alias(c) for c in feats]),
-            train.select(ts_col, *[F.col(f"`_yt_{t}`").alias(t) for t in targets]),
-        )
-        scaler = self._scaler_cls()(targets).fit(
-            train.select(*[F.col(f"`_yt_{t}`").alias(t) for t in targets])
-        )
-        pred = fold_model.predict(
-            test.select(ts_col, *[_q(c).alias(c) for c in feats]), ts_col, "p__"
-        )
-        joined = test.select(
-            ts_col, *[F.col(f"`_yt_{t}`") for t in targets]
-        ).join(pred, ts_col)
-        err_cols = []
-        scaled_sq = []
-        for t in targets:
-            abs_err = F.abs(F.col(f"`p__{t}`") - F.col(f"`_yt_{t}`"))
-            err_cols.append(abs_err.alias(f"err__{t}"))
-            rng = self._spread(scaler.stats[t])
-            s = abs_err / F.lit(rng)
-            scaled_sq.append(s * s)
-        total = scaled_sq[0]
-        for s in scaled_sq[1:]:
-            total = total + s
-        return joined.select(
-            ts_col, *err_cols, (total / F.lit(float(len(targets)))).alias("err__total")
-        )
-
     def cross_validate(
         self, X: DataFrame, y: DataFrame, n_splits: int = 3, ts_col: str = "ts"
     ) -> "DiffBasedAnomalyDetector":
         """TimeSeriesSplit fold fits; thresholds from the LAST fold only
         (the fold-fused routine of ``ml.cv`` that the builder runs too)."""
-        from gordo_spark.ml.cv import TimeSeriesCV, numbered, score_model
+        from gordo_spark.ml.cv import FoldCV, Folds, cached, score_model, with_segments
 
         targets = self.base.target_cols or [c for c in y.columns if c != ts_col]
         feats = self.base.feature_cols or [c for c in X.columns if c != ts_col]
-        with numbered(with_targets(X, y, targets, ts_col), n_splits, ts_col) as data:
-            cv = TimeSeriesCV(self, data, feats, targets, n_splits, ts_col)
+        frame = with_segments(with_targets(X, y, targets, ts_col), n_splits, ts_col)
+        with cached(frame) as data:
+            cv = FoldCV(self, data, feats, targets, Folds.timeseries(n_splits), ts_col)
             score_model(cv, detector=self)
         return self
 
@@ -404,8 +357,11 @@ class DiffBasedAnomalyDetector:
 @register_model("DiffBasedKFCVAnomalyDetector")
 class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
     """KFold variant (reference diff.py:566-635): out-of-fold predictions
-    assembled over the WHOLE frame, thresholds = ``threshold_percentile``
-    quantile of the smoothed OOF error (per tag and total).
+    over the WHOLE frame, thresholds = ``threshold_percentile`` quantile of
+    the smoothed OOF error (per tag and total). The folds run on the same
+    engine as TimeSeriesSplit (``ml.cv.FoldCV`` grouped by ``_fold``): one
+    aggregation fits every fold, and the OOF errors are one projection of
+    its predictions.
 
     Fold membership defaults to the sklearn-faithful seeded permutation —
     bit-equal to the reference's ``KFold(5, shuffle=True, random_state=0)``
@@ -458,61 +414,37 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
         self, frame: DataFrame, n_splits: int | None = None, ts_col: str = "ts"
     ) -> "DiffBasedKFCVAnomalyDetector":
         """Thresholds from KFold CV over ``frame``: the base estimator's
-        feature columns plus its targets as ``_yt_<t>`` (``with_targets``)."""
+        feature columns plus its targets as ``_yt_<t>`` (``with_targets``).
+        Every fold fit and its scaler stats come from ``ml.cv.FoldCV``; the
+        out-of-fold errors are one projection of its predictions, smoothed
+        over the whole frame, then the ``threshold_percentile`` quantile
+        (diff.py:617-635)."""
         from pyspark.sql import Window
 
-        from gordo_spark.ml.cv import fold_column
-        from gordo_spark.operators.smoothing import SMOOTHERS
+        from gordo_spark.ml.cv import FoldCV, Folds, cached, detector_errors, fold_column
+        from gordo_spark.operators.smoothing import SMOOTHERS, ewma
 
         k = n_splits or self.n_splits
-        feats, targets = self.base.feature_cols, self.base.target_cols
-        data = fold_column(
-            frame, k, ts_col, membership=self.fold_membership, seed=0
-        ).cache()
-
-        # each fold's errors via the shared predict-join helper (works for
-        # expression models AND offset/lookback models); scaler fit on the
-        # fold's train targets — standard CV hygiene
-        oof_parts = [
-            self._fold_errors(
-                data.filter(F.col("_fold") != f),
-                data.filter(F.col("_fold") == f),
-                targets,
-                feats,
-                ts_col,
-            )
-            for f in range(k)
-        ]
-        oof = oof_parts[0]
-        for p in oof_parts[1:]:
-            oof = oof.unionByName(p)
-
-        # smoothed OOF error -> percentile thresholds (diff.py:617-635)
-        err_names = [f"err__{t}" for t in targets] + ["err__total"]
-        if self.smoothing_method == "ewma":
-            # diff.py:302-308 — ewma is a valid smoothing_method; it has no
-            # bounded-window SQL form, so route through the applyInPandas
-            # EWMA (same path anomaly_frame takes)
-            from gordo_spark.operators.smoothing import ewma as _ewma
-
-            smoothed = _ewma(oof, err_names, span=self.window, ts_col=ts_col).select(
-                *[F.col(f"`smooth_{c}`").alias(c) for c in err_names]
-            )
-        else:
-            smoother = SMOOTHERS[self.smoothing_method]
-            w_ts = Window.partitionBy().orderBy(ts_col)
-            smoothed = oof.select(
-                *[smoother(c, self.window, w_ts).alias(c) for c in err_names]
-            )
-        row = smoothed.agg(
-            *[
-                F.expr(f"percentile(`{c}`, {self.threshold_percentile})").alias(c)
-                for c in err_names
-            ]
-        ).collect()[0]
-        data.unpersist()
-        self.tag_thresholds_ = {t: row[f"err__{t}"] for t in targets}
-        self.total_threshold_ = row["err__total"]
+        targets = self.base.target_cols
+        errs = [f"_e_{t}" for t in targets] + ["_e_total"]
+        with cached(fold_column(frame, k, ts_col, membership=self.fold_membership)) as data:
+            cv = FoldCV(self, data, self.base.feature_cols, targets, Folds.kfold(k), ts_col)
+            oof = cv.predictions().select(ts_col, *detector_errors(cv, self))
+            if self.smoothing_method == "ewma":
+                # no bounded-window SQL form: the applyInPandas EWMA, as in
+                # anomaly_frame (diff.py:302-308)
+                smoothed = ewma(oof, errs, span=self.window, ts_col=ts_col)
+            else:
+                w, smoother = Window.partitionBy().orderBy(ts_col), SMOOTHERS[self.smoothing_method]
+                smoothed = oof.select(
+                    *[smoother(c, self.window, w).alias(f"smooth_{c}") for c in errs]
+                )
+            p = self.threshold_percentile
+            row = smoothed.agg(
+                *[F.percentile(_q(f"smooth_{c}"), p).alias(c) for c in errs]
+            ).collect()[0]
+        self.tag_thresholds_ = {t: row[f"_e_{t}"] for t in targets}
+        self.total_threshold_ = row["_e_total"]
         return self
 
 

@@ -24,7 +24,10 @@ Thresholds (A7/A8): TimeSeriesSplit mode = last CV fold's
 ``rolling(6).min().max()`` of the validation error (diff.py:229-264 — the
 *last* fold, not an aggregate: SURVEY.md §7 hard-parts; computed with the
 fold scores by ``ml.cv.score_model``); KFold mode = 0.99 quantile of the
-smoothed out-of-fold error (diff.py:617-635).
+smoothed out-of-fold error (diff.py:617-635,
+``DiffBasedKFCVAnomalyDetector.kfold_thresholds``). Both modes take their
+validation errors from ``ml.cv.detector_errors`` over the fold engine's
+predictions, with the total error built by ``row_mean_square`` as here.
 
 Everything here is one ``select`` of column expressions over the aligned
 frame — no joins, no UDFs; thresholds are broadcast scalars. At 100 TB this

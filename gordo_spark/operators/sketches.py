@@ -278,6 +278,14 @@ def merged_distinct_estimate(
 _HLL_SCALE = 9007199254740992
 
 
+def _unused(name: str, taken: Sequence[str]) -> str:
+    """``name``, underscore-prefixed until no column in ``taken`` has it
+    (Spark resolves names case-insensitively)."""
+    while name.lower() in {t.lower() for t in taken}:
+        name = "_" + name
+    return name
+
+
 def hll_det_registers(
     df: DataFrame,
     col: str,
@@ -299,32 +307,34 @@ def hll_det_registers(
     group no matter the cardinality.
     """
     gcols = list(group_by)
+    # internal columns, renamed away from any group column
+    h, st, rho_col = (_unused(n, gcols) for n in ("_h", "_st", "rho"))
     # staged projections (r12): the md5 was textually inlined ~6x (idx +
     # every reference through `stripped`), and the CASE ladder re-ran it
     # per branch test per row. Stage md5 once, then the stripped slice
     # once, then the rho algebra over those columns — CollapseProject
     # keeps non-cheap producers split, so each stage evaluates once per
     # row inside one codegen stage. Identical string algebra per value.
-    d0 = df.select(*gcols, F.md5(F.col(col).cast("string")).alias("_h"))
+    d0 = df.select(*gcols, F.md5(F.col(col).cast("string")).alias(h))
     d1 = d0.select(
         *gcols,
-        F.conv(F.substring(F.col("_h"), 1, 2), 16, 10)
+        F.conv(F.substring(F.col(h), 1, 2), 16, 10)
         .cast("int")
         .alias("idx"),
-        F.expr("trim(LEADING '0' FROM substring(_h, 3, 13))").alias("_st"),
+        F.expr(f"trim(LEADING '0' FROM substring(`{h}`, 3, 13))").alias(st),
     )
-    first = F.substring(F.col("_st"), 1, 1)
+    first = F.substring(F.col(st), 1, 1)
     extra = (
         F.when(first == "1", 3)
         .when(first.isin("2", "3"), 2)
         .when(first.isin("4", "5", "6", "7"), 1)
         .otherwise(0)
     )
-    rho = F.when(F.length(F.col("_st")) == 0, F.lit(53)).otherwise(
-        (F.lit(13) - F.length(F.col("_st"))) * 4 + extra + 1
+    rho = F.when(F.length(F.col(st)) == 0, F.lit(53)).otherwise(
+        (F.lit(13) - F.length(F.col(st))) * 4 + extra + 1
     )
-    d = d1.select(*gcols, "idx", rho.alias("rho"))
-    return d.groupBy(*gcols, "idx").agg(F.max("rho").alias("m"))
+    d = d1.select(*gcols, "idx", rho.alias(rho_col))
+    return d.groupBy(*gcols, "idx").agg(F.max(rho_col).alias("m"))
 
 
 def hll_det_estimate(

@@ -9,6 +9,8 @@ import pytest
 
 from gordo_spark.builder import ModelBuilder, build_machines, dataset_from_dict
 from gordo_spark.config import Machine
+from gordo_spark.ml.cv import sklearn_kfold_membership
+from gordo_spark.ml.models import model_from_definition
 from gordo_spark.plans.dataset import TimeSeriesDataset
 from gordo_spark.sources.store import DiskRegistry, ModelStore
 
@@ -396,17 +398,99 @@ def test_failed_build_releases_cached_frames(spark, xy_wide):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def _job_count(spark, group, fn):
+    """Spark jobs that ``fn()`` launches, counted through the job group
+    ``group`` (one name per count: the tracker keeps a group's old jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_solo_build_job_budget(spark, xy_wide):
     """A DiffBasedAnomalyDetector(LinearModel) machine: one aggregation fits
     every fold, one more scores them and takes the thresholds."""
     wide, _ = xy_wide
-    sc = spark.sparkContext
-    sc.setJobGroup("job-budget", "solo build")
-    try:
-        ModelBuilder(_xy_machine(3), wide_frame=wide).build(spark)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    build = ModelBuilder(_xy_machine(3), wide_frame=wide).build
+    jobs = _job_count(spark, "solo-build", lambda: build(spark))
     # 3 jobs for the fit aggregation (input, numbering, grouping), 1 to
     # score; features and targets are one projection, so no X/y join
-    assert len(sc.statusTracker().getJobIdsForGroup("job-budget")) <= 4
+    assert jobs <= 4
+
+
+# --------------------------------------------------------------------------
+# KFold CV (DiffBasedKFCVAnomalyDetector) on the same fold engine
+
+
+def _kfcv(membership="shuffle", scaler="minmax"):
+    return {
+        "kind": "DiffBasedKFCVAnomalyDetector", "window": 6, "n_splits": 3,
+        "scaler": scaler, "fold_membership": membership,
+    }
+
+
+def _kfcv_machine(membership="shuffle", scaler="minmax"):
+    return dataclasses.replace(_xy_machine(3), model=_kfcv(membership, scaler))
+
+
+def _kfcv_oracle(pdf, k, membership, scaler):
+    """sklearn KFold + lstsq fold fits + diff.py KFCV thresholds: smm
+    smoothing of the out-of-fold errors, then their 0.99 quantile."""
+    n = len(pdf)
+    fold = sklearn_kfold_membership(n, k) if membership == "shuffle" else np.arange(n) % k
+    A = np.column_stack([np.ones(n), pdf["a"], pdf["b"]])
+    Y = pdf[["t1", "t2"]].to_numpy()
+    err, total = np.empty_like(Y), np.empty(n)
+    for f in range(k):
+        tr, te = fold != f, fold == f
+        coef, *_ = np.linalg.lstsq(A[tr], Y[tr], rcond=None)
+        err[te] = np.abs(A[te] @ coef - Y[te])
+        _, spread = _center_spread(scaler, Y[tr])
+        total[te] = ((err[te] / spread) ** 2).mean(axis=1)
+    th = lambda v: pd.Series(v).rolling(6, min_periods=6).median().quantile(0.99)  # noqa: E731
+    return [th(err[:, 0]), th(err[:, 1])], th(total)
+
+
+@pytest.mark.parametrize("scaler", ["minmax", "robust"])
+@pytest.mark.parametrize("membership", ["shuffle", "modulo"])
+def test_kfcv_thresholds_match_numpy_oracle(spark, xy_wide, membership, scaler):
+    wide, pdf = xy_wide
+    tags, total = _kfcv_oracle(pdf, 3, membership, scaler)
+    close = dict(rtol=1e-9, atol=0)
+    th = ModelBuilder(_kfcv_machine(membership, scaler), wide_frame=wide).build(
+        spark
+    ).metadata["build-metadata"]["model"]["thresholds"]
+    np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], tags, **close)
+    np.testing.assert_allclose(th["total"], total, **close)
+
+    det = model_from_definition(_kfcv(membership, scaler))
+    det.cross_validate(wide.select("ts", "a", "b"), wide.select("ts", "t1", "t2"))
+    np.testing.assert_allclose([det.tag_thresholds_["t1"], det.tag_thresholds_["t2"]], tags, **close)
+    np.testing.assert_allclose(det.total_threshold_, total, **close)
+
+
+def test_kfcv_too_few_rows_releases_cached_frames(spark, xy_wide):
+    wide, _ = xy_wide
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    small = wide.limit(2)
+    det = model_from_definition(_kfcv())
+    with pytest.raises(ValueError, match="too few rows"):
+        det.cross_validate(small.select("ts", "a", "b"), small.select("ts", "t1", "t2"))
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_kfcv_build_job_budget(spark, xy_wide):
+    """KFold thresholds run on the fold engine: one aggregation fits every
+    fold, one more takes the smoothed out-of-fold quantiles."""
+    wide, _ = xy_wide
+    build = ModelBuilder(_kfcv_machine(), wide_frame=wide).build
+    jobs = _job_count(spark, "kfcv-build", lambda: build(spark))
+    # 4 jobs for the TimeSeriesSplit fit and scores, 1 to count the rows
+    # for the sklearn shuffle, 2 for the KFold fit aggregation, 2 for the
+    # threshold quantiles
+    assert jobs <= 9

@@ -411,6 +411,19 @@ def test_hll_det_small_range_linear_counting(spark):
     assert abs(est - 10) <= 1  # linear counting is near-exact here
 
 
+@pytest.mark.parametrize("name", ["_h", "_st"])
+def test_hll_det_registers_group_column_named_like_internals(spark, name):
+    from gordo_spark.operators.sketches import hll_det_registers
+
+    df = spark.range(300).select(
+        (F.col("id") % 3).alias("g"), F.col("id").cast("string").alias("v")
+    )
+    key = ["g", "idx", "m"]
+    want = sorted(tuple(r) for r in hll_det_registers(df, "v", ["g"]).select(*key).collect())
+    got = hll_det_registers(df.withColumnRenamed("g", name), "v", [name])
+    assert sorted(tuple(r) for r in got.select(F.col(name).alias("g"), "idx", "m").collect()) == want
+
+
 # ----------------------------------------------------------- attribution
 
 
