@@ -11,19 +11,20 @@ frame is one Catalyst DAG, whether the machine scans solo or reads its share
 of a shared scan. Features and targets are one projection of that frame,
 never split into X and y and joined back, and every row is numbered with its
 TimeSeriesSplit segment, so each fold is a filter over ONE cached frame
-(``ml.cv``). For models with sufficient statistics (LinearModel, RidgeModel)
-one aggregation grouped by segment yields every fold fit, the final fit,
-the MinMax scaler stats, the fold metadata and the row count; one more
-scores every fold and takes the anomaly thresholds of the last. A
-DiffBasedAnomalyDetector(LinearModel) machine is 2 driver actions: 4 Spark
-jobs over an in-memory frame, 9 over a parquet-backed one. A KFold
-detector (DiffBasedKFCVAnomalyDetector) adds its KFold thresholds from the
-same fold engine grouped by fold: 9 jobs in all in memory (7 with modulo
-fold membership, which needs no row count). Nothing but configs, Gram
-matrices, scores and thresholds
-ever reaches the driver, so the same builder drives a 1000-executor
-cluster unchanged: thousands of machines = a driver loop or thread pool
-submitting concurrent jobs (SURVEY.md §3.3), not one pod per machine.
+(``ml.cv``). One aggregation grouped by segment yields the fold metadata,
+the row count, the MinMax scaler stats and, for LinearModel / RidgeModel,
+every fit; other bases fit every fold in one more pass; one more scores
+every fold and takes the anomaly thresholds of the last. Spark jobs do not
+grow with the folds: an in-memory DiffBasedAnomalyDetector machine takes 4
+with a LinearModel base (9 parquet-backed), 6 with a LaggedLinearModel or
+PythonEstimatorModel base. A KFold detector (DiffBasedKFCVAnomalyDetector)
+adds KFold thresholds over its own ``n_splits`` from the same fold engine
+grouped by fold: 8 jobs in all (7 with modulo fold membership), 11 Lagged.
+Nothing but configs, Gram matrices, fitted estimators, scores and
+thresholds ever reaches the driver, so the same builder drives a
+1000-executor cluster unchanged: thousands of machines = a driver loop or
+thread pool submitting concurrent jobs (SURVEY.md §3.3), not one pod per
+machine.
 """
 
 from __future__ import annotations
@@ -140,9 +141,9 @@ class ModelBuilder:
                 cv, evaluation.get("scoring_scaler"), model if tss else None
             )
             if kfold:
-                # KFold thresholds come from the same fold engine over
-                # the fold groups of fold_column
-                model.kfold_thresholds(data, n_splits)
+                # KFold thresholds, over the model's own n_splits, come
+                # from the same fold engine over the groups of fold_column
+                model.kfold_thresholds(data, row_count=cv.row_count)
             cv_duration = time.time() - t1
             if cv_mode != "cross_val_only":
                 cv.refit()
@@ -228,16 +229,14 @@ def build_machines(
     ``share_scans=True`` groups machines whose dataset plans share a prefix
     (provider/resolution/aggregation/interpolation) and runs ONE
     scan+resample per group instead of one per machine (plans.multi) —
-    at lake scale that is N-machines-1-scan instead of N scans."""
+    at lake scale that is N-machines-1-scan instead of N scans; the shared
+    scans stay cached until the builds return or raise."""
     from concurrent.futures import ThreadPoolExecutor
 
-    wides: dict[str, DataFrame] = {}
-    if share_scans:
-        from gordo_spark.plans.multi import shared_wide_frames
+    from gordo_spark.plans import multi
 
-        wides = shared_wide_frames(
-            spark, {m.name: dataset_from_dict(m.dataset) for m in machines}
-        )
+    datasets = {m.name: dataset_from_dict(m.dataset) for m in machines}
+    wides = multi.shared_wide_frames(spark, datasets) if share_scans else multi.WideFrames()
 
     def one(machine: Machine) -> tuple[str, BuildResult]:
         builder = ModelBuilder(
@@ -245,5 +244,8 @@ def build_machines(
         )
         return machine.name, builder.build(spark)
 
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        return dict(pool.map(one, machines))
+    try:
+        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+            return dict(pool.map(one, machines))
+    finally:
+        wides.release()

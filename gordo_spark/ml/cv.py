@@ -13,17 +13,17 @@ TimeSeriesSplit (``with_segments``; fold ``i`` trains on segments ``0..i``
 and tests on ``i + 1``) or ``_fold`` for KFold (``fold_column``; fold ``f``
 trains on every other group and tests on ``f``), so every fold is a
 predicate over one frame cached for the CV (``cached``). ``Folds`` names
-each fold's train groups and test group. ``FoldCV`` then gets the fold
-metadata, the MinMax scaler stats and — for models with sufficient
-statistics (``LinearModel`` / ``RidgeModel``) — every fold fit and the final
-fit from ONE aggregation grouped by the fold column: per-group Gram blocks
-summed on the driver over each fit's groups. Models without sufficient
-statistics fit per fold on the train filters. Robust-scaler quantiles do not
-combine across groups, so they take one pass of their own, for every fold at
-once. ``score_model`` scores every fold (and takes the anomaly thresholds of
-the last) in one more aggregation; the KFold detector instead takes a
-quantile of the smoothed out-of-fold errors. Both read the same error
-columns (``detector_errors``).
+each fold's train groups and test group. ``FoldCV`` gets the fold metadata,
+the MinMax scaler stats and the base model's ``group_aggs`` from ONE
+aggregation grouped by the fold column; the base model then fits every fold
+(``fit_folds``: ``LinearModel`` / ``RidgeModel`` sum per-group Gram blocks,
+other bases train on the rows exploded into their fits) and predicts every
+fold's test rows (``predict_folds``) at once, with no Spark work per fold.
+Robust-scaler quantiles do not combine across groups, so they take one pass
+of their own, for every fold at once. ``score_model`` scores every fold (and
+takes the anomaly thresholds of the last) in one more aggregation; the KFold
+detector instead takes a quantile of the smoothed out-of-fold errors. Both
+read the same error columns (``detector_errors``).
 
 Shuffled KFold membership (default) reproduces sklearn
 ``KFold(n_splits, shuffle=True, random_state=seed)`` EXACTLY: sklearn
@@ -41,20 +41,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
-from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from gordo_spark.ml.models import (
-    DiffBasedAnomalyDetector,
-    LinearModel,
-    _q,
-    gram_aggs,
-    gram_blocks,
-    model_from_definition,
-)
+from gordo_spark.ml.models import FIT, DiffBasedAnomalyDetector, _q, model_from_definition
 from gordo_spark.ml.scalers import center_spread
 from gordo_spark.operators.anomaly import row_mean_square
 from gordo_spark.operators.smoothing import rolling_min
@@ -138,19 +130,21 @@ def fold_column(
     membership: str = "shuffle",
     seed: int = 0,
     col: str = FOLD,
+    row_count: int | None = None,
 ) -> DataFrame:
     """Append a fold-membership column.
 
     ``membership="shuffle"``: sklearn-faithful seeded permutation (driver
     computes the n-row (rn, fold) map, broadcast-joined in — frames are
-    bounded per machine). ``membership="modulo"``: ``row_number % k``,
+    bounded per machine; ``row_count`` spares the count when the caller
+    knows n). ``membership="modulo"``: ``row_number % k``,
     engine-portable (SQL-oracle-reproducible)."""
     rn = _with_rn(df, ts_col)
     if membership == "modulo":
         return rn.withColumn(col, (F.col("_rn") % n_splits)).drop("_rn")
     if membership != "shuffle":
         raise ValueError(f"unknown membership {membership!r} (shuffle|modulo)")
-    n = df.count()
+    n = df.count() if row_count is None else row_count
     fold_of = sklearn_kfold_membership(n, n_splits, seed)
     mapping = df.sparkSession.createDataFrame(
         [(int(i), int(f)) for i, f in enumerate(fold_of)],
@@ -220,10 +214,10 @@ class FoldCV:
 
     One aggregation grouped by that column gives ``folds`` (train/test
     start/end/count per fold), ``row_count``, the per-group MinMax stats
-    and, when the model has sufficient statistics, per-group Gram blocks;
-    each fold fit and the final fit sum the blocks of their groups. Other
-    models fit each fold on its train filter. ``models[i]`` is fold i's
-    fitted clone of the base estimator."""
+    and whatever per-group aggregates the base model asks for
+    (``group_aggs``). The base model then fits every fold at once
+    (``fit_folds``) and predicts every fold's test rows at once
+    (``predict_folds``); ``models[i]`` is fold i's fitted clone of it."""
 
     def __init__(
         self,
@@ -235,24 +229,23 @@ class FoldCV:
         ts_col: str = "ts",
     ):
         self.model, self.data, self.spec = model, data, folds
+        self.base = getattr(model, "base", model)
         self.feats, self.targets = list(feats), list(targets)
         self.n_splits, self.ts_col = len(folds.test), ts_col
-        base = getattr(model, "base", model)
+        ys = [f"_yt_{t}" for t in self.targets]
         aggs = [
             F.count(F.lit(1)).alias("_n"),
             F.min(ts_col).alias("_t0"),
             F.max(ts_col).alias("_t1"),
         ]
-        for j, t in enumerate(self.targets):
-            aggs += [F.min(_q(f"_yt_{t}")).alias(f"_mn_{j}"), F.max(_q(f"_yt_{t}")).alias(f"_mx_{j}")]
-        gram = isinstance(base, LinearModel)
-        if gram:
-            aggs += gram_aggs(self.feats, [f"_yt_{t}" for t in self.targets])
+        for j, y in enumerate(ys):
+            aggs += [F.min(_q(y)).alias(f"_mn_{j}"), F.max(_q(y)).alias(f"_mx_{j}")]
+        aggs += self.base.group_aggs(self.feats, ys)
         rows = {r[folds.col]: r for r in data.groupBy(folds.col).agg(*aggs).collect()}
         self.row_count = sum(r["_n"] for r in rows.values())
         if any(g not in rows for g in folds.test):
             raise ValueError(f"too few rows ({self.row_count}) for {self.n_splits} splits")
-        self._groups = rows
+        self.groups = rows
         # train groups per fold, then every group for the final fit
         self._train = [*folds.train, tuple(sorted(rows))]
         self._robust: list[dict] | None = None
@@ -269,38 +262,22 @@ class FoldCV:
                     "test_count": test["_n"],
                 }
             )
-        # Gram blocks summed per fit — never total minus a block, whose
-        # subtraction cancels
-        self._gram = None
-        if gram:
-            p, m = len(self.feats), len(self.targets)
-            blocks = {g: gram_blocks(r, p, m) for g, r in rows.items()}
-            self._gram = [
-                reduce(lambda a, b: (a[0] + b[0], a[1] + b[1]), [blocks[g] for g in train])
-                for train in self._train
-            ]
-        self.models = []
-        for i in range(self.n_splits):
-            m = model_from_definition(base.into_definition())
-            m.feature_cols, m.target_cols = list(self.feats), list(self.targets)
-            if gram:
-                m.coef_ = m._solve(*self._gram[i])
-            else:
-                m.fit(*self.xy(i))
-            self.models.append(m)
+        clone = {**self.base.into_definition(), "feature_cols": self.feats, "target_cols": self.targets}
+        self.models = [model_from_definition(clone) for _ in folds.test]
+        self.base.fit_folds(self, folds.train, self.models)
 
     def _in(self, groups: Sequence[int]) -> Column:
         return F.col(self.spec.col).isin(*groups)
 
-    def xy(self, fold: int | None = None) -> tuple[DataFrame, DataFrame]:
-        """(X, y) of fold ``fold``'s train rows (every row when None),
-        targets under their own names."""
-        d = self.data if fold is None else self.data.filter(self._in(self._train[fold]))
-        ts = self.ts_col
-        return (
-            d.select(ts, *[_q(c).alias(c) for c in self.feats]),
-            d.select(ts, *[_q(f"_yt_{t}").alias(t) for t in self.targets]),
-        )
+    def exploded(self, fits: Sequence[tuple[int, ...]]) -> DataFrame:
+        """Every row once per fit that trains on it, the fit's index into
+        ``fits`` (each fit's groups) in ``FIT``."""
+        ids = F.array(*[F.when(self._in(f), F.lit(i)) for i, f in enumerate(fits)])
+        return self.data.select("*", F.explode(F.array_compact(ids)).alias(FIT))
+
+    def test_rows(self) -> DataFrame:
+        """The rows some fold tests on."""
+        return self.data.filter(self._in(self.spec.test))
 
     def by_fold(self, values: Sequence[Column]) -> Column:
         """``values[i]`` on the test rows of fold i."""
@@ -310,13 +287,22 @@ class FoldCV:
             out = out.when(col == g, v)
         return out
 
+    def predicted(self, frame: DataFrame, models: Sequence) -> DataFrame:
+        """(ts, <fold col>, _yt_<t>..., _p_<t>...) over test rows
+        ``frame``, each row predicted by its fold's expression model
+        (``models[i].predict_exprs``) in one projection."""
+        exprs = [m.predict_exprs("_p_") for m in models]
+        ys = [_q(f"_yt_{t}") for t in self.targets]
+        ps = [self.by_fold([e[j] for e in exprs]).alias(f"_p_{t}") for j, t in enumerate(self.targets)]
+        return frame.select(self.ts_col, self.spec.col, *ys, *ps)
+
     def stats(self, kind: str, fold: int) -> dict[str, tuple[float, float]]:
         """Scaler stats of fold ``fold``'s train targets (every row when
         ``fold == n_splits``), in the shape of ``MinMaxScalerExpr`` /
         ``RobustScalerExpr`` ``.stats``. Robust quantiles come from one
         extra pass that serves every fold."""
         if kind == "minmax":
-            rows = [self._groups[g] for g in self._train[fold]]
+            rows = [self.groups[g] for g in self._train[fold]]
             return {
                 t: (min(r[f"_mn_{j}"] for r in rows), max(r[f"_mx_{j}"] for r in rows))
                 for j, t in enumerate(self.targets)
@@ -339,40 +325,18 @@ class FoldCV:
 
     def predictions(self) -> DataFrame:
         """(ts, <fold col>, _yt_<t>..., _p_<t>...): each fold's predictions
-        on its own test rows. Expression models predict in one projection;
-        others (offset/lookback, Python estimators) predict each fold's
-        test rows and join on ts, so their output may be shorter."""
-        ts, col, ys = self.ts_col, self.spec.col, [_q(f"_yt_{t}") for t in self.targets]
-        if all(hasattr(m, "predict_exprs") for m in self.models):
-            exprs = [m.predict_exprs("_p_") for m in self.models]
-            return self.data.filter(self._in(self.spec.test)).select(
-                ts, col, *ys,
-                *[
-                    self.by_fold([e[j] for e in exprs]).alias(f"_p_{t}")
-                    for j, t in enumerate(self.targets)
-                ],
-            )
-        parts = []
-        for m, g in zip(self.models, self.spec.test):
-            test = self.data.filter(F.col(col) == g)
-            raw = m.predict(test.select(ts, *[_q(c).alias(c) for c in self.feats]), ts, "_p_")
-            parts.append(test.select(ts, col, *ys).join(raw, ts))
-        return reduce(DataFrame.unionByName, parts)
+        on its own test rows (fewer rows for offset models)."""
+        return self.base.predict_folds(self, self.models)
 
     def refit(self) -> None:
-        """Final fit of the model on every row: from the summed Gram blocks
-        when the model has sufficient statistics, else ``model.fit``."""
-        model = self.model
-        if self._gram is None:
-            model.fit(*self.xy())
-            return
-        base = getattr(model, "base", model)
+        """Final fit of the base model on every row, in place; a detector's
+        scaler takes every row's target stats (diff.py:166-174)."""
+        base = self.base
         base.feature_cols, base.target_cols = list(self.feats), list(self.targets)
-        base.coef_ = base._solve(*self._gram[-1])
-        if isinstance(model, DiffBasedAnomalyDetector):
-            # scaler on y after training (diff.py:166-174)
-            model.scaler = model._scaler_cls()(self.targets)
-            model.scaler.stats = self.stats(model.scaler_kind, self.n_splits)
+        base.fit_folds(self, [self._train[-1]], [base])
+        if base is not self.model:
+            self.model.scaler = self.model._scaler_cls()(self.targets)
+            self.model.scaler.stats = self.stats(self.model.scaler_kind, self.n_splits)
 
 
 def detector_errors(cv: FoldCV, detector: DiffBasedAnomalyDetector) -> list[Column]:

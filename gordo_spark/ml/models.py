@@ -25,14 +25,16 @@ registry (gordo/machine/model/factories/*). Here:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from gordo_spark.ml.scalers import MinMaxScalerExpr, center_spread
 from gordo_spark.operators.anomaly import anomaly_frame
 
 _MODEL_REGISTRY: dict[str, type] = {}
+FIT = "_fit"  # the fit a row trains, where several models fit at once
 
 
 def register_model(kind: str):
@@ -159,6 +161,21 @@ class LinearModel:
 
     def predict(self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__") -> DataFrame:
         return X.select(ts_col, *self.predict_exprs(prefix))
+
+    def group_aggs(self, feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
+        return gram_aggs(feats, ys)
+
+    def fit_folds(self, cv, fits: Sequence[tuple[int, ...]], models: Sequence) -> None:
+        """``models[i]`` fit on the Gram blocks of groups ``fits[i]``,
+        summed in group order (never total minus a block: it cancels)."""
+        p, m = len(cv.feats), len(cv.targets)
+        blocks = {g: gram_blocks(r, p, m) for g, r in cv.groups.items()}
+        for model, fit in zip(models, fits):
+            xtx, xty = reduce(lambda a, b: (a[0] + b[0], a[1] + b[1]), [blocks[g] for g in fit])
+            model.coef_ = model._solve(xtx, xty)
+
+    def predict_folds(self, cv, models: Sequence) -> DataFrame:
+        return cv.predicted(cv.test_rows(), models)
 
     @property
     def offset(self) -> int:
@@ -314,31 +331,24 @@ class DiffBasedAnomalyDetector:
         # the error's truth side is ALWAYS the caller's y (diff.py:356-359)
         # — carried as _y__<t> so a y differing from the X-side tag columns
         # is honored; model_input__ stays the X side
-        ycols = [F.col(f"`_yt_{t}`").alias(f"_y__{t}") for t in targets]
+        cols = [
+            ts_col,
+            *[_q(c).alias(c) for c in self.base.feature_cols],
+            *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
+            *[F.col(f"`_yt_{t}`").alias(f"_y__{t}") for t in targets],
+        ]
         if getattr(self.base, "offset", 0) == 0 and hasattr(self.base, "predict_exprs"):
             # offset-0 expression-model fast path: prediction is a pure
             # column expression, no join needed (J6 — column-block append as
             # one select). Models without predict_exprs (PythonEstimatorModel
             # and friends) take the predict+ts-join path below even at
             # offset 0.
-            aligned = xy.select(
-                ts_col,
-                *[_q(c).alias(c) for c in self.base.feature_cols],
-                *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
-                *ycols,
-                *self.base.predict_exprs(),
-            )
+            aligned = xy.select(*cols, *self.base.predict_exprs())
         else:
             # lookback models emit len(X) - offset rows keyed by target ts;
             # tail alignment is an inner join on ts, never positional
             # arithmetic (J5, gordo/machine/model/utils.py:85-98 semantics)
-            pred = self.base.predict(X, ts_col)
-            aligned = xy.select(
-                ts_col,
-                *[_q(c).alias(c) for c in self.base.feature_cols],
-                *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
-                *ycols,
-            ).join(pred, ts_col)
+            aligned = xy.select(*cols).join(self.base.predict(X, ts_col), ts_col)
         return anomaly_frame(
             aligned,
             targets,
@@ -403,31 +413,32 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
     def cross_validate(
         self, X: DataFrame, y: DataFrame, n_splits: int | None = None, ts_col: str = "ts"
     ) -> "DiffBasedKFCVAnomalyDetector":
+        """KFold thresholds over X and y, over the model's own ``n_splits``."""
+        if n_splits not in (None, self.n_splits):
+            raise ValueError(f"n_splits={n_splits} differs from the model's {self.n_splits}")
         base = self.base
         base.feature_cols = base.feature_cols or [c for c in X.columns if c != ts_col]
         base.target_cols = base.target_cols or [c for c in y.columns if c != ts_col]
-        return self.kfold_thresholds(
-            with_targets(X, y, base.target_cols, ts_col), n_splits, ts_col
-        )
+        return self.kfold_thresholds(with_targets(X, y, base.target_cols, ts_col), ts_col)
 
     def kfold_thresholds(
-        self, frame: DataFrame, n_splits: int | None = None, ts_col: str = "ts"
+        self, frame: DataFrame, ts_col: str = "ts", row_count: int | None = None
     ) -> "DiffBasedKFCVAnomalyDetector":
-        """Thresholds from KFold CV over ``frame``: the base estimator's
-        feature columns plus its targets as ``_yt_<t>`` (``with_targets``).
+        """Thresholds from ``n_splits``-fold CV over ``frame``: the base
+        estimator's feature columns plus its targets as ``_yt_<t>``
+        (``with_targets``), ``row_count`` rows when the caller knows it.
         Every fold fit and its scaler stats come from ``ml.cv.FoldCV``; the
         out-of-fold errors are one projection of its predictions, smoothed
         over the whole frame, then the ``threshold_percentile`` quantile
         (diff.py:617-635)."""
-        from pyspark.sql import Window
-
         from gordo_spark.ml.cv import FoldCV, Folds, cached, detector_errors, fold_column
         from gordo_spark.operators.smoothing import SMOOTHERS, ewma
 
-        k = n_splits or self.n_splits
+        k = self.n_splits
         targets = self.base.target_cols
         errs = [f"_e_{t}" for t in targets] + ["_e_total"]
-        with cached(fold_column(frame, k, ts_col, membership=self.fold_membership)) as data:
+        folded = fold_column(frame, k, ts_col, membership=self.fold_membership, row_count=row_count)
+        with cached(folded) as data:
             cv = FoldCV(self, data, self.base.feature_cols, targets, Folds.kfold(k), ts_col)
             oof = cv.predictions().select(ts_col, *detector_errors(cv, self))
             if self.smoothing_method == "ewma":
@@ -448,8 +459,26 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
         return self
 
 
+class RowFitModel:
+    """ml.cv.FoldCV's fold protocol without per-group statistics: ``_fit_rows``
+    fits ``models[i]`` on the rows whose ``FIT`` is i, every fit in one pass."""
+
+    def group_aggs(self, feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
+        return []
+
+    def fit_folds(self, cv, fits: Sequence[tuple[int, ...]], models: Sequence) -> None:
+        self._fit_rows(cv.exploded(fits), cv.feats, cv.targets, models, cv.ts_col)
+
+    def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts"):
+        self.feature_cols = self.feature_cols or [c for c in X.columns if c != ts_col]
+        self.target_cols = self.target_cols or [c for c in y.columns if c != ts_col]
+        frame = with_targets(X, y, self.target_cols, ts_col).withColumn(FIT, F.lit(0))
+        self._fit_rows(frame, self.feature_cols, self.target_cols, [self], ts_col)
+        return self
+
+
 @register_model("LaggedLinearModel")
-class LaggedLinearModel:
+class LaggedLinearModel(RowFitModel):
     """Autoregressive lookback model — the LSTM-shaped flow with exact math.
 
     The reference's LSTM consumes sliding windows of ``lookback_window``
@@ -493,48 +522,39 @@ class LaggedLinearModel:
             "target_cols": self.target_cols,
         }
 
-    def _lag_names(self):
-        return [f"{c}__lag{s}" for c in self.feature_cols for s in range(self.lookback)]
-
-    def _lagged(self, X: DataFrame, ts_col: str) -> DataFrame:
-        """(ts, <c>__lag{0..L-1}...) — rows with a full window only."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy().orderBy(ts_col)
-        out = X.select(
-            ts_col,
-            F.row_number().over(w).alias("_rn"),
-            *[
-                F.lag(_q(c), s).over(w).alias(f"{c}__lag{s}")
-                for c in self.feature_cols
-                for s in range(self.lookback)
-            ],
+    def _design(
+        self, frame: DataFrame, feats: Sequence[str], part: str | None, ts_col: str
+    ) -> DataFrame:
+        """``frame`` plus the lag design keyed at the TARGET row: ``<c>__lag<s>``
+        is ``c`` from ``s + lookahead`` rows earlier within the row's ``part``
+        partition in ts order; rows without a full window are dropped."""
+        w = Window.partitionBy(*([part] if part else [])).orderBy(ts_col)
+        lags = [
+            F.lag(_q(c), s + self.lookahead).over(w).alias(f"{c}__lag{s}")
+            for c in feats
+            for s in range(self.lookback)
+        ]
+        return (
+            frame.select("*", F.row_number().over(w).alias("_rn"), *lags)
+            .filter(F.col("_rn") > self.offset)
+            .drop("_rn")
         )
-        return out.filter(F.col("_rn") >= self.lookback).drop("_rn")
 
-    def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts") -> "LaggedLinearModel":
-        from pyspark.sql import Window
-
-        self.feature_cols = self.feature_cols or [c for c in X.columns if c != ts_col]
-        self.target_cols = self.target_cols or [c for c in y.columns if c != ts_col]
-        w = Window.partitionBy().orderBy(ts_col)
-        lagged = self._lagged(X, ts_col)
-        led = y.select(
-            ts_col,
-            *[
-                F.lead(_q(t), self.lookahead).over(w).alias(f"_led_{t}")
-                for t in self.target_cols
-            ],
-        )
-        frame = lagged.join(led, ts_col).dropna()
-        self._ols = LinearModel(self._lag_names(), self.target_cols)
-        self._ols.fit(
-            frame.select(ts_col, *[F.col(n) for n in self._lag_names()]),
-            frame.select(
-                ts_col, *[F.col(f"`_led_{t}`").alias(t) for t in self.target_cols]
-            ),
-        )
-        return self
+    def _fit_rows(
+        self, frame: DataFrame, feats: Sequence[str], targets: Sequence[str], models: Sequence,
+        ts_col: str,
+    ) -> None:
+        """OLS over each fit's lag design, dropping rows with a null or NaN
+        in the design or target; every fit from one aggregation by ``FIT``."""
+        names = [f"{c}__lag{s}" for c in feats for s in range(self.lookback)]
+        ys = [f"_yt_{t}" for t in targets]
+        design = self._design(frame, feats, FIT, ts_col).select(
+            FIT, *[_q(c) for c in names + ys]
+        ).dropna()
+        rows = {r[FIT]: r for r in design.groupBy(FIT).agg(*gram_aggs(names, ys)).collect()}
+        for i, m in enumerate(models):
+            m._ols = LinearModel(names, targets)
+            m._ols.coef_ = m._ols._solve(*gram_blocks(rows[i], len(names), len(ys)))
 
     def predict(
         self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__"
@@ -542,13 +562,9 @@ class LaggedLinearModel:
         """Output keyed by the TARGET timestamp (= window end + lookahead),
         so downstream alignment is a plain ts join; emits exactly
         len(X) - offset rows."""
-        from pyspark.sql import Window
+        design = self._design(X, self.feature_cols, None, ts_col)
+        return design.select(ts_col, *self._ols.predict_exprs(prefix))
 
-        w = Window.partitionBy().orderBy(ts_col)
-        lagged = self._lagged(X, ts_col).withColumn(
-            "_target_ts", F.lead(F.col(ts_col), self.lookahead).over(w)
-        )
-        return (
-            lagged.filter(F.col("_target_ts").isNotNull())
-            .select(F.col("_target_ts").alias(ts_col), *self._ols.predict_exprs(prefix))
-        )
+    def predict_folds(self, cv, models: Sequence) -> DataFrame:
+        design = self._design(cv.test_rows(), cv.feats, cv.spec.col, cv.ts_col)
+        return cv.predicted(design, [m._ols for m in models])

@@ -782,26 +782,6 @@ _POISSON1_CDF = (
 )
 
 
-def _md5_lane_u16(hex_col: str, lane: int) -> Column:
-    """16-bit uniform from lane ``lane`` (0..7) of a 32-hex md5 column:
-    u = (h16 + 0.5) / 2^16. An md5 is 128 bits and a Poisson(1) inversion
-    needs far fewer than 16 (the CDF has 7 cells; the coarsest cell edge
-    is ~6e-4 wide, ~39 of the 65536 lattice points), so EIGHT replicates
-    share one digest — half the md5 budget of the 8-hex/4-lane harvest."""
-    h = F.conv(F.substring(F.col(hex_col), lane * 4 + 1, 4), 16, 10).cast(
-        "long"
-    )
-    return (h.cast("double") + 0.5) / 65536.0
-
-
-def _poisson1_w(u: Column) -> Column:
-    """Invert the Poisson(1) CDF at uniform ``u`` (capped at 6)."""
-    w = F.lit(len(_POISSON1_CDF))
-    for k in range(len(_POISSON1_CDF) - 1, -1, -1):
-        w = F.when(u < F.lit(_POISSON1_CDF[k]), F.lit(k)).otherwise(w)
-    return w.cast("double")
-
-
 def bootstrap_ci_mean(
     df: DataFrame,
     value_col: str,

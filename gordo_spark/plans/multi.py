@@ -119,16 +119,27 @@ def _scan_groups(
     return solo, shared
 
 
+class WideFrames(dict):
+    """Machine name -> aligned wide frame; ``cached``: the shared scans
+    cached for them, unpersisted by ``release()``."""
+
+    cached: tuple[DataFrame, ...] = ()
+
+    def release(self) -> None:
+        for frame in self.cached:
+            frame.unpersist()
+
+
 def shared_wide_frames(
     spark: SparkSession,
     datasets: dict[str, TimeSeriesDataset],
     cache: bool = True,
-) -> dict[str, DataFrame]:
+) -> WideFrames:
     """One aligned wide frame per machine, sharing scans across machines.
 
     Returns lazy DataFrames; the shared long frames are cached (unless
     ``cache=False``) so the first machine's action materializes the scan
-    and every later machine reuses it.
+    and every later machine reuses it, until the caller's ``release()``.
 
     Only scan -> resample is shared; regularize/interpolate run per machine
     AFTER its range clip, so gap fills never use anchors a solo scan would
@@ -138,11 +149,12 @@ def shared_wide_frames(
     the bit-parity guarantee holds unconditionally.
     """
     solo, shared = _scan_groups(datasets)
-    frames = {name: datasets[name].wide_frame(spark) for name in solo}
+    frames = WideFrames({name: datasets[name].wide_frame(spark) for name in solo})
     for proto, members in shared:
         res = proto.long_resampled(spark)
         if cache and len(members) > 1:
             res = res.cache()
+            frames.cached += (res,)
         for name, ds in members.items():
             # multi-aggregation plans melt to <tag>__<agg> series names
             part = res.filter(F.col("tag").isin(ds._expand(ds.all_tags)))

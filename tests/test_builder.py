@@ -172,22 +172,20 @@ def test_cli_exceptions_reporter_file(tmp_path):
     assert "message" in rep and "traceback" not in rep
 
 
-def test_build_lagged_model_machine(spark, machine, tmp_path):
-    """Offset models flow through fold scoring (predict-join path) and
-    anomaly-threshold CV now."""
-    from gordo_spark.builder import ModelBuilder
+def test_build_lagged_model_machine(spark, machine):
+    """An offset model's build on the events data equals per-fold lstsq
+    over target-keyed lags (inputs click, view; targets view, purchase)."""
+    from pyspark.sql import functions as F
 
-    machine.model = {
-        "kind": "DiffBasedAnomalyDetector",
-        "window": 6,
-        "base_estimator": {"kind": "LaggedLinearModel", "lookback": 3, "lookahead": 1},
-    }
-    r = ModelBuilder(machine).build(spark)
-    md = r.metadata["build-metadata"]["model"]
-    assert len(md["cross_validation"]["scores"]["r2-score"]["raw"]) == 3
-    th = md["thresholds"]
-    assert th["total"] is not None and th["total"] >= 0
+    wide = dataset_from_dict(machine.dataset).wide_frame(spark).select(
+        "ts",
+        F.col("click").alias("a"), F.col("view").alias("b"),
+        F.col("view").alias("t1"), F.col("purchase").alias("t2"),
+    )
+    pdf = wide.toPandas().sort_values("ts").reset_index(drop=True)
+    r = ModelBuilder(_xy_machine(3, base=_lagged()), wide_frame=wide).build(spark)
     assert r.model.base.offset == 3
+    _assert_matches_oracle(r, _oracle(pdf, 3, None, "minmax", _design(3, 1)), pdf, 3)
 
 
 def test_exceptions_reporter_semantics():
@@ -270,10 +268,13 @@ def xy_wide(spark):
     return spark.createDataFrame(pdf), pdf
 
 
-def _xy_machine(n_splits, scoring_scaler=None, scaler="minmax"):
+def _xy_machine(n_splits, scoring_scaler=None, scaler="minmax", base=None):
     evaluation = {"cv_mode": "full_build", "n_splits": n_splits}
     if scoring_scaler:
         evaluation["scoring_scaler"] = scoring_scaler
+    model = {"kind": "DiffBasedAnomalyDetector", "window": 6, "scaler": scaler}
+    if base:
+        model["base_estimator"] = base
     return Machine.from_config(
         {
             "name": "xy-machine",
@@ -282,7 +283,7 @@ def _xy_machine(n_splits, scoring_scaler=None, scaler="minmax"):
                 "target_tag_list": ["t1", "t2"],
                 "resolution": "10T",
             },
-            "model": {"kind": "DiffBasedAnomalyDetector", "window": 6, "scaler": scaler},
+            "model": model,
             "evaluation": evaluation,
         }
     )
@@ -297,16 +298,50 @@ def _center_spread(kind, v):
     return md, np.where(q3 != q1, q3 - q1, 1.0)
 
 
-def _oracle(pdf, n_splits, scoring_scaler, scaler):
-    """sklearn TimeSeriesSplit + lstsq fits + metrics + diff.py thresholds."""
+def _design(lookback=None, lookahead=0):
+    """Design of a block of rows in ts order -> (kept positions, [1, x...]).
+    Without ``lookback`` every row and its inputs a, b; with it the
+    target-keyed lags within the block: input ``c`` from ``s + lookahead``
+    rows earlier for ``s < lookback``, rows without a full window dropped."""
+
+    def design(rows):
+        X = rows[["a", "b"]].to_numpy()
+        if lookback is None:
+            return np.arange(len(rows)), np.column_stack([np.ones(len(rows)), X])
+        keep = np.arange(lookback - 1 + lookahead, len(rows))
+        lags = [X[keep - lookahead - s, c] for c in range(X.shape[1]) for s in range(lookback)]
+        return keep, np.column_stack([np.ones(len(keep)), *lags])
+
+    return design
+
+
+def _lstsq(A, Y):
+    """(coefficients, predict) of an OLS fit."""
+    coef, *_ = np.linalg.lstsq(A, Y, rcond=None)
+    return coef, lambda At: At @ coef
+
+
+def _fit_on(pdf, rows, design, fit):
+    """``fit`` on the rows at positions ``rows`` (ts order) through ``design``."""
+    keep, A = design(pdf.iloc[rows])
+    return fit(A, pdf[["t1", "t2"]].to_numpy()[rows][keep])
+
+
+def _predict_on(pdf, rows, design, predict):
+    """(positions predicted, predictions) of the rows at ``rows``."""
+    keep, A = design(pdf.iloc[rows])
+    return rows[keep], predict(A)
+
+
+def _oracle(pdf, n_splits, scoring_scaler, scaler, design=_design(), fit=_lstsq):
+    """sklearn TimeSeriesSplit + per-fold fits + metrics + diff.py thresholds."""
     n = len(pdf)
     size = n // (n_splits + 1)
-    A = np.column_stack([np.ones(n), pdf["a"], pdf["b"]])
     Y = pdf[["t1", "t2"]].to_numpy()
     folds, per_fold = [], []
     for i in range(n_splits):
         end = n - (n_splits - i) * size
-        tr, te = slice(0, end), slice(end, end + size)
+        tr, te = np.arange(end), np.arange(end, end + size)
         folds.append(
             {
                 "fold": i,
@@ -316,8 +351,9 @@ def _oracle(pdf, n_splits, scoring_scaler, scaler):
                 "test_count": size,
             }
         )
-        coef, *_ = np.linalg.lstsq(A[tr], Y[tr], rcond=None)
-        pred, y = A[te] @ coef, Y[te]
+        _, predict = _fit_on(pdf, tr, design, fit)
+        kept, pred = _predict_on(pdf, te, design, predict)
+        y = Y[kept]
         ys, ps = y, pred
         if scoring_scaler:
             c, s = _center_spread(scoring_scaler, Y[tr])
@@ -332,28 +368,28 @@ def _oracle(pdf, n_splits, scoring_scaler, scaler):
         _, spread = _center_spread(scaler, Y[tr])
         total = ((err / spread) ** 2).mean(axis=1)
     roll = lambda v: pd.Series(v).rolling(6, min_periods=6).min().max()  # noqa: E731
-    coef, *_ = np.linalg.lstsq(A, Y, rcond=None)
+    params, _ = _fit_on(pdf, np.arange(n), design, fit)
     center, spread = _center_spread(scaler, Y)
     return {
         "folds": folds,
         "per_fold": per_fold,
         "tags": [roll(err[:, j]) for j in range(2)],
         "total": roll(total),
-        "coef": coef,
+        "params": params,
         "scaler": (center, center + spread) if scaler == "minmax" else (center, spread),
     }
 
 
-@pytest.mark.parametrize(
-    "n_splits,scoring_scaler,scaler",
-    [(2, None, "minmax"), (3, "minmax", "minmax"), (3, "robust", "robust"), (2, None, "robust")],
-)
-def test_fused_build_matches_numpy_oracle(spark, xy_wide, n_splits, scoring_scaler, scaler):
-    wide, pdf = xy_wide
-    r = ModelBuilder(
-        _xy_machine(n_splits, scoring_scaler, scaler), wide_frame=wide
-    ).build(spark)
-    exp = _oracle(pdf, n_splits, scoring_scaler, scaler)
+def _params(base):
+    """A fitted base estimator's parameters: OLS coefficients, or the
+    autoencoder's weights and biases flattened."""
+    if hasattr(base, "_est"):
+        m = base._est.model_
+        return np.concatenate([w.ravel() for w in [*m.weights_, *m.biases_]])
+    return base._ols.coef_ if hasattr(base, "_ols") else base.coef_
+
+
+def _assert_matches_oracle(r, exp, pdf, n_splits, thresholds=True):
     close = dict(rtol=1e-9, atol=1e-12)
     md = r.metadata["build-metadata"]
     cvm = md["model"]["cross_validation"]
@@ -365,7 +401,7 @@ def test_fused_build_matches_numpy_oracle(spark, xy_wide, n_splits, scoring_scal
             k: pd.Timestamp(v) if k.endswith(("_start", "_end")) else v
             for k, v in got.items()
         } == want
-    if n_splits == 3:  # sklearn TimeSeriesSplit on 400 rows: test_size 100
+    if n_splits == 3 and len(pdf) == 400:  # sklearn TimeSeriesSplit: test_size 100
         assert [f["train_count"] for f in cvm["folds"]] == [100, 200, 300]
 
     names = ["mean-squared-error", "mean-absolute-error", "r2-score", "explained-variance-score"]
@@ -380,13 +416,26 @@ def test_fused_build_matches_numpy_oracle(spark, xy_wide, n_splits, scoring_scal
         [cvm["scores"][m]["mean"] for m in names], raw.mean(axis=0), **close
     )
 
-    th = md["model"]["thresholds"]
-    np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], exp["tags"], **close)
-    np.testing.assert_allclose(th["total"], exp["total"], **close)
-    np.testing.assert_allclose(r.model.base.coef_, exp["coef"], **close)
+    if thresholds:
+        th = md["model"]["thresholds"]
+        np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], exp["tags"], **close)
+        np.testing.assert_allclose(th["total"], exp["total"], **close)
+    np.testing.assert_allclose(_params(r.model.base), exp["params"], **close)
     stats = r.model.scaler.stats
     np.testing.assert_allclose([stats["t1"][0], stats["t2"][0]], exp["scaler"][0], **close)
     np.testing.assert_allclose([stats["t1"][1], stats["t2"][1]], exp["scaler"][1], **close)
+
+
+@pytest.mark.parametrize(
+    "n_splits,scoring_scaler,scaler",
+    [(2, None, "minmax"), (3, "minmax", "minmax"), (3, "robust", "robust"), (2, None, "robust")],
+)
+def test_fused_build_matches_numpy_oracle(spark, xy_wide, n_splits, scoring_scaler, scaler):
+    wide, pdf = xy_wide
+    r = ModelBuilder(
+        _xy_machine(n_splits, scoring_scaler, scaler), wide_frame=wide
+    ).build(spark)
+    _assert_matches_oracle(r, _oracle(pdf, n_splits, scoring_scaler, scaler), pdf, n_splits)
 
 
 def test_failed_build_releases_cached_frames(spark, xy_wide):
@@ -426,33 +475,39 @@ def test_solo_build_job_budget(spark, xy_wide):
 # KFold CV (DiffBasedKFCVAnomalyDetector) on the same fold engine
 
 
-def _kfcv(membership="shuffle", scaler="minmax"):
-    return {
-        "kind": "DiffBasedKFCVAnomalyDetector", "window": 6, "n_splits": 3,
+def _kfcv(membership="shuffle", scaler="minmax", base=None, n_splits=3):
+    model = {
+        "kind": "DiffBasedKFCVAnomalyDetector", "window": 6, "n_splits": n_splits,
         "scaler": scaler, "fold_membership": membership,
     }
+    if base:
+        model["base_estimator"] = base
+    return model
 
 
-def _kfcv_machine(membership="shuffle", scaler="minmax"):
-    return dataclasses.replace(_xy_machine(3), model=_kfcv(membership, scaler))
+def _kfcv_machine(membership="shuffle", scaler="minmax", base=None, n_splits=3):
+    return dataclasses.replace(
+        _xy_machine(3), model=_kfcv(membership, scaler, base, n_splits)
+    )
 
 
-def _kfcv_oracle(pdf, k, membership, scaler):
+def _kfcv_oracle(pdf, k, membership, scaler, design=_design()):
     """sklearn KFold + lstsq fold fits + diff.py KFCV thresholds: smm
     smoothing of the out-of-fold errors, then their 0.99 quantile."""
     n = len(pdf)
     fold = sklearn_kfold_membership(n, k) if membership == "shuffle" else np.arange(n) % k
-    A = np.column_stack([np.ones(n), pdf["a"], pdf["b"]])
     Y = pdf[["t1", "t2"]].to_numpy()
-    err, total = np.empty_like(Y), np.empty(n)
+    err, total = np.full_like(Y, np.nan), np.full(n, np.nan)
     for f in range(k):
-        tr, te = fold != f, fold == f
-        coef, *_ = np.linalg.lstsq(A[tr], Y[tr], rcond=None)
-        err[te] = np.abs(A[te] @ coef - Y[te])
+        tr, te = np.flatnonzero(fold != f), np.flatnonzero(fold == f)
+        _, predict = _fit_on(pdf, tr, design, _lstsq)
+        kept, pred = _predict_on(pdf, te, design, predict)
+        err[kept] = np.abs(pred - Y[kept])
         _, spread = _center_spread(scaler, Y[tr])
-        total[te] = ((err[te] / spread) ** 2).mean(axis=1)
+        total[kept] = ((err[kept] / spread) ** 2).mean(axis=1)
+    oof = ~np.isnan(total)  # an offset model predicts no row without a full window
     th = lambda v: pd.Series(v).rolling(6, min_periods=6).median().quantile(0.99)  # noqa: E731
-    return [th(err[:, 0]), th(err[:, 1])], th(total)
+    return [th(err[oof, 0]), th(err[oof, 1])], th(total[oof])
 
 
 @pytest.mark.parametrize("scaler", ["minmax", "robust"])
@@ -473,6 +528,20 @@ def test_kfcv_thresholds_match_numpy_oracle(spark, xy_wide, membership, scaler):
     np.testing.assert_allclose(det.total_threshold_, total, **close)
 
 
+def test_kfcv_runs_the_models_own_fold_count(spark, xy_wide):
+    """The model's ``n_splits`` sets the KFold folds, not the evaluation's."""
+    wide, pdf = xy_wide
+    machine = _kfcv_machine(n_splits=4)
+    assert machine.evaluation["n_splits"] == 3
+    th = ModelBuilder(machine, wide_frame=wide).build(spark).metadata["build-metadata"][
+        "model"
+    ]["thresholds"]
+    tags, total = _kfcv_oracle(pdf, 4, "shuffle", "minmax")
+    close = dict(rtol=1e-9, atol=0)
+    np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], tags, **close)
+    np.testing.assert_allclose(th["total"], total, **close)
+
+
 def test_kfcv_too_few_rows_releases_cached_frames(spark, xy_wide):
     wide, _ = xy_wide
     jsc = spark.sparkContext._jsc
@@ -490,7 +559,109 @@ def test_kfcv_build_job_budget(spark, xy_wide):
     wide, _ = xy_wide
     build = ModelBuilder(_kfcv_machine(), wide_frame=wide).build
     jobs = _job_count(spark, "kfcv-build", lambda: build(spark))
-    # 4 jobs for the TimeSeriesSplit fit and scores, 1 to count the rows
-    # for the sklearn shuffle, 2 for the KFold fit aggregation, 2 for the
-    # threshold quantiles
-    assert jobs <= 9
+    # 4 jobs for the TimeSeriesSplit fit and scores, 3 for the KFold fit
+    # aggregation (the broadcast fold map, the numbering, the grouping), 1
+    # for the threshold quantiles; the sklearn shuffle takes its row count
+    # from the TimeSeriesSplit aggregation, so no count() runs
+    assert jobs <= 8
+
+
+# --------------------------------------------------------------------------
+# bases without sufficient statistics on the same fold engine
+
+
+def _lagged(lookback=3, lookahead=1):
+    return {"kind": "LaggedLinearModel", "lookback": lookback, "lookahead": lookahead}
+
+
+_AUTOENCODER = {
+    "kind": "PythonEstimatorModel",
+    "estimator": "gordo_spark.ml.factories.AutoEncoderEstimator",
+    "estimator_kwargs": {
+        "kind": "feedforward_hourglass", "epochs": 5, "seed": 0, "backend": "numpy",
+    },
+}
+
+
+def _autoencoder_fit(A, Y):
+    """(weights and biases, predict) of the seeded numpy autoencoder."""
+    from gordo_spark.ml.factories import AutoEncoderEstimator
+
+    est = AutoEncoderEstimator(**_AUTOENCODER["estimator_kwargs"]).fit(A[:, 1:], Y)
+    m = est.model_
+    return (
+        np.concatenate([w.ravel() for w in [*m.weights_, *m.biases_]]),
+        lambda At: est.predict(At[:, 1:]),
+    )
+
+
+@pytest.mark.parametrize("lookback,lookahead", [(3, 1), (2, 0)])
+@pytest.mark.parametrize("split", ["tss-2", "tss-3", "kfold-shuffle", "kfold-modulo"])
+def test_lagged_build_matches_numpy_oracle(spark, xy_wide, split, lookback, lookahead):
+    """Per-fold lstsq over target-keyed lags, computed within each fit's
+    rows and within each test block."""
+    wide, pdf = xy_wide
+    base, design = _lagged(lookback, lookahead), _design(lookback, lookahead)
+    kind, arg = split.split("-")
+    if kind == "tss":
+        n_splits = int(arg)
+        r = ModelBuilder(_xy_machine(n_splits, base=base), wide_frame=wide).build(spark)
+        _assert_matches_oracle(r, _oracle(pdf, n_splits, None, "minmax", design), pdf, n_splits)
+        return
+    r = ModelBuilder(_kfcv_machine(arg, base=base), wide_frame=wide).build(spark)
+    # scores and the final fit come from the evaluation's TimeSeriesSplit
+    _assert_matches_oracle(
+        r, _oracle(pdf, 3, None, "minmax", design), pdf, 3, thresholds=False
+    )
+    tags, total = _kfcv_oracle(pdf, 3, arg, "minmax", design)
+    th = r.metadata["build-metadata"]["model"]["thresholds"]
+    close = dict(rtol=1e-9, atol=0)
+    np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], tags, **close)
+    np.testing.assert_allclose(th["total"], total, **close)
+
+
+@pytest.mark.parametrize("n_splits", [2, 3])
+def test_autoencoder_build_matches_per_fold_oracle(spark, xy_wide, n_splits):
+    """Each fold's seeded numpy autoencoder trains on its train rows in ts
+    order, as when fitted alone."""
+    wide, pdf = xy_wide
+    r = ModelBuilder(_xy_machine(n_splits, base=_AUTOENCODER), wide_frame=wide).build(spark)
+    exp = _oracle(pdf, n_splits, None, "minmax", fit=_autoencoder_fit)
+    _assert_matches_oracle(r, exp, pdf, n_splits)
+
+
+@pytest.mark.parametrize("n_splits", [2, 4])
+@pytest.mark.parametrize(
+    "case,budget", [("lagged", 6), ("autoencoder", 6), ("lagged-kfcv", 11)]
+)
+def test_row_fit_build_job_budget(spark, xy_wide, case, budget, n_splits):
+    """Bases without sufficient statistics fit every fold in one grouped
+    pass and predict every fold in one more: the jobs do not grow with
+    the folds."""
+    wide, _ = xy_wide
+    if case == "lagged-kfcv":
+        machine = _kfcv_machine(base=_lagged(), n_splits=n_splits)
+    else:
+        machine = _xy_machine(n_splits, base=_lagged() if case == "lagged" else _AUTOENCODER)
+    machine.evaluation["n_splits"] = n_splits
+    build = ModelBuilder(machine, wide_frame=wide).build
+    jobs = _job_count(spark, f"{case}-build-{n_splits}", lambda: build(spark))
+    # 3 jobs for the grouped fold metadata, 1 for every fold fit, 1 to
+    # predict and score every fold, 1 for the final fit; KFold adds 3 for
+    # its fold metadata (broadcast fold map, numbering, grouping), 1 for
+    # its fold fits and 1 for the threshold quantiles
+    assert jobs <= budget
+
+
+def test_build_machines_releases_shared_scans(spark, machine):
+    """The shared scan ``build_machines`` caches is released when the
+    builds return, and when one of them raises."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    twin = Machine.from_config({**machine.to_dict(), "name": "twin-machine"})
+    build_machines(spark, [machine, twin], max_workers=2)
+    assert jsc.getPersistentRDDs().size() == before
+    twin.dataset = {**twin.dataset, "n_samples_threshold": 10_000_000}
+    with pytest.raises(Exception, match="samples"):
+        build_machines(spark, [machine, twin], max_workers=2)
+    assert jsc.getPersistentRDDs().size() == before
