@@ -325,9 +325,11 @@ class DiffBasedAnomalyDetector:
             "scaler": self.scaler_kind,
         }
 
-    def anomaly(self, X: DataFrame, y: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
+    def anomaly(self, frame: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
+        """The anomaly block of ``frame`` (``ts_col``, the features, the
+        targets as ``_yt_<t>``): a training or request frame, or
+        ``with_targets(X, y, targets)`` of a separate X and y."""
         targets = self.base.target_cols
-        xy = with_targets(X, y, targets, ts_col)
         # the error's truth side is ALWAYS the caller's y (diff.py:356-359)
         # — carried as _y__<t> so a y differing from the X-side tag columns
         # is honored; model_input__ stays the X side
@@ -343,12 +345,12 @@ class DiffBasedAnomalyDetector:
             # one select). Models without predict_exprs (PythonEstimatorModel
             # and friends) take the predict+ts-join path below even at
             # offset 0.
-            aligned = xy.select(*cols, *self.base.predict_exprs())
+            aligned = frame.select(*cols, *self.base.predict_exprs())
         else:
-            # lookback models emit len(X) - offset rows keyed by target ts;
+            # lookback models emit len(frame) - offset rows keyed by target ts;
             # tail alignment is an inner join on ts, never positional
             # arithmetic (J5, gordo/machine/model/utils.py:85-98 semantics)
-            aligned = xy.select(*cols).join(self.base.predict(X, ts_col), ts_col)
+            aligned = frame.select(*cols).join(self.base.predict(frame, ts_col), ts_col)
         return anomaly_frame(
             aligned,
             targets,

@@ -59,6 +59,15 @@ def row_mean_square(cols: Sequence[Column]) -> Column:
     return total / F.lit(float(len(cols)))
 
 
+def confidence(err: Column, threshold: float) -> Column:
+    """``err / threshold``, the anomaly confidence. A zero threshold (an
+    exact-fit fold) reproduces the reference's float division explicitly:
+    inf, or NaN for 0/0 — ANSI mode would otherwise raise DIVIDE_BY_ZERO."""
+    if threshold == 0:
+        return F.when(err > 0, F.lit(float("inf"))).when(err == 0, F.lit(float("nan")))
+    return err / F.lit(float(threshold))
+
+
 def anomaly_frame(
     aligned: DataFrame,
     tags: Sequence[str],
@@ -153,35 +162,20 @@ def anomaly_frame(
     if thresholds is not None:
         # `is not None`, not truthiness: a legitimately-zero threshold
         # (exact-fit fold) must still emit its confidence column, or the
-        # output schema would change shape with the data. Zero thresholds
-        # reproduce the reference's float division (inf, NaN for 0/0)
-        # explicitly — ANSI mode would otherwise raise DIVIDE_BY_ZERO.
-        def _conf(err: Column, th: float) -> Column:
-            if th == 0:
-                return F.when(err > 0, F.lit(float("inf"))).when(
-                    err == 0, F.lit(float("nan"))
-                )
-            return err / F.lit(float(th))
-
+        # output schema would change shape with the data.
         # tag confidence is ALWAYS unscaled error / unscaled threshold
         # (diff.py:420 divides unscaled_abs_diff by feature_thresholds_,
         # which were computed from the unscaled fold mae at diff.py:233)
-        conf = [
-            _conf(
-                F.col(f"`tag_anomaly_unscaled__{t}`"),
-                float(thresholds[t]),
-            ).alias(f"anomaly_confidence__{t}")
+        extra = [
+            confidence(F.col(f"`tag_anomaly_unscaled__{t}`"), thresholds[t]).alias(
+                f"anomaly_confidence__{t}"
+            )
             for t in tags
             if thresholds.get(t) is not None
         ]
-        extra = list(conf)
         if total_threshold is not None:
-            extra.append(
-                _conf(
-                    F.col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled"),
-                    float(total_threshold),
-                ).alias("total_anomaly_confidence")
-            )
+            total = F.col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled")
+            extra.append(confidence(total, total_threshold).alias("total_anomaly_confidence"))
         out = out.select(*[F.col("`" + c + "`") for c in out.columns], *extra)
     return out
 

@@ -28,8 +28,9 @@ Reference behaviors reproduced:
   410 "not found" (server.py:176-192); the served revision is stamped into
   the JSON body AND the ``revision`` response header (server.py:196-204);
 - content negotiation: JSON body ``{"X": ..., "y": ...}`` or multipart
-  parquet file parts ``X``/``y`` (utils.py:283-301); ``?format=parquet``
-  returns the frame as parquet bytes (blueprints/anomaly.py:64-71);
+  parquet file parts ``X``/``y``, parsed to pandas (utils.py:283-301);
+  ``?format=parquet`` returns the frame, indexed by its timestamps, as
+  parquet bytes written from pandas (blueprints/anomaly.py:64-71);
 - ``?all_columns`` keeps the smooth-* columns, which are dropped by
   default (blueprints/anomaly.py:17-22,57-62);
 - errors: missing/malformed X and column-arity mismatches -> 400 with an
@@ -37,7 +38,8 @@ Reference behaviors reproduced:
   (blueprints/anomaly.py:46-55); unknown machine -> 404.
 
 Scoring itself delegates to the stateless functions in ``serving.py``
-(LRU model cache included), so this layer is ONLY routing + negotiation.
+(LRU model cache included), which align X and y in pandas and start Spark
+at one ``createDataFrame``; this layer is ONLY routing + negotiation.
 """
 
 from __future__ import annotations
@@ -91,12 +93,14 @@ class GordoServer:
         t0 = time.perf_counter()
         try:
             status, headers, body = self._dispatch(environ)
-        except Exception:  # blanket 500 like any WSGI server
-            tb = traceback.format_exc()
+        except Exception as exc:  # blanket 500 like any WSGI server
+            traceback.print_exc(file=environ.get("wsgi.errors"))
+            # the message's first line: analysis errors end in a newline
+            first = (str(exc).splitlines() or [""])[0]
             status, headers, body = (
                 "500 Internal Server Error",
                 [("Content-Type", "application/json")],
-                _json_bytes({"error": tb.splitlines()[-1]}),
+                _json_bytes({"error": f"{type(exc).__name__}: {first}"}),
             )
         self._record(environ, status, time.perf_counter() - t0)
         headers.append(("Content-Length", str(len(body))))
@@ -275,9 +279,7 @@ class GordoServer:
             for part in msg.get_payload():
                 name = part.get_param("name", header="content-disposition")
                 if name in ("X", "y"):
-                    payload[name] = dataframe_from_parquet_bytes(
-                        self.spark, part.get_payload(decode=True)
-                    )
+                    payload[name] = dataframe_from_parquet_bytes(part.get_payload(decode=True))
             if "X" not in payload:
                 raise ValueError("multipart request requires an X part")
             return payload
@@ -310,8 +312,8 @@ class GordoServer:
         ?format=parquet for data-carrying responses."""
         rev = str(resp.get("revision", ""))
         if args.get("format") == "parquet" and "data" in resp:
-            # data was already shaped to a dict; reshape via pandas for the
-            # parquet body (reference sends the frame itself)
+            # the frame the reference sends: ``top__second`` columns indexed
+            # by the timestamps (an anomaly row's is its bucket's start)
             import pandas as pd
 
             flat: dict = {}
@@ -323,10 +325,10 @@ class GordoServer:
                         flat[f"{top}__{second}"] = series
                 else:
                     flat[top] = val
-            pdf = pd.DataFrame(flat)
-            body = dataframe_into_parquet_bytes(
-                self.spark.createDataFrame(pdf)
-            )
+            pdf = pd.DataFrame(flat).rename_axis("start" if "end" in flat else "ts")
+            if pdf.index.dtype == object:
+                pdf.index = pd.to_datetime(pdf.index)
+            body = dataframe_into_parquet_bytes(pdf)
             return (
                 "200 OK",
                 [("Content-Type", "application/octet-stream"), ("revision", rev)],

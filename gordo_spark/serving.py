@@ -10,17 +10,20 @@ The reference serves three responses over Flask
 
 Here each endpoint is a pure function over (store, payload): load the
 pickled model via an LRU cache (the reference caches N_CACHED_MODELS=2,
-gordo/server/utils.py:334-353), shape the request with serving_io, run the
-model's DataFrame plan, shape the response. A REST layer (any WSGI app) or
-a Structured Streaming ``foreachBatch`` can wrap these unchanged — the
-scoring itself never touches driver-side loops.
+gordo/server/utils.py:334-353), shape the request in pandas with
+serving_io (X and y aligned on ``ts`` before Spark, as the reference
+aligns them), start Spark at one ``createDataFrame`` of that request
+frame, run the model's DataFrame plan, shape the response. A REST layer
+(any WSGI app) or a Structured Streaming ``foreachBatch`` can wrap these
+unchanged — the scoring itself never touches driver-side loops.
 """
 
 from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 from gordo_spark.sources.serving_io import (
     dataframe_from_dict,
@@ -53,23 +56,27 @@ def metadata_response(store_root: str, name: str, revision: str | None = None) -
     return {"metadata": metadata, "revision": rev, "name": name}
 
 
-def _frames(spark, model, payload, need_y: bool):
-    from pyspark.sql import DataFrame
+def _frame(spark: SparkSession, model, payload: dict, with_y: bool) -> DataFrame:
+    """The one Spark frame of a request, shaped as the builder's training
+    frame: X verified to the model's features and, ``with_y``, inner-aligned
+    on ``ts`` with y's targets as ``_yt_<t>``. A sent y is verified on
+    either route (a bad y is a 400)."""
+    base = getattr(model, "base", model)
 
-    def as_frame(v):
-        # parquet request parts arrive as ready DataFrames (S5); JSON
-        # payloads as nested dicts (S4)
-        return v if isinstance(v, DataFrame) else dataframe_from_dict(spark, v)
+    def verified(v, tags):
+        # parquet request parts arrive as pandas frames (S5); JSON payloads
+        # as nested dicts (S4)
+        return verify_columns(v if isinstance(v, pd.DataFrame) else dataframe_from_dict(v), tags)
 
-    tags = model.base.feature_cols if hasattr(model, "base") else model.feature_cols
-    targets = model.base.target_cols if hasattr(model, "base") else model.target_cols
-    X = verify_columns(as_frame(payload["X"]), tags)
-    y = None
-    if "y" in payload and payload["y"] is not None:
-        y = verify_columns(as_frame(payload["y"]), targets)
-    elif need_y:
+    frame = verified(payload["X"], base.feature_cols)
+    if payload.get("y") is not None:
+        y = verified(payload["y"], base.target_cols)
+        if with_y:
+            yt = y.rename(columns={t: f"_yt_{t}" for t in base.target_cols})
+            frame = frame.merge(yt, on="ts")
+    elif with_y:
         raise ValueError("y is required for anomaly scoring")
-    return X, y
+    return spark.createDataFrame(frame)
 
 
 def prediction_response(
@@ -82,8 +89,7 @@ def prediction_response(
     """Base prediction: model output keyed by ts."""
     model, _, rev = _load(store_root, name, revision)
     base = getattr(model, "base", model)
-    X, _y = _frames(spark, model, payload, need_y=False)
-    out = base.predict(X)
+    out = base.predict(_frame(spark, model, payload, with_y=False))
     return {"data": dataframe_to_dict(out), "revision": rev, "name": name}
 
 
@@ -107,8 +113,7 @@ def anomaly_response(
             .get("dataset", {})
             .get("resolution", "10T")
         )
-    X, y = _frames(spark, model, payload, need_y=True)
-    out = model.anomaly(X, y, resolution=resolution)
+    out = model.anomaly(_frame(spark, model, payload, with_y=True), resolution=resolution)
     if not all_columns:
         out = out.drop(*[c for c in out.columns if c.startswith("smooth_")])
     return {"data": dataframe_to_dict(out, ts_col="start"), "revision": rev, "name": name}

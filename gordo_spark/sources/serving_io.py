@@ -12,8 +12,9 @@ Reference semantics:
 - column verification (P1): select expected tags, order-normalize, rename
   positional inputs, reject arity mismatch (gordo/server/utils.py:208-253).
 
-These are batch-scoring edge adapters: payloads are small (requests), so
-Spark <-> pandas via Arrow is the right boundary.
+The request boundary is pandas: requests are small, so they are parsed,
+verified and (in ``serving``) X-with-y aligned as pandas frames before
+the one ``createDataFrame``; only ``dataframe_to_dict`` reads Spark.
 """
 
 from __future__ import annotations
@@ -22,12 +23,12 @@ import io
 from collections.abc import Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
-def dataframe_from_dict(spark: SparkSession, data: dict | list, ts_col: str = "ts") -> DataFrame:
-    """JSON request -> DataFrame. Accepts ``{"X": [[...]]}``-style lists of
-    rows (positional columns named c0..cn) or nested ``{col: {ts: val}}``
+def dataframe_from_dict(data: dict | list, ts_col: str = "ts") -> pd.DataFrame:
+    """JSON request -> pandas frame. Accepts ``{"X": [[...]]}``-style lists
+    of rows (positional columns named c0..cn) or nested ``{col: {ts: val}}``
     dicts; index parsed as ISO datetimes when possible, rows sorted."""
     if isinstance(data, list):
         pdf = pd.DataFrame(data, columns=[f"c{i}" for i in range(len(data[0]))])
@@ -36,16 +37,14 @@ def dataframe_from_dict(spark: SparkSession, data: dict | list, ts_col: str = "t
         # gordo/server/utils.py:145-195) — keep it as an integer ts so
         # downstream joins/predict still have a key column
         pdf.insert(0, ts_col, range(len(pdf)))
-    else:
-        pdf = pd.DataFrame.from_dict(data)
-        try:
-            pdf.index = pd.to_datetime(pdf.index, utc=True).tz_localize(None)
-            pdf = pdf.sort_index()
-            pdf = pdf.reset_index(names=ts_col)
-        except (ValueError, TypeError):
-            pdf.index = pdf.index.astype(int)
-            pdf = pdf.sort_index().reset_index(drop=True)
-    return spark.createDataFrame(pdf)
+        return pdf
+    pdf = pd.DataFrame.from_dict(data)
+    try:
+        pdf.index = pd.to_datetime(pdf.index, utc=True).tz_localize(None)
+        return pdf.sort_index().reset_index(names=ts_col)
+    except (ValueError, TypeError):
+        pdf.index = pdf.index.astype(int)
+        return pdf.sort_index().reset_index(drop=True)
 
 
 def dataframe_to_dict(df: DataFrame, ts_col: str = "ts") -> dict:
@@ -71,44 +70,41 @@ def dataframe_to_dict(df: DataFrame, ts_col: str = "ts") -> dict:
     return out
 
 
-def dataframe_into_parquet_bytes(df: DataFrame) -> bytes:
-    """S5 — response as parquet bytes (snappy, via Arrow)."""
+def dataframe_into_parquet_bytes(pdf: pd.DataFrame) -> bytes:
+    """S5 — response as parquet bytes (snappy, via Arrow); the frame's
+    index is written with it, as the reference's is."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    table = pa.Table.from_pandas(df.toPandas())
     buf = io.BytesIO()
-    pq.write_table(table, buf, compression="snappy")
+    pq.write_table(pa.Table.from_pandas(pdf), buf, compression="snappy")
     return buf.getvalue()
 
 
-def dataframe_from_parquet_bytes(spark: SparkSession, data: bytes) -> DataFrame:
+def dataframe_from_parquet_bytes(data: bytes) -> pd.DataFrame:
+    """S5 — a parquet request part as a pandas frame. Timestamps carried in
+    the index (what ``pa.Table.from_pandas`` writes for a DatetimeIndexed
+    frame) move into ``ts`` when the part has no such column."""
     import pyarrow.parquet as pq
 
     pdf = pq.read_table(io.BytesIO(data)).to_pandas()
-    return spark.createDataFrame(pdf)
+    if "ts" not in pdf.columns and not isinstance(pdf.index, pd.RangeIndex):
+        pdf = pdf.reset_index(names="ts")
+    return pdf
 
 
 def verify_columns(
-    df: DataFrame, expected_tags: Sequence[str], ts_col: str = "ts"
-) -> DataFrame:
+    df: pd.DataFrame, expected_tags: Sequence[str], ts_col: str = "ts"
+) -> pd.DataFrame:
     """P1 — project/reorder to expected tags; positional inputs (c0..cn)
     renamed; arity mismatch rejected (HTTP 400 in the reference)."""
     cols = [c for c in df.columns if c != ts_col]
     expected = list(expected_tags)
-    if set(expected) <= set(cols):
-        sel = expected
-        renames = {}
-    elif len(cols) == len(expected):
-        renames = dict(zip(cols, expected))
-        sel = cols
-    else:
-        raise ValueError(
-            f"column mismatch: got {len(cols)} columns, expected {len(expected)} "
-            f"({expected})"
-        )
-    out = df
-    for old, new in renames.items():
-        out = out.withColumnRenamed(old, new)
-    keep = ([ts_col] if ts_col in df.columns else []) + expected
-    return out.select(*[f"`{c}`" for c in keep])
+    if not set(expected) <= set(cols):
+        if len(cols) != len(expected):
+            raise ValueError(
+                f"column mismatch: got {len(cols)} columns, expected {len(expected)} "
+                f"({expected})"
+            )
+        df = df.rename(columns=dict(zip(cols, expected)))
+    return df[([ts_col] if ts_col in df.columns else []) + expected]

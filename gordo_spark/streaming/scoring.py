@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from gordo_spark.functions.rounding import qfloor, qround
 from gordo_spark.functions.timeutil import offset_alias_to_seconds
+from gordo_spark.operators.anomaly import confidence
 
 
 def stream_resample_wide(
@@ -97,18 +98,14 @@ def stream_anomaly_select(
         if thresholds is not None and thresholds.get(t) is not None:
             # batch parity: tag confidence = UNSCALED error / threshold
             # (diff.py:420 semantics; see operators/anomaly.py)
-            cols.append(
-                (err_u / F.lit(float(thresholds[t]))).alias(f"anomaly_confidence__{t}")
-            )
+            cols.append(confidence(err_u, thresholds[t]).alias(f"anomaly_confidence__{t}"))
     total = errs[tags[0]] * errs[tags[0]]
     for t in tags[1:]:
         total = total + errs[t] * errs[t]
     total = total / F.lit(float(len(tags)))
     cols.append(total.alias("total_anomaly_scaled"))
     if total_threshold is not None:
-        cols.append(
-            (total / F.lit(float(total_threshold))).alias("total_anomaly_confidence")
-        )
+        cols.append(confidence(total, total_threshold).alias("total_anomaly_confidence"))
     return wide.select(*cols)
 
 

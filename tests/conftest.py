@@ -22,6 +22,25 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def job_count(spark):
+    """``job_count(group, fn)``: the Spark jobs that ``fn()`` launches,
+    counted through the job group ``group`` (one name per count: the
+    tracker keeps a group's old jobs)."""
+    sc = spark.sparkContext
+
+    def count(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sensor_pdf():
     """Deterministic long-form sensor frame mirroring FIXTURES.md F1:

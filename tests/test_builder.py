@@ -447,25 +447,12 @@ def test_failed_build_releases_cached_frames(spark, xy_wide):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def _job_count(spark, group, fn):
-    """Spark jobs that ``fn()`` launches, counted through the job group
-    ``group`` (one name per count: the tracker keeps a group's old jobs)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_solo_build_job_budget(spark, xy_wide):
+def test_solo_build_job_budget(spark, xy_wide, job_count):
     """A DiffBasedAnomalyDetector(LinearModel) machine: one aggregation fits
     every fold, one more scores them and takes the thresholds."""
     wide, _ = xy_wide
     build = ModelBuilder(_xy_machine(3), wide_frame=wide).build
-    jobs = _job_count(spark, "solo-build", lambda: build(spark))
+    jobs = job_count("solo-build", lambda: build(spark))
     # 3 jobs for the fit aggregation (input, numbering, grouping), 1 to
     # score; features and targets are one projection, so no X/y join
     assert jobs <= 4
@@ -553,12 +540,12 @@ def test_kfcv_too_few_rows_releases_cached_frames(spark, xy_wide):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_kfcv_build_job_budget(spark, xy_wide):
+def test_kfcv_build_job_budget(spark, xy_wide, job_count):
     """KFold thresholds run on the fold engine: one aggregation fits every
     fold, one more takes the smoothed out-of-fold quantiles."""
     wide, _ = xy_wide
     build = ModelBuilder(_kfcv_machine(), wide_frame=wide).build
-    jobs = _job_count(spark, "kfcv-build", lambda: build(spark))
+    jobs = job_count("kfcv-build", lambda: build(spark))
     # 4 jobs for the TimeSeriesSplit fit and scores, 3 for the KFold fit
     # aggregation (the broadcast fold map, the numbering, the grouping), 1
     # for the threshold quantiles; the sklearn shuffle takes its row count
@@ -634,7 +621,7 @@ def test_autoencoder_build_matches_per_fold_oracle(spark, xy_wide, n_splits):
 @pytest.mark.parametrize(
     "case,budget", [("lagged", 6), ("autoencoder", 6), ("lagged-kfcv", 11)]
 )
-def test_row_fit_build_job_budget(spark, xy_wide, case, budget, n_splits):
+def test_row_fit_build_job_budget(spark, xy_wide, job_count, case, budget, n_splits):
     """Bases without sufficient statistics fit every fold in one grouped
     pass and predict every fold in one more: the jobs do not grow with
     the folds."""
@@ -645,7 +632,7 @@ def test_row_fit_build_job_budget(spark, xy_wide, case, budget, n_splits):
         machine = _xy_machine(n_splits, base=_lagged() if case == "lagged" else _AUTOENCODER)
     machine.evaluation["n_splits"] = n_splits
     build = ModelBuilder(machine, wide_frame=wide).build
-    jobs = _job_count(spark, f"{case}-build-{n_splits}", lambda: build(spark))
+    jobs = job_count(f"{case}-build-{n_splits}", lambda: build(spark))
     # 3 jobs for the grouped fold metadata, 1 for every fold fit, 1 to
     # predict and score every fold, 1 for the final fit; KFold adds 3 for
     # its fold metadata (broadcast fold map, numbering, grouping), 1 for

@@ -113,39 +113,37 @@ def test_json_roundtrip(spark):
         "tag-a": {"2019-01-01T01:00:00+00:00": 2.0, "2019-01-01T00:00:00+00:00": 1.0},
         "tag-b": {"2019-01-01T01:00:00+00:00": 4.0, "2019-01-01T00:00:00+00:00": 3.0},
     }
-    df = dataframe_from_dict(spark, data)
-    pdf = df.toPandas()
+    pdf = dataframe_from_dict(data)
     assert list(pdf.columns) == ["ts", "tag-a", "tag-b"]
     assert pdf["tag-a"].tolist() == [1.0, 2.0]  # sorted by parsed index
-    out = dataframe_to_dict(df)
+    out = dataframe_to_dict(spark.createDataFrame(pdf))
     assert out["tag-a"]["2019-01-01T00:00:00"] == 1.0
 
 
-def test_positional_json_and_verify_columns(spark):
-    df = dataframe_from_dict(spark, [[1.0, 2.0], [3.0, 4.0]])
+def test_positional_json_and_verify_columns():
+    df = dataframe_from_dict([[1.0, 2.0], [3.0, 4.0]])
     # positional payloads get a synthetic integer row-position ts key
-    assert df.columns == ["ts", "c0", "c1"]
-    assert df.toPandas()["ts"].tolist() == [0, 1]
+    assert list(df.columns) == ["ts", "c0", "c1"]
+    assert df["ts"].tolist() == [0, 1]
     renamed = verify_columns(df, ["tag-x", "tag-y"])
-    assert renamed.columns == ["ts", "tag-x", "tag-y"]
+    assert list(renamed.columns) == ["ts", "tag-x", "tag-y"]
     with pytest.raises(ValueError):
         verify_columns(df, ["only-one-expected"])
 
 
-def test_parquet_bytes_roundtrip(spark):
-    df = dataframe_from_dict(spark, [[1.0, 2.0], [3.0, 4.0]])
+def test_parquet_bytes_roundtrip():
+    df = dataframe_from_dict([[1.0, 2.0], [3.0, 4.0]])
     blob = dataframe_into_parquet_bytes(df)
     assert blob[:4] == b"PAR1"
-    back = dataframe_from_parquet_bytes(spark, blob)
-    assert back.toPandas().equals(df.toPandas())
+    back = dataframe_from_parquet_bytes(blob)
+    assert back.equals(df)
 
 
 def test_multiindex_flatten_to_dict(spark):
-    df = dataframe_from_dict(spark, [[1.0, 0.5]])
-    df = df.withColumnRenamed("c0", "model_output__tag-a").withColumnRenamed(
-        "c1", "tag_anomaly__tag-a"
+    df = dataframe_from_dict([[1.0, 0.5]]).rename(
+        columns={"c0": "model_output__tag-a", "c1": "tag_anomaly__tag-a"}
     )
-    out = dataframe_to_dict(df)
+    out = dataframe_to_dict(spark.createDataFrame(df))
     assert out["model_output"]["tag-a"][0] == 1.0
     assert out["tag_anomaly"]["tag-a"][0] == 0.5
 

@@ -148,10 +148,11 @@ def test_autoencoder_through_builder_end_to_end(spark, sf_dir, tmp_path):
     th = r.metadata["build-metadata"]["model"]["thresholds"]
     assert th["total"] > 0
     from gordo_spark.builder import dataset_from_dict
+    from gordo_spark.ml.models import with_targets
 
     ds = dataset_from_dict(machine.dataset)
     X, y = ds.get_data(spark)
-    out = r.model.anomaly(X, y, resolution="1H").toPandas()
+    out = r.model.anomaly(with_targets(X, y, r.model.base.target_cols), resolution="1H").toPandas()
     for col in ("total_anomaly_unscaled", "total_anomaly_scaled",
                 "anomaly_confidence__click", "total_anomaly_confidence"):
         assert col in out.columns

@@ -6,7 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from gordo_spark.ml.cv import kfold_split, timeseries_split
-from gordo_spark.ml.models import DiffBasedAnomalyDetector, LinearModel, model_from_definition
+from gordo_spark.ml.models import (
+    DiffBasedAnomalyDetector,
+    LinearModel,
+    model_from_definition,
+    with_targets,
+)
 from gordo_spark.ml.scalers import MinMaxScalerExpr, RobustScalerExpr
 
 
@@ -91,7 +96,8 @@ def test_anomaly_detector_end_to_end(spark, xy):
     assert det.tag_thresholds_ is not None
     assert set(det.tag_thresholds_) == {"t1", "t2"}
     assert det.total_threshold_ > 0
-    out = det.anomaly(X, y, resolution="10T").toPandas().sort_values("start")
+    frame = with_targets(X, y, det.base.target_cols)
+    out = det.anomaly(frame, resolution="10T").toPandas().sort_values("start")
     expected_cols = {
         "start", "end",
         # model_input block = the X/feature tags (reference
@@ -215,7 +221,7 @@ def test_kfcv_detector_thresholds(spark, sf_dir):
     # threshold is the 0.99 quantile of the smoothed OOF error: strictly
     # below the raw max error
     m.fit(X, y)
-    frame = m.anomaly(X, y, resolution="1H")
+    frame = m.anomaly(with_targets(X, y, m.base.target_cols), resolution="1H")
     assert "total_anomaly_confidence" in frame.columns
 
 
@@ -251,7 +257,7 @@ def test_lagged_linear_model_offset_and_anomaly(spark, sf_dir):
     # anomaly flow through the tail-align join path
     det = DiffBasedAnomalyDetector(base_estimator=m, window=6)
     det.fit(X, y)
-    frame = det.anomaly(X, y, resolution="1H").toPandas()
+    frame = det.anomaly(with_targets(X, y, det.base.target_cols), resolution="1H").toPandas()
     assert len(frame) == n - det.base.offset
     assert "total_anomaly_unscaled" in frame.columns
     assert "tag_anomaly_scaled__click" in frame.columns
@@ -285,7 +291,8 @@ def test_detector_robust_scaler_option(spark, sf_dir):
     det.base.feature_cols = ["click", "view"]
     det.base.target_cols = ["purchase"]
     det.fit(X, y)
-    frame = det.anomaly(X, y, resolution="1H").toPandas().dropna()
+    xy = with_targets(X, y, det.base.target_cols)
+    frame = det.anomaly(xy, resolution="1H").toPandas().dropna()
     # scaled error must be |err_unscaled| / IQR with robust stats
     med, iqr = det.scaler.stats["purchase"]
     import numpy as np
@@ -318,7 +325,7 @@ def test_dotted_and_spaced_tag_names_end_to_end(spark, sensor_df):
     det.base.target_cols = tags
     det.fit(X, y)
     det.cross_validate(X, y, n_splits=3)
-    out = det.anomaly(X, y, resolution="10T")
+    out = det.anomaly(with_targets(X, y, det.base.target_cols), resolution="10T")
     cols = set(out.columns)
     assert "tag_anomaly_scaled__GRA-TE  -23-0733.PV" in cols
     assert out.count() > 100

@@ -154,9 +154,16 @@ def test_parquet_response_format(served):
     pdf = pq.read_table(io.BytesIO(r["body"])).to_pandas()
     assert any(c.startswith("total_anomaly") for c in pdf.columns)
     assert len(pdf) == 2
+    # the rows keep their timestamps: the index is the JSON response's keys
+    data = json.loads(call(app, "/srv-machine/anomaly/prediction", "POST", payload)["body"])["data"]
+    assert pdf.index.name == "start"
+    assert [t.isoformat() for t in pdf.index] == list(data["end"])
 
 
-def test_parquet_multipart_request(served, spark):
+@pytest.mark.parametrize("ts_in", ["column", "index"])
+def test_parquet_multipart_request(served, spark, ts_in):
+    """Parquet parts carry their timestamps as a ``ts`` column, or in the
+    index as ``pa.Table.from_pandas`` writes a DatetimeIndexed frame."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -165,6 +172,8 @@ def test_parquet_multipart_request(served, spark):
 
     def part_bytes(vals):
         pdf = pd.DataFrame({"ts": ts, **{t: vals for t in TAGS}})
+        if ts_in == "index":
+            pdf = pdf.set_index("ts").rename_axis(None)
         buf = io.BytesIO()
         pq.write_table(pa.Table.from_pandas(pdf), buf)
         return buf.getvalue()
@@ -189,8 +198,10 @@ def test_parquet_multipart_request(served, spark):
         body,
         content_type=f"multipart/form-data; boundary={boundary}",
     )
-    assert r["status"] == 200
-    assert "total_anomaly_unscaled" in json.loads(r["body"])["data"]
+    assert r["status"] == 200, r["body"]
+    data = json.loads(r["body"])["data"]
+    assert "total_anomaly_unscaled" in data
+    assert list(data["end"]) == [t.isoformat() for t in ts]
 
 
 def test_revision_resolution_and_errors(served):
@@ -372,7 +383,7 @@ class _BuggyDetector:
 
     feature_cols = target_cols = TAGS
 
-    def anomaly(self, X, y, resolution="10T", ts_col="ts"):
+    def anomaly(self, frame, resolution="10T", ts_col="ts"):
         return None.columns
 
 
@@ -410,3 +421,33 @@ def test_anomaly_scores_the_revision_it_checked(spark, served_root, tmp_path, mo
     r = call(build_app(spark, store.root), "/srv-machine/anomaly/prediction", "POST", payload)
     assert r["status"] == 200, r["body"]
     assert json.loads(r["body"])["revision"] == r["headers"]["revision"] == "1000000001"
+
+
+def test_blanket_500_names_the_exception(served, monkeypatch):
+    """The 500 body is the exception's type and first message line, also
+    when the message ends in a newline (as Spark analysis errors do)."""
+    app, _, payload = served
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("boom\n")
+
+    monkeypatch.setattr("gordo_spark.server.anomaly_response", boom)
+    r = call(app, "/srv-machine/anomaly/prediction", "POST", payload)
+    assert r["status"] == 500
+    assert json.loads(r["body"]) == {"error": "RuntimeError: boom"}
+
+
+def test_request_job_counts(served, job_count):
+    """One request frame, no X/y join: an anomaly request runs 1 Spark job
+    (2 with the smooth-* windows of ?all_columns), a prediction 1."""
+    app, _, payload = served
+    paths = {
+        "anomaly": "/srv-machine/anomaly/prediction",
+        "all_columns": "/srv-machine/anomaly/prediction?all_columns=true",
+        "prediction": "/srv-machine/prediction",
+    }
+    jobs = {}
+    for route, path in paths.items():
+        assert call(app, path, "POST", payload)["status"] == 200  # warm
+        jobs[route] = job_count(f"request-{route}", lambda: call(app, path, "POST", payload))
+    assert jobs == {"anomaly": 1, "all_columns": 2, "prediction": 1}

@@ -90,6 +90,27 @@ def test_score_stream_end_to_end(spark, sf_dir, tmp_path, events_schema):
     )
 
 
+def test_stream_anomaly_select_zero_thresholds(spark):
+    """A zero tag or total threshold (an exact-fit fold) gives the batch
+    confidences, inf or NaN for 0/0, instead of failing the query."""
+    import pandas as pd
+
+    from gordo_spark.streaming.scoring import stream_anomaly_select
+
+    wide = spark.createDataFrame(
+        pd.DataFrame(
+            {"ts": pd.date_range("2024-01-01", periods=3, freq="1h"), "a": [1.0, 2.0, 3.0]}
+        )
+    )
+    # model output is the constant 2.0: errors 1, 0, 1
+    out = stream_anomaly_select(
+        wide, coef={"a": {"a": 0.0}}, intercepts={"a": 2.0}, scaler_stats={"a": (0.0, 1.0)},
+        thresholds={"a": 0.0}, total_threshold=0.0, tags=["a"], resolution="1H",
+    ).toPandas()
+    for col in ("anomaly_confidence__a", "total_anomaly_confidence"):
+        np.testing.assert_array_equal(out[col].to_numpy(), [np.inf, np.nan, np.inf])
+
+
 def test_ewma_stream_matches_pandas_across_batches(spark, sf_dir, tmp_path, events_schema):
     """State must carry the recurrence across micro-batches: the streamed
     EWMA over two sequential files equals pandas ewm over the whole series."""
