@@ -17,8 +17,10 @@ each fold's train groups and test group. ``FoldCV`` gets the fold metadata,
 the MinMax scaler stats and the base model's ``group_aggs`` from ONE
 aggregation grouped by the fold column; the base model then fits every fold
 (``fit_folds``: ``LinearModel`` / ``RidgeModel`` sum per-group Gram blocks,
-other bases train on the rows exploded into their fits) and predicts every
-fold's test rows (``predict_folds``) at once, with no Spark work per fold.
+other bases train on the rows exploded into their fits), with no Spark work
+per fold. Every fold's test rows are scored at once by the base models' one
+scoring method, ``outputs``, keyed by the fold column: each row by its
+fold's model.
 Robust-scaler quantiles do not combine across groups, so they take one pass
 of their own, for every fold at once. ``score_model`` scores every fold (and
 takes the anomaly thresholds of the last) in one more aggregation; the KFold
@@ -46,7 +48,7 @@ from typing import NamedTuple
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from gordo_spark.ml.models import FIT, DiffBasedAnomalyDetector, _q, model_from_definition
+from gordo_spark.ml.models import FIT, DiffBasedAnomalyDetector, _q, keyed, model_from_definition
 from gordo_spark.ml.scalers import center_spread
 from gordo_spark.operators.anomaly import row_mean_square
 from gordo_spark.operators.smoothing import rolling_min
@@ -216,8 +218,8 @@ class FoldCV:
     start/end/count per fold), ``row_count``, the per-group MinMax stats
     and whatever per-group aggregates the base model asks for
     (``group_aggs``). The base model then fits every fold at once
-    (``fit_folds``) and predicts every fold's test rows at once
-    (``predict_folds``); ``models[i]`` is fold i's fitted clone of it."""
+    (``fit_folds``); ``models[i]`` is fold i's fitted clone of it, and
+    ``predictions`` scores every fold's test rows through them at once."""
 
     def __init__(
         self,
@@ -281,20 +283,7 @@ class FoldCV:
 
     def by_fold(self, values: Sequence[Column]) -> Column:
         """``values[i]`` on the test rows of fold i."""
-        col, test = F.col(self.spec.col), self.spec.test
-        out = F.when(col == test[0], values[0])
-        for g, v in zip(test[1:], values[1:]):
-            out = out.when(col == g, v)
-        return out
-
-    def predicted(self, frame: DataFrame, models: Sequence) -> DataFrame:
-        """(ts, <fold col>, _yt_<t>..., _p_<t>...) over test rows
-        ``frame``, each row predicted by its fold's expression model
-        (``models[i].predict_exprs``) in one projection."""
-        exprs = [m.predict_exprs("_p_") for m in models]
-        ys = [_q(f"_yt_{t}") for t in self.targets]
-        ps = [self.by_fold([e[j] for e in exprs]).alias(f"_p_{t}") for j, t in enumerate(self.targets)]
-        return frame.select(self.ts_col, self.spec.col, *ys, *ps)
+        return keyed(self.spec.col, dict(zip(self.spec.test, values)))
 
     def stats(self, kind: str, fold: int) -> dict[str, tuple[float, float]]:
         """Scaler stats of fold ``fold``'s train targets (every row when
@@ -324,9 +313,10 @@ class FoldCV:
         return self._robust[fold]
 
     def predictions(self) -> DataFrame:
-        """(ts, <fold col>, _yt_<t>..., _p_<t>...): each fold's predictions
-        on its own test rows (fewer rows for offset models)."""
-        return self.base.predict_folds(self, self.models)
+        """The test rows plus ``_p_<t>``, each row's prediction by its
+        fold's model (fewer rows for offset models)."""
+        by_test = dict(zip(self.spec.test, self.models))
+        return self.models[0].outputs(self.test_rows(), self.spec.col, by_test, "_p_", self.ts_col)
 
     def refit(self) -> None:
         """Final fit of the base model on every row, in place; a detector's

@@ -9,13 +9,19 @@ registry (gordo/machine/model/factories/*). Here:
 - ``LinearModel`` — exact multi-output OLS. The sufficient statistics
   (X'X, X'y with intercept) are computed as ONE Spark aggregation over the
   training frame (p = #tags is small, so the Gram matrix is tiny); the
-  (p+1)x(p+1) solve happens on the driver with numpy; predict is a pure
-  column expression. Fully distributed fit, codegen'd predict, zero UDFs.
+  (p+1)x(p+1) solve happens on the driver with numpy; its outputs are pure
+  column expressions. Fully distributed fit, codegen'd scoring, zero UDFs.
+- one scoring method per base model: ``outputs(frame, key, models,
+  prefix)`` appends ``<prefix><t>`` per target to every column of
+  ``frame``, each row scored by ``models[row[key]]`` (by the model itself
+  when ``key`` is None). ``predict``, the fold engine's predictions
+  (``ml.cv.FoldCV``), the detector's ``anomaly`` and the streaming select
+  all score through it.
 - ``DiffBasedAnomalyDetector`` — reference diff.py semantics: fit base
   estimator, scaler fit on y after training, TimeSeriesSplit CV with
   thresholds from the LAST fold's rolling(6).min().max() (diff.py:229-264 —
   deliberately the last fold, not an aggregate), anomaly() emitting the full
-  column block (delegates to operators.anomaly.anomaly_frame). Its KFold
+  column block (``anomaly_frame`` over the base model's ``outputs``). Its KFold
   variant ``DiffBasedKFCVAnomalyDetector`` runs on the same ``ml.cv`` fold
   engine.
 - model registry (``register_model``) mirroring the reference's
@@ -24,7 +30,7 @@ registry (gordo/machine/model/factories/*). Here:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from functools import reduce
 
 import numpy as np
@@ -101,6 +107,30 @@ def with_targets(
     return X.join(y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col)
 
 
+def keyed(key: str | None, values: Mapping) -> Column:
+    """``values[g]`` on the rows whose ``key`` is ``g``; the one value when
+    ``key`` is None."""
+    if key is None:
+        (value,) = values.values()
+        return value
+    (g, v), *rest = values.items()
+    out = F.when(F.col(key) == g, v)
+    for g, v in rest:
+        out = out.when(F.col(key) == g, v)
+    return out
+
+
+class BaseModel:
+    """What every base model shares: ``outputs`` is its one scoring method,
+    and ``predict`` is its view keyed by ts."""
+
+    def predict(self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__") -> DataFrame:
+        """``ts_col`` and the model output per target, keyed by the TARGET
+        timestamp (a lookback model emits ``offset`` rows fewer)."""
+        out = self.outputs(X, prefix=prefix, ts_col=ts_col)
+        return out.select(ts_col, *[_q(f"{prefix}{t}") for t in self.target_cols])
+
+
 def gram_aggs(feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
     """Sufficient statistics of an OLS fit with intercept as aggregate
     columns: the upper triangle of X'X (``_xx_i_j``, term 0 the intercept)
@@ -128,7 +158,7 @@ def gram_blocks(row, n_feats: int, n_ys: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 @register_model("LinearModel")
-class LinearModel:
+class LinearModel(BaseModel):
     """Exact multi-output OLS with intercept; fit = one Spark aggregation."""
 
     def __init__(self, feature_cols: Sequence[str] | None = None, target_cols: Sequence[str] | None = None):
@@ -150,17 +180,27 @@ class LinearModel:
     def _solve(self, xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
         return np.linalg.solve(xtx, xty)
 
-    def predict_exprs(self, prefix: str = "model_output__") -> list[Column]:
+    def _output_columns(self) -> list[Column]:
         cols = []
-        for j, t in enumerate(self.target_cols):
+        for j in range(len(self.target_cols)):
             e = F.lit(float(self.coef_[0, j]))
             for i, f in enumerate(self.feature_cols):
                 e = e + F.lit(float(self.coef_[i + 1, j])) * _q(f)
-            cols.append(e.alias(f"{prefix}{t}"))
+            cols.append(e)
         return cols
 
-    def predict(self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__") -> DataFrame:
-        return X.select(ts_col, *self.predict_exprs(prefix))
+    def outputs(
+        self, frame: DataFrame, key: str | None = None, models: Mapping | None = None,
+        prefix: str = "model_output__", ts_col: str = "ts",
+    ) -> DataFrame:
+        """``frame`` plus ``<prefix><t>`` per target in one projection, each
+        row's output that of ``models[row[key]]`` (this model when ``key``
+        is None)."""
+        exprs = {g: m._output_columns() for g, m in (models or {None: self}).items()}
+        return frame.select("*", *[
+            keyed(key, {g: e[j] for g, e in exprs.items()}).alias(f"{prefix}{t}")
+            for j, t in enumerate(self.target_cols)
+        ])
 
     def group_aggs(self, feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
         return gram_aggs(feats, ys)
@@ -173,9 +213,6 @@ class LinearModel:
         for model, fit in zip(models, fits):
             xtx, xty = reduce(lambda a, b: (a[0] + b[0], a[1] + b[1]), [blocks[g] for g in fit])
             model.coef_ = model._solve(xtx, xty)
-
-    def predict_folds(self, cv, models: Sequence) -> DataFrame:
-        return cv.predicted(cv.test_rows(), models)
 
     @property
     def offset(self) -> int:
@@ -328,7 +365,8 @@ class DiffBasedAnomalyDetector:
     def anomaly(self, frame: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
         """The anomaly block of ``frame`` (``ts_col``, the features, the
         targets as ``_yt_<t>``): a training or request frame, or
-        ``with_targets(X, y, targets)`` of a separate X and y."""
+        ``with_targets(X, y, targets)`` of a separate X and y. A lookback
+        base scores the rows with a full window, keyed by target ts."""
         targets = self.base.target_cols
         # the error's truth side is ALWAYS the caller's y (diff.py:356-359)
         # — carried as _y__<t> so a y differing from the X-side tag columns
@@ -339,20 +377,8 @@ class DiffBasedAnomalyDetector:
             *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
             *[F.col(f"`_yt_{t}`").alias(f"_y__{t}") for t in targets],
         ]
-        if getattr(self.base, "offset", 0) == 0 and hasattr(self.base, "predict_exprs"):
-            # offset-0 expression-model fast path: prediction is a pure
-            # column expression, no join needed (J6 — column-block append as
-            # one select). Models without predict_exprs (PythonEstimatorModel
-            # and friends) take the predict+ts-join path below even at
-            # offset 0.
-            aligned = frame.select(*cols, *self.base.predict_exprs())
-        else:
-            # lookback models emit len(frame) - offset rows keyed by target ts;
-            # tail alignment is an inner join on ts, never positional
-            # arithmetic (J5, gordo/machine/model/utils.py:85-98 semantics)
-            aligned = frame.select(*cols).join(self.base.predict(frame, ts_col), ts_col)
         return anomaly_frame(
-            aligned,
+            self.base.outputs(frame.select(*cols), ts_col=ts_col),
             targets,
             resolution=resolution,
             scaler_stats=self._affine_stats(),
@@ -434,7 +460,7 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
         over the whole frame, then the ``threshold_percentile`` quantile
         (diff.py:617-635)."""
         from gordo_spark.ml.cv import FoldCV, Folds, cached, detector_errors, fold_column
-        from gordo_spark.operators.smoothing import SMOOTHERS, ewma
+        from gordo_spark.operators.smoothing import smooth
 
         k = self.n_splits
         targets = self.base.target_cols
@@ -443,15 +469,7 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
         with cached(folded) as data:
             cv = FoldCV(self, data, self.base.feature_cols, targets, Folds.kfold(k), ts_col)
             oof = cv.predictions().select(ts_col, *detector_errors(cv, self))
-            if self.smoothing_method == "ewma":
-                # no bounded-window SQL form: the applyInPandas EWMA, as in
-                # anomaly_frame (diff.py:302-308)
-                smoothed = ewma(oof, errs, span=self.window, ts_col=ts_col)
-            else:
-                w, smoother = Window.partitionBy().orderBy(ts_col), SMOOTHERS[self.smoothing_method]
-                smoothed = oof.select(
-                    *[smoother(c, self.window, w).alias(f"smooth_{c}") for c in errs]
-                )
+            smoothed = smooth(oof, errs, self.smoothing_method, self.window, ts_col)
             p = self.threshold_percentile
             row = smoothed.agg(
                 *[F.percentile(_q(f"smooth_{c}"), p).alias(c) for c in errs]
@@ -461,7 +479,7 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
         return self
 
 
-class RowFitModel:
+class RowFitModel(BaseModel):
     """ml.cv.FoldCV's fold protocol without per-group statistics: ``_fit_rows``
     fits ``models[i]`` on the rows whose ``FIT`` is i, every fit in one pass."""
 
@@ -558,15 +576,17 @@ class LaggedLinearModel(RowFitModel):
             m._ols = LinearModel(names, targets)
             m._ols.coef_ = m._ols._solve(*gram_blocks(rows[i], len(names), len(ys)))
 
-    def predict(
-        self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__"
+    def outputs(
+        self, frame: DataFrame, key: str | None = None, models: Mapping | None = None,
+        prefix: str = "model_output__", ts_col: str = "ts",
     ) -> DataFrame:
-        """Output keyed by the TARGET timestamp (= window end + lookahead),
-        so downstream alignment is a plain ts join; emits exactly
-        len(X) - offset rows."""
-        design = self._design(X, self.feature_cols, None, ts_col)
-        return design.select(ts_col, *self._ols.predict_exprs(prefix))
-
-    def predict_folds(self, cv, models: Sequence) -> DataFrame:
-        design = self._design(cv.test_rows(), cv.feats, cv.spec.col, cv.ts_col)
-        return cv.predicted(design, [m._ols for m in models])
+        """``frame`` plus ``<prefix><t>`` per target, keyed by the TARGET row
+        (= window end + lookahead): the OLS projection of ``models[row[key]]``
+        (this model when ``key`` is None) over the lag design, so rows
+        without a full window in ``key``'s partition are dropped."""
+        design = self._design(frame, self.feature_cols, key, ts_col)
+        ols = {g: m._ols for g, m in (models or {None: self}).items()}
+        out = self._ols.outputs(design, key, ols, prefix, ts_col)
+        return out.select(
+            *[_q(c) for c in frame.columns], *[_q(f"{prefix}{t}") for t in self.target_cols]
+        )

@@ -13,12 +13,13 @@ that extension point on Spark:
   training on one node is the reference's execution shape. The
   CLUSTER-scale axis is thousands of machines in parallel, not one
   model's gradient step.
-- predict: the fitted estimator is closure-captured (Spark broadcasts it
-  with the task) and applied per Arrow batch via ``mapInPandas`` — the
-  sanctioned slow path: Python yes, but vectorized per batch, never
-  per row, and embarrassingly parallel over the scoring data. Fold
-  predictions are one such pass over the test rows, each row scored by
-  its fold's estimator.
+- score: ``outputs``, the base models' one scoring method, closure-captures
+  the fitted estimators (Spark broadcasts them with the task) and applies
+  them per Arrow batch via ``mapInPandas`` — the sanctioned slow path:
+  Python yes, but vectorized per batch, never per row, and embarrassingly
+  parallel over the scoring data. ``predict``, the fold predictions (each
+  test row scored by its fold's estimator) and the detector's anomaly
+  block are each one such pass.
 
 A TF/Keras model plugs in by exposing fit/predict over numpy — no engine
 change needed; this module is deliberately framework-agnostic.
@@ -27,11 +28,11 @@ change needed; this module is deliberately framework-agnostic.
 from __future__ import annotations
 
 import pickle
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator, Mapping, Sequence
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from gordo_spark.ml.models import FIT, RowFitModel, _q, register_model
@@ -68,16 +69,23 @@ class PythonEstimatorModel(RowFitModel):
         ts_col: str,
     ) -> None:
         """One grouped pandas pass: each fit's rows, sorted by ts, train a
-        fresh estimator that comes back pickled; only the driver unpickles."""
-        path, kwargs, ys = self.estimator_path, self.estimator_kwargs, [f"_yt_{t}" for t in targets]
+        fresh estimator that comes back pickled; only the driver unpickles.
+        Features and targets travel as ``_x<i>`` / ``_y<j>``: pandas passes
+        resolve a dotted column name as a nested field."""
+        path, kwargs = self.estimator_path, self.estimator_kwargs
+        xs, ys = [f"_x{i}" for i in range(len(feats))], [f"_y{j}" for j in range(len(targets))]
 
         def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(ts_col)
+            pdf = pdf.sort_values("_ts")
             est = PythonEstimatorModel(path, kwargs)._est
-            est.fit(pdf[list(feats)].to_numpy(), pdf[ys].to_numpy())
+            est.fit(pdf[xs].to_numpy(), pdf[ys].to_numpy())
             return pd.DataFrame({FIT: [pdf[FIT].iloc[0]], "_est": [pickle.dumps(est)]})
 
-        rows = frame.select(FIT, ts_col, *[_q(c) for c in [*feats, *ys]]).groupBy(FIT)
+        rows = frame.select(
+            FIT, _q(ts_col).alias("_ts"),
+            *[_q(c).alias(x) for c, x in zip(feats, xs)],
+            *[_q(f"_yt_{t}").alias(y) for t, y in zip(targets, ys)],
+        ).groupBy(FIT)
         fitted = {
             r[FIT]: pickle.loads(r["_est"])
             for r in rows.applyInPandas(fit, f"{FIT} int, _est binary").collect()
@@ -85,39 +93,31 @@ class PythonEstimatorModel(RowFitModel):
         for i, m in enumerate(models):
             m._est = fitted[i]
 
-    def _scored(self, frame, key, ests, keep, feats, preds) -> DataFrame:
-        """``keep`` columns of ``frame`` plus ``preds``, per Arrow batch, each
-        row scored on its ``feats`` by the estimator ``ests[<its key>]``."""
-        schema = StructType(
-            [frame.schema[c] for c in keep] + [StructField(p, DoubleType()) for p in preds]
-        )
+    def outputs(
+        self, frame: DataFrame, key: str | None = None, models: Mapping | None = None,
+        prefix: str = "model_output__", ts_col: str = "ts",
+    ) -> DataFrame:
+        """``frame`` plus ``<prefix><t>`` per target, per Arrow batch, each
+        row scored on its features by the estimator of ``models[row[key]]``
+        (this model's when ``key`` is None). The pandas pass sees the
+        columns as ``_c<i>``, since it would resolve a dotted name as a
+        nested field."""
+        ests = {g: m._est for g, m in (models or {None: self}).items()}
+        pos = {c: f"_c{i}" for i, c in enumerate(frame.columns)}
+        feats = [pos[c] for c in self.feature_cols]
+        preds = [f"_p{j}" for j in range(len(self.target_cols))]
+        safe = frame.toDF(*pos.values())
+        schema = StructType(safe.schema.fields + [StructField(p, DoubleType()) for p in preds])
 
         def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                for g, part in pdf.groupby(key, sort=False):
-                    pred = ests[g].predict(part[feats].to_numpy())
-                    yield pd.concat([part[keep], pd.DataFrame(pred, part.index, preds)], axis=1)
+                for g, part in pdf.groupby(pos[key], sort=False) if key else [(None, pdf)]:
+                    if len(part):
+                        pred = ests[g].predict(part[feats].to_numpy())
+                        yield pd.concat([part, pd.DataFrame(pred, part.index, preds)], axis=1)
 
-        return frame.mapInPandas(score, schema=schema)
-
-    def predict(
-        self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__"
-    ) -> DataFrame:
-        preds = [f"{prefix}{t}" for t in self.target_cols]
-        frame = X.withColumn(FIT, F.lit(0))
-        return self._scored(frame, FIT, {0: self._est}, [ts_col], self.feature_cols, preds)
-
-    def predict_folds(self, cv, models: Sequence) -> DataFrame:
-        """Every fold's test rows in one pandas pass, each scored by its
-        fold's estimator."""
-        ests = dict(zip(cv.spec.test, (m._est for m in models)))
-        keep = [cv.ts_col, cv.spec.col, *[f"_yt_{t}" for t in cv.targets]]
-        preds = [f"_p_{t}" for t in cv.targets]
-        return self._scored(cv.test_rows(), cv.spec.col, ests, keep, cv.feats, preds)
-
-    @property
-    def offset(self) -> int:
-        return int(getattr(self._est, "offset", 0))
+        scored = safe.mapInPandas(score, schema=schema)
+        return scored.toDF(*frame.columns, *[f"{prefix}{t}" for t in self.target_cols])
 
     def into_definition(self) -> dict:
         return {

@@ -38,10 +38,10 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from gordo_spark.functions.timeutil import offset_alias_to_interval
-from gordo_spark.operators.smoothing import SMOOTHERS, ewma
+from gordo_spark.operators.smoothing import smooth
 
 
 def scale_minmax(col: Column, mn: float, mx: float) -> Column:
@@ -72,7 +72,6 @@ def anomaly_frame(
     aligned: DataFrame,
     tags: Sequence[str],
     resolution: str = "10T",
-    output_prefix: str = "model_output__",
     scaler_stats: Mapping[str, tuple[float, float]] | None = None,
     smoothing_method: str = "smm",
     smoothing_window: int | None = 144,
@@ -86,7 +85,7 @@ def anomaly_frame(
     """Compute the full anomaly column block.
 
     ``aligned`` must carry ``ts``, one ``<tag>`` column per target tag and
-    one ``<output_prefix><tag>`` column per tag (the model output side),
+    one ``model_output__<tag>`` column per tag (the model output side),
     already tail-aligned (operators.align.tail_align).
     ``y_prefix``: when set, the truth side of the error is the
     ``<y_prefix><tag>`` columns (a caller-supplied y differing from the
@@ -118,10 +117,10 @@ def anomaly_frame(
     input_tags = list(feature_tags) if feature_tags is not None else list(tags)
     for t in input_tags:
         cols.append(F.col("`" + t + "`").alias(f"model_input__{t}"))
-    for t in tags:
-        cols.append(F.col(f"`{output_prefix}{t}`").alias(f"model_output__{t}"))
+    pred = {t: F.col(f"`model_output__{t}`") for t in tags}
+    cols += pred.values()
 
-    err_u = {t: F.abs(F.col(f"`{output_prefix}{t}`") - ycol(t)) for t in tags}
+    err_u = {t: F.abs(pred[t] - ycol(t)) for t in tags}
     for t in tags:
         cols.append(err_u[t].alias(f"tag_anomaly_unscaled__{t}"))
     cols.append(row_mean_square([err_u[t] for t in tags]).alias("total_anomaly_unscaled"))
@@ -129,7 +128,7 @@ def anomaly_frame(
     if scaler_stats is not None:
         err_s = {
             t: F.abs(
-                scale_minmax(F.col(f"`{output_prefix}{t}`"), *scaler_stats[t])
+                scale_minmax(pred[t], *scaler_stats[t])
                 - scale_minmax(ycol(t), *scaler_stats[t])
             )
             for t in tags
@@ -144,20 +143,7 @@ def anomaly_frame(
         smooth_cols = [f"tag_anomaly_unscaled__{t}" for t in tags] + ["total_anomaly_unscaled"]
         if scaler_stats is not None:
             smooth_cols += [f"tag_anomaly_scaled__{t}" for t in tags] + ["total_anomaly_scaled"]
-        if smoothing_method == "ewma":
-            out = ewma(
-                out, smooth_cols, span=smoothing_window, ts_col="start",
-                machine_col=machine_col,
-            )
-        else:
-            fn = SMOOTHERS[smoothing_method]
-            w = (
-                Window.partitionBy(machine_col) if machine_col else Window.partitionBy()
-            ).orderBy("start")
-            out = out.select(
-                *[F.col("`" + c + "`") for c in out.columns],
-                *[fn(c, smoothing_window, w).alias(f"smooth_{c}") for c in smooth_cols],
-            )
+        out = smooth(out, smooth_cols, smoothing_method, smoothing_window, "start", machine_col)
 
     if thresholds is not None:
         # `is not None`, not truthiness: a legitimately-zero threshold
@@ -176,7 +162,7 @@ def anomaly_frame(
         if total_threshold is not None:
             total = F.col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled")
             extra.append(confidence(total, total_threshold).alias("total_anomaly_confidence"))
-        out = out.select(*[F.col("`" + c + "`") for c in out.columns], *extra)
+        out = out.select("*", *extra)
     return out
 
 

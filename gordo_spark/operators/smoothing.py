@@ -65,17 +65,14 @@ def smooth(
     machine_col: str | None = None,
     prefix: str = "smooth_",
 ) -> DataFrame:
-    """W5 — apply one smoothing method to N columns in a single select
-    (one window shuffle shared by all columns)."""
+    """W5 — ``df`` plus ``<prefix><c>``, column ``c`` through one smoothing
+    method, for N columns in a single select (one window shuffle shared by
+    all columns); any column name works, dotted tag names included."""
     if method == "ewma":
         return ewma(df, cols, span=window, ts_col=ts_col, machine_col=machine_col, prefix=prefix)
     fn = SMOOTHERS[method]
     w = (Window.partitionBy(machine_col) if machine_col else Window.partitionBy()).orderBy(ts_col)
-    out = df
-    exprs = [out[c] for c in out.columns] + [
-        fn(c, window, w).alias(f"{prefix}{c}") for c in cols
-    ]
-    return out.select(*exprs)
+    return df.select("*", *[fn(c, window, w).alias(f"{prefix}{c}") for c in cols])
 
 
 def ewma(
@@ -87,29 +84,34 @@ def ewma(
     prefix: str = "smooth_",
 ) -> DataFrame:
     """W3 — exact pandas ``ewm(span=span, adjust=True).mean()`` per column,
-    computed per group via Arrow-batched applyInPandas."""
+    computed per group via Arrow-batched applyInPandas. The pandas pass
+    sees the columns under positional names, since ``applyInPandas``
+    resolves a dotted name (``GRA-TE  -23-0733.PV``) as a nested field."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    group_cols = [machine_col] if machine_col else []
+    pos = {c: f"_c{i}" for i, c in enumerate(df.columns)}
+    out = {pos[c]: f"_s{i}" for i, c in enumerate(cols)}
+    safe = df.toDF(*pos.values())
     schema = StructType(
-        list(df.schema.fields)
-        + [StructField(f"{prefix}{c}", DoubleType()) for c in cols]
+        list(safe.schema.fields) + [StructField(s, DoubleType()) for s in out.values()]
     )
 
     def _ewm(pdf):
-        pdf = pdf.sort_values(ts_col)
-        for c in cols:
-            pdf[f"{prefix}{c}"] = pdf[c].ewm(span=span, adjust=True).mean()
+        pdf = pdf.sort_values(pos[ts_col])
+        for c, s in out.items():
+            pdf[s] = pdf[c].ewm(span=span, adjust=True).mean()
         return pdf
 
-    if group_cols:
-        return df.groupBy(*group_cols).applyInPandas(_ewm, schema=schema)
-    # single machine: one logical series — a single group keyed by a literal
-    return (
-        df.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(lambda p: _ewm(p.drop(columns="_g")), schema=schema)
-    )
+    if machine_col:
+        smoothed = safe.groupBy(pos[machine_col]).applyInPandas(_ewm, schema=schema)
+    else:
+        # single machine: one logical series — a single group keyed by a literal
+        smoothed = (
+            safe.withColumn("_g", F.lit(1))
+            .groupBy("_g")
+            .applyInPandas(lambda p: _ewm(p.drop(columns="_g")), schema=schema)
+        )
+    return smoothed.toDF(*df.columns, *[f"{prefix}{c}" for c in cols])
 
 
 def rolling_zscore(

@@ -60,7 +60,8 @@ def _frame(spark: SparkSession, model, payload: dict, with_y: bool) -> DataFrame
     """The one Spark frame of a request, shaped as the builder's training
     frame: X verified to the model's features and, ``with_y``, inner-aligned
     on ``ts`` with y's targets as ``_yt_<t>``. A sent y is verified on
-    either route (a bad y is a 400)."""
+    either route (a bad y is a 400), and anomaly scoring, which buckets
+    rows by time, rejects a request keyed by row numbers (a 400)."""
     base = getattr(model, "base", model)
 
     def verified(v, tags):
@@ -76,6 +77,8 @@ def _frame(spark: SparkSession, model, payload: dict, with_y: bool) -> DataFrame
             frame = frame.merge(yt, on="ts")
     elif with_y:
         raise ValueError("y is required for anomaly scoring")
+    if with_y and not pd.api.types.is_datetime64_any_dtype(frame["ts"]):
+        raise ValueError("anomaly scoring needs timestamps: X and y must be keyed by ISO datetimes")
     return spark.createDataFrame(frame)
 
 

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame
 def dataframe_from_dict(data: dict | list, ts_col: str = "ts") -> pd.DataFrame:
     """JSON request -> pandas frame. Accepts ``{"X": [[...]]}``-style lists
     of rows (positional columns named c0..cn) or nested ``{col: {ts: val}}``
-    dicts; index parsed as ISO datetimes when possible, rows sorted."""
+    dicts; index parsed as ISO datetimes when possible, else as ints, rows
+    sorted; the index becomes ``ts_col``."""
     if isinstance(data, list):
         pdf = pd.DataFrame(data, columns=[f"c{i}" for i in range(len(data[0]))])
         # positional payloads carry no timestamps: the row position IS the
@@ -41,10 +42,9 @@ def dataframe_from_dict(data: dict | list, ts_col: str = "ts") -> pd.DataFrame:
     pdf = pd.DataFrame.from_dict(data)
     try:
         pdf.index = pd.to_datetime(pdf.index, utc=True).tz_localize(None)
-        return pdf.sort_index().reset_index(names=ts_col)
     except (ValueError, TypeError):
         pdf.index = pdf.index.astype(int)
-        return pdf.sort_index().reset_index(drop=True)
+    return pdf.sort_index().reset_index(names=ts_col)
 
 
 def dataframe_to_dict(df: DataFrame, ts_col: str = "ts") -> dict:

@@ -9,8 +9,12 @@ the streaming-shaped semantics reproduced here (SURVEY.md §2.10):
 - pivot-align (J3): streaming disallows ``pivot``, so the wide frame is
   conditional aggregation (one avg per tag inside a single groupBy — same
   plan Catalyst generates for a static pivot with explicit values);
-- anomaly scoring (M6): a stateless select over aligned rows once the model
-  coefficients and thresholds are broadcast scalars.
+- anomaly scoring (M6): the batch anomaly block, unsmoothed — a
+  ``LinearModel`` built from the broadcast coefficients appends its
+  ``outputs`` and ``operators.anomaly.anomaly_frame`` adds the errors and
+  confidences, the same query a request runs. So the stream emits the
+  unscaled error columns (``tag_anomaly_unscaled__<t>``,
+  ``total_anomaly_unscaled``) too.
 
 State stays bounded by the watermark; each machine's stream is keyed by its
 tag set, so a 1000-machine deployment is one streaming query per machine or
@@ -21,11 +25,13 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+import numpy as np
+from pyspark.sql import DataFrame, functions as F
 
 from gordo_spark.functions.rounding import qfloor, qround
 from gordo_spark.functions.timeutil import offset_alias_to_seconds
-from gordo_spark.operators.anomaly import confidence
+from gordo_spark.ml.models import LinearModel
+from gordo_spark.operators.anomaly import anomaly_frame
 
 
 def stream_resample_wide(
@@ -67,46 +73,27 @@ def stream_anomaly_select(
     resolution: str = "10T",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """M6 as a stateless streaming select: model output from broadcast OLS
-    coefficients, scaled errors, confidences. (Smoothing windows need state
-    and run downstream — foreachBatch or applyInPandasWithState.)"""
-    secs = int(offset_alias_to_seconds(resolution))
-
-    def output_expr(t: str) -> Column:
-        e = F.lit(float(intercepts[t]))
-        for f_name, w in coef[t].items():
-            e = e + F.lit(float(w)) * F.col(f"`{f_name}`")
-        return e
-
-    errs = {}
-    cols = [
-        F.col(ts_col).alias("start"),
-        (F.col(ts_col) + F.expr(f"INTERVAL {secs} SECOND")).alias("end"),
-    ]
-    for t in tags:
-        out = output_expr(t)
-        mn, mx = scaler_stats[t]
-        rng = (mx - mn) if mx != mn else 1.0
-        err_u = F.abs(out - F.col(f"`{t}`"))
-        err = err_u / F.lit(rng)
-        errs[t] = err
-        cols += [
-            F.col(f"`{t}`").alias(f"model_input__{t}"),
-            out.alias(f"model_output__{t}"),
-            err.alias(f"tag_anomaly_scaled__{t}"),
-        ]
-        if thresholds is not None and thresholds.get(t) is not None:
-            # batch parity: tag confidence = UNSCALED error / threshold
-            # (diff.py:420 semantics; see operators/anomaly.py)
-            cols.append(confidence(err_u, thresholds[t]).alias(f"anomaly_confidence__{t}"))
-    total = errs[tags[0]] * errs[tags[0]]
-    for t in tags[1:]:
-        total = total + errs[t] * errs[t]
-    total = total / F.lit(float(len(tags)))
-    cols.append(total.alias("total_anomaly_scaled"))
-    if total_threshold is not None:
-        cols.append(confidence(total, total_threshold).alias("total_anomaly_confidence"))
-    return wide.select(*cols)
+    """M6 as a stateless streaming select: ``anomaly_frame`` over the
+    ``outputs`` of the ``LinearModel`` whose intercepts and coefficients
+    (``coef[t][feature]``) are given, its features in first-seen order of
+    the ``coef`` keys. Smoothing windows need state and run downstream
+    (foreachBatch or applyInPandasWithState)."""
+    feats = list(dict.fromkeys(f for t in tags for f in coef[t]))
+    model = LinearModel(feats, tags)
+    model.coef_ = np.array(
+        [[intercepts[t] for t in tags], *[[coef[t].get(f, 0.0) for t in tags] for f in feats]],
+        dtype=float,
+    )
+    return anomaly_frame(
+        model.outputs(wide, ts_col=ts_col),
+        tags,
+        resolution=resolution,
+        scaler_stats=scaler_stats,
+        smoothing_window=None,
+        thresholds=thresholds,
+        total_threshold=total_threshold,
+        ts_col=ts_col,
+    )
 
 
 def score_stream(

@@ -158,6 +158,10 @@ def test_autoencoder_through_builder_end_to_end(spark, sf_dir, tmp_path):
         assert col in out.columns
     assert len(out) > 100
     assert np.isfinite(out["total_anomaly_unscaled"]).all()
+    # every row of predict(), with the values of predict() joined to y on ts
+    from tests.test_ml import assert_join_path_values
+
+    assert_join_path_values(out, r.model, X, y)
 
 
 @pytest.mark.parametrize(

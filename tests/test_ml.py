@@ -15,6 +15,34 @@ from gordo_spark.ml.models import (
 from gordo_spark.ml.scalers import MinMaxScalerExpr, RobustScalerExpr
 
 
+def assert_join_path_values(frame, det, X, y):
+    """``frame``, the anomaly block of ``det`` over X and y, has the rows of
+    ``det.base.predict(X)`` and the values of that prediction joined to y
+    on ts, with the error algebra (diff.py:356-439) done in numpy."""
+    pred = det.base.predict(X).toPandas()
+    j = pred.merge(y.toPandas(), on="ts").sort_values("ts")
+    got = frame.sort_values("start")
+    assert got["start"].tolist() == j["ts"].tolist()
+    exp, unscaled, scaled = {}, [], []
+    for t in det.base.target_cols:
+        p, truth = j[f"model_output__{t}"].to_numpy(), j[t].to_numpy()
+        mn, mx = det.scaler.stats[t]
+        rng = mx - mn if mx != mn else 1.0
+        unscaled.append(np.abs(p - truth))
+        scaled.append(np.abs((p - mn) / rng - (truth - mn) / rng))
+        exp[f"model_output__{t}"] = p
+        exp[f"tag_anomaly_unscaled__{t}"] = unscaled[-1]
+        exp[f"tag_anomaly_scaled__{t}"] = scaled[-1]
+        if det.tag_thresholds_ is not None:
+            exp[f"anomaly_confidence__{t}"] = unscaled[-1] / det.tag_thresholds_[t]
+    exp["total_anomaly_unscaled"] = sum(e * e for e in unscaled) / len(unscaled)
+    exp["total_anomaly_scaled"] = sum(e * e for e in scaled) / len(scaled)
+    if det.total_threshold_ is not None:
+        exp["total_anomaly_confidence"] = exp["total_anomaly_scaled"] / det.total_threshold_
+    for c, v in exp.items():
+        np.testing.assert_allclose(got[c].to_numpy(), v, rtol=1e-12, atol=0, err_msg=c)
+
+
 @pytest.fixture(scope="module")
 def xy(spark):
     rng = np.random.default_rng(3)
@@ -154,6 +182,63 @@ def test_kfcv_accepts_ewma_smoothing(spark, xy):
     assert det.total_threshold_ > 0
 
 
+@pytest.mark.parametrize("method", ["smm", "sma", "ewma"])
+def test_smoothing_on_dotted_tag_names(spark, xy, method):
+    """A dotted tag name (gordo's ``GRA-TE  -23-0733.PV``) smooths like any
+    other: through ``smooth`` and ``anomaly_frame`` as pandas does, and a
+    KFold build gives the thresholds of the same data under plain names."""
+    from gordo_spark.builder import ModelBuilder
+    from gordo_spark.config import Machine
+    from gordo_spark.operators.anomaly import anomaly_frame
+    from gordo_spark.operators.smoothing import smooth
+
+    _, _, pdf = xy
+    tag = "GRA-TE  -23-0733.PV"
+
+    def pandas_smooth(v):
+        roll = v.rolling(6, min_periods=6)
+        return {"smm": roll.median, "sma": roll.mean, "ewma": v.ewm(span=6).mean}[method]()
+
+    got = smooth(spark.createDataFrame(pdf.rename(columns={"a": tag})), [tag], method, 6)
+    got = got.toPandas().sort_values("ts")[f"smooth_{tag}"].to_numpy()
+    np.testing.assert_allclose(got, pandas_smooth(pdf["a"]), rtol=1e-12)
+
+    aligned = spark.createDataFrame(
+        pdf.rename(columns={"a": tag, "t1": f"model_output__{tag}"})
+    )
+    out = anomaly_frame(aligned, [tag], smoothing_method=method, smoothing_window=6)
+    out = out.toPandas().sort_values("start")
+    np.testing.assert_allclose(
+        out[f"smooth_tag_anomaly_unscaled__{tag}"].to_numpy(),
+        pandas_smooth((pdf["t1"] - pdf["a"]).abs()),
+        rtol=1e-12,
+    )
+
+    def kfcv_thresholds(names):
+        machine = Machine.from_config(
+            {
+                "name": "dotted-machine",
+                "dataset": {
+                    "tag_list": [names["a"], names["b"]],
+                    "target_tag_list": [names["t1"], names["t2"]],
+                    "resolution": "10T",
+                },
+                "model": {
+                    "kind": "DiffBasedKFCVAnomalyDetector", "window": 6,
+                    "smoothing_method": method, "n_splits": 3,
+                },
+            }
+        )
+        wide = spark.createDataFrame(pdf.rename(columns=names))
+        r = ModelBuilder(machine, wide_frame=wide).build(spark)
+        return r.metadata["build-metadata"]["model"]["thresholds"]
+
+    plain = kfcv_thresholds({c: c for c in ["a", "b", "t1", "t2"]})
+    dotted = kfcv_thresholds({"a": "a.x", "b": "b", "t1": tag, "t2": "t2"})
+    assert dotted["tags"] == {tag: plain["tags"]["t1"], "t2": plain["tags"]["t2"]}
+    assert dotted["total"] == plain["total"]
+
+
 def test_model_definition_roundtrip():
     from gordo_spark.ml.models import (
         DiffBasedAnomalyDetector,
@@ -254,13 +339,13 @@ def test_lagged_linear_model_offset_and_anomaly(spark, sf_dir):
     corr = joined["model_output__click"].corr(joined["click"])
     assert corr > 0.5
 
-    # anomaly flow through the tail-align join path
+    # the anomaly block scores the rows with a full window: predict()'s rows,
+    # with the values of predict() joined to y on ts
     det = DiffBasedAnomalyDetector(base_estimator=m, window=6)
     det.fit(X, y)
     frame = det.anomaly(with_targets(X, y, det.base.target_cols), resolution="1H").toPandas()
     assert len(frame) == n - det.base.offset
-    assert "total_anomaly_unscaled" in frame.columns
-    assert "tag_anomaly_scaled__click" in frame.columns
+    assert_join_path_values(frame, det, X, y)
 
 
 def test_lagged_model_roundtrip_definition():
@@ -403,6 +488,25 @@ def test_python_estimator_model_fits_and_scores_distributed(spark, sf_dir):
     # definition round-trip keeps the import path
     d = m.into_definition()
     assert d["estimator"] == "tests.test_ml._NumpyOLS"
+
+
+def test_python_estimator_model_on_dotted_tag_names(spark, xy):
+    """A Python estimator's pandas passes fit and score a dotted tag name
+    (gordo's ``GRA-TE  -23-0733.PV``) as they do a plain one."""
+    _, _, pdf = xy
+    tag = "GRA-TE  -23-0733.PV"
+
+    def predictions(names):
+        named = pdf.rename(columns=names)
+        X = spark.createDataFrame(named[["ts", names["a"], "b"]])
+        y = spark.createDataFrame(named[["ts", names["t1"], "t2"]])
+        m = model_from_definition({"kind": "PythonEstimatorModel", "estimator": "tests.test_ml._NumpyOLS"})
+        return m.fit(X, y).predict(X).toPandas().sort_values("ts")
+
+    plain = predictions({"a": "a", "t1": "t1"})
+    dotted = predictions({"a": "a.x", "t1": tag})
+    np.testing.assert_array_equal(dotted[f"model_output__{tag}"], plain["model_output__t1"])
+    np.testing.assert_array_equal(dotted["model_output__t2"], plain["model_output__t2"])
 
 
 def test_sklearn_kfold_membership_parity(spark, xy):

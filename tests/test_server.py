@@ -14,6 +14,7 @@ from gordo_spark.builder import ModelBuilder
 from gordo_spark.config import Machine
 from gordo_spark.server import build_app
 from gordo_spark.sources.store import ModelStore
+from tests.test_builder import _AUTOENCODER, _lagged, _xy_machine, xy_wide  # noqa: F401
 
 TAGS = ["click", "view", "purchase"]
 
@@ -451,3 +452,66 @@ def test_request_job_counts(served, job_count):
         assert call(app, path, "POST", payload)["status"] == 200  # warm
         jobs[route] = job_count(f"request-{route}", lambda: call(app, path, "POST", payload))
     assert jobs == {"anomaly": 1, "all_columns": 2, "prediction": 1}
+
+
+def test_integer_keyed_prediction_keeps_its_keys(served):
+    """Nested-dict keys that are not datetimes are kept as an integer ts,
+    as positional rows are, and key the response."""
+    app, _, _ = served
+    payload = {"X": {t: {"0": 1.0 + i, "1": 2.0 + i} for i, t in enumerate(TAGS)}}
+    r = call(app, "/srv-machine/prediction", "POST", payload)
+    assert r["status"] == 200, r["body"]
+    out = json.loads(r["body"])["data"]["model_output"]
+    assert all(set(out[t]) == {"0", "1"} for t in TAGS)
+
+
+@pytest.mark.parametrize("shape", ["positional", "integer-keyed"])
+def test_anomaly_without_timestamps_is_a_400(served, shape):
+    """Anomaly scoring buckets rows by time: a request keyed by row numbers
+    is rejected before Spark."""
+    app, _, _ = served
+    if shape == "positional":
+        payload = {"X": [[1.0, 2.0, 3.0], [2.0, 3.0, 4.0]], "y": [[1.5, 2.5, 3.5], [2.5, 3.5, 4.5]]}
+    else:
+        payload = {
+            side: {t: {"0": v + i, "1": v + 1 + i} for i, t in enumerate(TAGS)}
+            for side, v in (("X", 1.0), ("y", 1.5))
+        }
+    r = call(app, "/srv-machine/anomaly/prediction", "POST", payload)
+    assert r["status"] == 400, r["body"]
+    assert "timestamps" in json.loads(r["body"])["error"]
+
+
+@pytest.mark.parametrize(
+    "base,expected",
+    [
+        (None, {"anomaly": 1, "all_columns": 2, "prediction": 1}),
+        (_lagged(3, 1), {"anomaly": 2, "all_columns": 2, "prediction": 2}),
+        (_AUTOENCODER, {"anomaly": 1, "all_columns": 2, "prediction": 1}),
+    ],
+    ids=["linear", "lagged", "autoencoder"],
+)
+def test_request_job_counts_per_base(spark, xy_wide, tmp_path, job_count, base, expected):
+    """Every base scores the request frame through its ``outputs``, with no
+    prediction join: a warm 100-row request on the in-memory ``xy`` machine."""
+    wide, _ = xy_wide
+    store = ModelStore(str(tmp_path / "models"))
+    ModelBuilder(_xy_machine(3, base=base), store, wide_frame=wide).build(spark)
+    app = build_app(spark, store.root)
+    rng = np.random.default_rng(7)
+    keys = [t.isoformat() for t in pd.date_range("2019-02-01", periods=100, freq="10min")]
+    payload = {
+        side: {c: dict(zip(keys, rng.random(100))) for c in cols}
+        for side, cols in (("X", ["a", "b"]), ("y", ["t1", "t2"]))
+    }
+    paths = {
+        "anomaly": "/xy-machine/anomaly/prediction",
+        "all_columns": "/xy-machine/anomaly/prediction?all_columns=true",
+        "prediction": "/xy-machine/prediction",
+    }
+    jobs = {}
+    for route, path in paths.items():
+        assert call(app, path, "POST", payload)["status"] == 200  # warm
+        group = f"request-{route}-{base and base['kind']}"
+        jobs[route] = job_count(group, lambda: call(app, path, "POST", payload))
+    assert jobs == expected

@@ -2,6 +2,7 @@
 batch plan on the same data (availableNow file source over events)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,15 +80,24 @@ def test_score_stream_end_to_end(spark, sf_dir, tmp_path, events_schema):
     q.awaitTermination(120)
     got = spark.table("scored_stream_test").toPandas()
     assert len(got) > 0
-    assert "total_anomaly_confidence" in got.columns
-    # spot-check the stateless math on one row
-    r = got.iloc[0]
-    err_u = abs((1.0 + 0.5 * r["model_input__click"]) - r["model_input__view"])
-    np.testing.assert_allclose(r["tag_anomaly_scaled__view"], err_u / 100.0, rtol=1e-9)
-    # tag confidence divides the UNSCALED error by the threshold (batch parity)
-    np.testing.assert_allclose(
-        r["anomaly_confidence__view"], err_u / 0.5, rtol=1e-9
-    )
+    # every row: the batch anomaly algebra over the model's outputs, in numpy
+    out = 1.0 + 0.5 * got["model_input__click"].to_numpy()
+    exp, unscaled, scaled = {}, [], []
+    for t in TAGS:
+        truth = got[f"model_input__{t}"].to_numpy()
+        unscaled.append(np.abs(out - truth))
+        scaled.append(np.abs((out - 0.0) / 100.0 - (truth - 0.0) / 100.0))
+        exp[f"model_output__{t}"] = out
+        exp[f"tag_anomaly_unscaled__{t}"] = unscaled[-1]
+        exp[f"tag_anomaly_scaled__{t}"] = scaled[-1]
+        # tag confidence divides the UNSCALED error by the threshold (batch parity)
+        exp[f"anomaly_confidence__{t}"] = unscaled[-1] / 0.5
+    exp["total_anomaly_unscaled"] = sum(e * e for e in unscaled) / len(TAGS)
+    exp["total_anomaly_scaled"] = sum(e * e for e in scaled) / len(TAGS)
+    exp["total_anomaly_confidence"] = exp["total_anomaly_scaled"] / 0.4
+    for c, v in exp.items():
+        np.testing.assert_allclose(got[c].to_numpy(), v, rtol=1e-12, atol=0, err_msg=c)
+    assert ((got["end"] - got["start"]) == pd.Timedelta("1h")).all()
 
 
 def test_stream_anomaly_select_zero_thresholds(spark):
