@@ -16,7 +16,9 @@ registry (gordo/machine/model/factories/*). Here:
   ``frame``, each row scored by ``models[row[key]]`` (by the model itself
   when ``key`` is None). ``predict``, the fold engine's predictions
   (``ml.cv.FoldCV``), the detector's ``anomaly`` and the streaming select
-  all score through it.
+  all score through it. A fitted model keeps the Column lists of its own
+  ``outputs``, ``predict`` and ``anomaly`` (``Projections``), so serving a
+  request only binds them to the request's frame.
 - ``DiffBasedAnomalyDetector`` — reference diff.py semantics: fit base
   estimator, scaler fit on y after training, TimeSeriesSplit CV with
   thresholds from the LAST fold's rolling(6).min().max() (diff.py:229-264 —
@@ -30,14 +32,14 @@ registry (gordo/machine/model/factories/*). Here:
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Hashable, Mapping, Sequence
 from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from gordo_spark.ml.scalers import MinMaxScalerExpr, center_spread
-from gordo_spark.operators.anomaly import anomaly_frame
+from gordo_spark.operators.anomaly import anomaly_projection
 
 _MODEL_REGISTRY: dict[str, type] = {}
 FIT = "_fit"  # the fit a row trains, where several models fit at once
@@ -120,15 +122,38 @@ def keyed(key: str | None, values: Mapping) -> Column:
     return out
 
 
-class BaseModel:
+class Projections:
+    """Column lists a fitted model keeps and applies to every frame it
+    scores: a Column is an unresolved expression that binds to whichever
+    frame selects it, so a served model builds its lists on its first
+    request, not on every one. Refitting forgets them, and pickles (and
+    copies) leave them out."""
+
+    def _projection(self, key: Hashable, build: Callable[[], object]):
+        kept = self.__dict__.setdefault("_projections", {})
+        if key not in kept:
+            kept[key] = build()
+        return kept[key]
+
+    def _forget_projections(self) -> None:
+        self.__dict__.pop("_projections", None)
+
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if k != "_projections"}
+
+
+class BaseModel(Projections):
     """What every base model shares: ``outputs`` is its one scoring method,
     and ``predict`` is its view keyed by ts."""
 
     def predict(self, X: DataFrame, ts_col: str = "ts", prefix: str = "model_output__") -> DataFrame:
         """``ts_col`` and the model output per target, keyed by the TARGET
         timestamp (a lookback model emits ``offset`` rows fewer)."""
-        out = self.outputs(X, prefix=prefix, ts_col=ts_col)
-        return out.select(ts_col, *[_q(f"{prefix}{t}") for t in self.target_cols])
+        cols = self._projection(
+            ("predict", ts_col, prefix),
+            lambda: [F.col(ts_col), *[_q(f"{prefix}{t}") for t in self.target_cols]],
+        )
+        return self.outputs(X, prefix=prefix, ts_col=ts_col).select(*cols)
 
 
 def gram_aggs(feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
@@ -175,6 +200,7 @@ class LinearModel(BaseModel):
         ).collect()[0]
         xtx, xty = gram_blocks(row, len(feats), len(targets))
         self.coef_ = self._solve(xtx, xty)
+        self._forget_projections()
         return self
 
     def _solve(self, xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
@@ -194,13 +220,18 @@ class LinearModel(BaseModel):
         prefix: str = "model_output__", ts_col: str = "ts",
     ) -> DataFrame:
         """``frame`` plus ``<prefix><t>`` per target in one projection, each
-        row's output that of ``models[row[key]]`` (this model when ``key``
-        is None)."""
-        exprs = {g: m._output_columns() for g, m in (models or {None: self}).items()}
-        return frame.select("*", *[
-            keyed(key, {g: e[j] for g, e in exprs.items()}).alias(f"{prefix}{t}")
-            for j, t in enumerate(self.target_cols)
-        ])
+        row's output that of ``models[row[key]]`` (this model, whose Columns
+        it keeps, when ``models`` is None)."""
+
+        def columns() -> list[Column]:
+            exprs = {g: m._output_columns() for g, m in (models or {None: self}).items()}
+            return [
+                keyed(key, {g: e[j] for g, e in exprs.items()}).alias(f"{prefix}{t}")
+                for j, t in enumerate(self.target_cols)
+            ]
+
+        cols = columns() if models else self._projection(("outputs", key, prefix), columns)
+        return frame.select("*", *cols)
 
     def group_aggs(self, feats: Sequence[str], ys: Sequence[str]) -> list[Column]:
         return gram_aggs(feats, ys)
@@ -213,6 +244,7 @@ class LinearModel(BaseModel):
         for model, fit in zip(models, fits):
             xtx, xty = reduce(lambda a, b: (a[0] + b[0], a[1] + b[1]), [blocks[g] for g in fit])
             model.coef_ = model._solve(xtx, xty)
+            model._forget_projections()
 
     @property
     def offset(self) -> int:
@@ -271,7 +303,7 @@ class RidgeModel(LinearModel):
 
 
 @register_model("DiffBasedAnomalyDetector")
-class DiffBasedAnomalyDetector:
+class DiffBasedAnomalyDetector(Projections):
     """Reference DiffBasedAnomalyDetector on Spark (diff.py:310-458 parity)."""
 
     def __init__(
@@ -307,6 +339,7 @@ class DiffBasedAnomalyDetector:
         self.base.fit(X, y, ts_col)
         # scaler fit on y AFTER training (diff.py:166-174)
         self.scaler = self._scaler_cls()(self.base.target_cols).fit(y)
+        self._forget_projections()
         return self
 
     def cross_validate(
@@ -322,6 +355,7 @@ class DiffBasedAnomalyDetector:
         with cached(frame) as data:
             cv = FoldCV(self, data, feats, targets, Folds.timeseries(n_splits), ts_col)
             score_model(cv, detector=self)
+        self._forget_projections()
         return self
 
     def get_metadata(self) -> dict:
@@ -362,34 +396,36 @@ class DiffBasedAnomalyDetector:
             "scaler": self.scaler_kind,
         }
 
-    def anomaly(self, frame: DataFrame, resolution: str = "10T", ts_col: str = "ts") -> DataFrame:
+    def anomaly(
+        self, frame: DataFrame, resolution: str = "10T", ts_col: str = "ts", all_columns: bool = False
+    ) -> DataFrame:
         """The anomaly block of ``frame`` (``ts_col``, the features, the
         targets as ``_yt_<t>``): a training or request frame, or
         ``with_targets(X, y, targets)`` of a separate X and y. A lookback
-        base scores the rows with a full window, keyed by target ts."""
-        targets = self.base.target_cols
+        base scores the rows with a full window, keyed by target ts.
+        ``all_columns`` adds the ``smooth_*`` columns; without it no
+        smoothing window is built. The block's Columns are built on the
+        first call per (``resolution``, ``ts_col``, ``all_columns``) and
+        kept for the next."""
         # the error's truth side is ALWAYS the caller's y (diff.py:356-359)
-        # — carried as _y__<t> so a y differing from the X-side tag columns
-        # is honored; model_input__ stays the X side
-        cols = [
-            ts_col,
-            *[_q(c).alias(c) for c in self.base.feature_cols],
-            *[F.col(f"`_yt_{t}`").alias(t) for t in targets if t not in self.base.feature_cols],
-            *[F.col(f"`_yt_{t}`").alias(f"_y__{t}") for t in targets],
-        ]
-        return anomaly_frame(
-            self.base.outputs(frame.select(*cols), ts_col=ts_col),
-            targets,
-            resolution=resolution,
-            scaler_stats=self._affine_stats(),
-            smoothing_method=self.smoothing_method,
-            smoothing_window=self.window,
-            thresholds=self.tag_thresholds_,
-            total_threshold=self.total_threshold_,
-            ts_col=ts_col,
-            y_prefix="_y__",
-            feature_tags=self.base.feature_cols,
+        # — the _yt_<t> columns, so a y differing from the X-side tag
+        # columns is honored; model_input__ stays the X side
+        project = self._projection(
+            (resolution, ts_col, all_columns),
+            lambda: anomaly_projection(
+                self.base.target_cols,
+                resolution=resolution,
+                scaler_stats=self._affine_stats(),
+                smoothing_method=self.smoothing_method,
+                smoothing_window=self.window if all_columns else None,
+                thresholds=self.tag_thresholds_,
+                total_threshold=self.total_threshold_,
+                ts_col=ts_col,
+                y_prefix="_yt_",
+                feature_tags=self.base.feature_cols,
+            ),
         )
+        return project(self.base.outputs(frame, ts_col=ts_col))
 
 
 @register_model("DiffBasedKFCVAnomalyDetector")
@@ -476,6 +512,7 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
             ).collect()[0]
         self.tag_thresholds_ = {t: row[f"_e_{t}"] for t in targets}
         self.total_threshold_ = row["_e_total"]
+        self._forget_projections()
         return self
 
 
@@ -488,12 +525,15 @@ class RowFitModel(BaseModel):
 
     def fit_folds(self, cv, fits: Sequence[tuple[int, ...]], models: Sequence) -> None:
         self._fit_rows(cv.exploded(fits), cv.feats, cv.targets, models, cv.ts_col)
+        for m in models:
+            m._forget_projections()
 
     def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts"):
         self.feature_cols = self.feature_cols or [c for c in X.columns if c != ts_col]
         self.target_cols = self.target_cols or [c for c in y.columns if c != ts_col]
         frame = with_targets(X, y, self.target_cols, ts_col).withColumn(FIT, F.lit(0))
         self._fit_rows(frame, self.feature_cols, self.target_cols, [self], ts_col)
+        self._forget_projections()
         return self
 
 
@@ -548,17 +588,17 @@ class LaggedLinearModel(RowFitModel):
         """``frame`` plus the lag design keyed at the TARGET row: ``<c>__lag<s>``
         is ``c`` from ``s + lookahead`` rows earlier within the row's ``part``
         partition in ts order; rows without a full window are dropped."""
-        w = Window.partitionBy(*([part] if part else [])).orderBy(ts_col)
-        lags = [
-            F.lag(_q(c), s + self.lookahead).over(w).alias(f"{c}__lag{s}")
-            for c in feats
-            for s in range(self.lookback)
-        ]
-        return (
-            frame.select("*", F.row_number().over(w).alias("_rn"), *lags)
-            .filter(F.col("_rn") > self.offset)
-            .drop("_rn")
-        )
+
+        def columns() -> list[Column]:
+            w = Window.partitionBy(*([part] if part else [])).orderBy(ts_col)
+            return [F.row_number().over(w).alias("_rn")] + [
+                F.lag(_q(c), s + self.lookahead).over(w).alias(f"{c}__lag{s}")
+                for c in feats
+                for s in range(self.lookback)
+            ]
+
+        cols = self._projection(("design", tuple(feats), part, ts_col), columns)
+        return frame.select("*", *cols).filter(F.col("_rn") > self.offset).drop("_rn")
 
     def _fit_rows(
         self, frame: DataFrame, feats: Sequence[str], targets: Sequence[str], models: Sequence,
@@ -585,7 +625,7 @@ class LaggedLinearModel(RowFitModel):
         (this model when ``key`` is None) over the lag design, so rows
         without a full window in ``key``'s partition are dropped."""
         design = self._design(frame, self.feature_cols, key, ts_col)
-        ols = {g: m._ols for g, m in (models or {None: self}).items()}
+        ols = models and {g: m._ols for g, m in models.items()}
         out = self._ols.outputs(design, key, ols, prefix, ts_col)
         return out.select(
             *[_q(c) for c in frame.columns], *[_q(f"{prefix}{t}") for t in self.target_cols]

@@ -36,12 +36,12 @@ is a narrow map stage fused by whole-stage codegen.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from gordo_spark.functions.timeutil import offset_alias_to_interval
-from gordo_spark.operators.smoothing import smooth
+from gordo_spark.operators.smoothing import smoother
 
 
 def scale_minmax(col: Column, mn: float, mx: float) -> Column:
@@ -66,6 +66,84 @@ def confidence(err: Column, threshold: float) -> Column:
     if threshold == 0:
         return F.when(err > 0, F.lit(float("inf"))).when(err == 0, F.lit(float("nan")))
     return err / F.lit(float(threshold))
+
+
+def anomaly_projection(
+    tags: Sequence[str],
+    resolution: str = "10T",
+    scaler_stats: Mapping[str, tuple[float, float]] | None = None,
+    smoothing_method: str = "smm",
+    smoothing_window: int | None = 144,
+    thresholds: Mapping[str, float] | None = None,
+    total_threshold: float | None = None,
+    ts_col: str = "ts",
+    y_prefix: str | None = None,
+    feature_tags: Sequence[str] | None = None,
+    machine_col: str | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """``anomaly_frame`` with its Columns built once: the function returned
+    computes the anomaly block of any frame of the ``aligned`` shape.
+    Without smoothing that is one ``select`` (the confidences divide the
+    error expressions themselves); with smoothing, the confidences follow
+    the ``smooth_*`` columns."""
+
+    def ycol(t: str) -> Column:
+        return F.col(f"`{y_prefix}{t}`") if y_prefix else F.col("`" + t + "`")
+
+    cols: list[Column] = (
+        [F.col("`" + machine_col + "`")] if machine_col else []
+    ) + [
+        F.col(ts_col).alias("start"),
+        (F.col(ts_col) + F.expr(offset_alias_to_interval(resolution))).alias("end"),
+    ]
+    input_tags = list(feature_tags) if feature_tags is not None else list(tags)
+    for t in input_tags:
+        cols.append(F.col("`" + t + "`").alias(f"model_input__{t}"))
+    pred = {t: F.col(f"`model_output__{t}`") for t in tags}
+    cols += pred.values()
+
+    # the error columns by name, as expressions over ``aligned``
+    errors = {f"tag_anomaly_unscaled__{t}": F.abs(pred[t] - ycol(t)) for t in tags}
+    errors["total_anomaly_unscaled"] = row_mean_square(list(errors.values()))
+    if scaler_stats is not None:
+        err_s = {
+            f"tag_anomaly_scaled__{t}": F.abs(
+                scale_minmax(pred[t], *scaler_stats[t])
+                - scale_minmax(ycol(t), *scaler_stats[t])
+            )
+            for t in tags
+        }
+        errors.update(err_s)
+        errors["total_anomaly_scaled"] = row_mean_square(list(err_s.values()))
+    cols += [e.alias(name) for name, e in errors.items()]
+
+    def confidences(col: Callable[[str], Column]) -> list[Column]:
+        if thresholds is None:
+            return []
+        # `is not None`, not truthiness: a legitimately-zero threshold
+        # (exact-fit fold) must still emit its confidence column, or the
+        # output schema would change shape with the data.
+        # tag confidence is ALWAYS unscaled error / unscaled threshold
+        # (diff.py:420 divides unscaled_abs_diff by feature_thresholds_,
+        # which were computed from the unscaled fold mae at diff.py:233)
+        out = [
+            confidence(col(f"tag_anomaly_unscaled__{t}"), thresholds[t]).alias(
+                f"anomaly_confidence__{t}"
+            )
+            for t in tags
+            if thresholds.get(t) is not None
+        ]
+        if total_threshold is not None:
+            total = col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled")
+            out.append(confidence(total, total_threshold).alias("total_anomaly_confidence"))
+        return out
+
+    if not smoothing_window:
+        cols += confidences(errors.__getitem__)
+        return lambda aligned: aligned.select(*cols)
+    smoothed = smoother(list(errors), smoothing_method, smoothing_window, "start", machine_col)
+    conf = confidences(lambda name: F.col(name))
+    return lambda aligned: smoothed(aligned.select(*cols)).select("*", *conf)
 
 
 def anomaly_frame(
@@ -104,66 +182,10 @@ def anomaly_frame(
     output. This is the 100 TB path: N machines = N parallel window
     partitions, never one.
     """
-
-    def ycol(t: str) -> Column:
-        return F.col(f"`{y_prefix}{t}`") if y_prefix else F.col("`" + t + "`")
-
-    cols: list[Column] = (
-        [F.col("`" + machine_col + "`")] if machine_col else []
-    ) + [
-        F.col(ts_col).alias("start"),
-        (F.col(ts_col) + F.expr(offset_alias_to_interval(resolution))).alias("end"),
-    ]
-    input_tags = list(feature_tags) if feature_tags is not None else list(tags)
-    for t in input_tags:
-        cols.append(F.col("`" + t + "`").alias(f"model_input__{t}"))
-    pred = {t: F.col(f"`model_output__{t}`") for t in tags}
-    cols += pred.values()
-
-    err_u = {t: F.abs(pred[t] - ycol(t)) for t in tags}
-    for t in tags:
-        cols.append(err_u[t].alias(f"tag_anomaly_unscaled__{t}"))
-    cols.append(row_mean_square([err_u[t] for t in tags]).alias("total_anomaly_unscaled"))
-
-    if scaler_stats is not None:
-        err_s = {
-            t: F.abs(
-                scale_minmax(pred[t], *scaler_stats[t])
-                - scale_minmax(ycol(t), *scaler_stats[t])
-            )
-            for t in tags
-        }
-        for t in tags:
-            cols.append(err_s[t].alias(f"tag_anomaly_scaled__{t}"))
-        cols.append(row_mean_square([err_s[t] for t in tags]).alias("total_anomaly_scaled"))
-
-    out = aligned.select(*cols)
-
-    if smoothing_window:
-        smooth_cols = [f"tag_anomaly_unscaled__{t}" for t in tags] + ["total_anomaly_unscaled"]
-        if scaler_stats is not None:
-            smooth_cols += [f"tag_anomaly_scaled__{t}" for t in tags] + ["total_anomaly_scaled"]
-        out = smooth(out, smooth_cols, smoothing_method, smoothing_window, "start", machine_col)
-
-    if thresholds is not None:
-        # `is not None`, not truthiness: a legitimately-zero threshold
-        # (exact-fit fold) must still emit its confidence column, or the
-        # output schema would change shape with the data.
-        # tag confidence is ALWAYS unscaled error / unscaled threshold
-        # (diff.py:420 divides unscaled_abs_diff by feature_thresholds_,
-        # which were computed from the unscaled fold mae at diff.py:233)
-        extra = [
-            confidence(F.col(f"`tag_anomaly_unscaled__{t}`"), thresholds[t]).alias(
-                f"anomaly_confidence__{t}"
-            )
-            for t in tags
-            if thresholds.get(t) is not None
-        ]
-        if total_threshold is not None:
-            total = F.col("total_anomaly_scaled" if scaler_stats else "total_anomaly_unscaled")
-            extra.append(confidence(total, total_threshold).alias("total_anomaly_confidence"))
-        out = out.select("*", *extra)
-    return out
+    return anomaly_projection(
+        tags, resolution, scaler_stats, smoothing_method, smoothing_window, thresholds,
+        total_threshold, ts_col, y_prefix, feature_tags, machine_col,
+    )(aligned)
 
 
 def fleet_consensus_flags(

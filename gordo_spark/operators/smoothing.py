@@ -21,7 +21,7 @@ the reference's one-process-per-machine model.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import math
 
@@ -56,6 +56,24 @@ def rolling_min(col: str, window: int, w_order: WindowSpec) -> Column:
 SMOOTHERS = {"smm": smm, "sma": sma}
 
 
+def smoother(
+    cols: Sequence[str],
+    method: str = "smm",
+    window: int = 144,
+    ts_col: str = "ts",
+    machine_col: str | None = None,
+    prefix: str = "smooth_",
+) -> Callable[[DataFrame], DataFrame]:
+    """``smooth`` with its window Columns built once: the function returned
+    adds ``<prefix><c>`` to any frame that carries ``cols``."""
+    if method == "ewma":
+        return lambda df: ewma(df, cols, span=window, ts_col=ts_col, machine_col=machine_col, prefix=prefix)
+    fn = SMOOTHERS[method]
+    w = (Window.partitionBy(machine_col) if machine_col else Window.partitionBy()).orderBy(ts_col)
+    smoothed = [fn(c, window, w).alias(f"{prefix}{c}") for c in cols]
+    return lambda df: df.select("*", *smoothed)
+
+
 def smooth(
     df: DataFrame,
     cols: Sequence[str],
@@ -68,11 +86,7 @@ def smooth(
     """W5 — ``df`` plus ``<prefix><c>``, column ``c`` through one smoothing
     method, for N columns in a single select (one window shuffle shared by
     all columns); any column name works, dotted tag names included."""
-    if method == "ewma":
-        return ewma(df, cols, span=window, ts_col=ts_col, machine_col=machine_col, prefix=prefix)
-    fn = SMOOTHERS[method]
-    w = (Window.partitionBy(machine_col) if machine_col else Window.partitionBy()).orderBy(ts_col)
-    return df.select("*", *[fn(c, window, w).alias(f"{prefix}{c}") for c in cols])
+    return smoother(cols, method, window, ts_col, machine_col, prefix)(df)
 
 
 def ewma(

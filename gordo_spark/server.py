@@ -31,11 +31,17 @@ Reference behaviors reproduced:
   parquet file parts ``X``/``y``, parsed to pandas (utils.py:283-301);
   ``?format=parquet`` returns the frame, indexed by its timestamps, as
   parquet bytes written from pandas (blueprints/anomaly.py:64-71);
-- ``?all_columns`` keeps the smooth-* columns, which are dropped by
-  default (blueprints/anomaly.py:17-22,57-62);
+- ``?all_columns`` adds the smooth-* columns, which the reference drops
+  by default and which are not computed here without it
+  (blueprints/anomaly.py:17-22,57-62);
 - errors: missing/malformed X and column-arity mismatches -> 400 with an
   ``error`` body; anomaly scoring on a model without ``.anomaly`` -> 422
   (blueprints/anomaly.py:46-55); unknown machine -> 404.
+
+``/prediction`` and ``/anomaly/prediction`` answer with a ``Server-Timing``
+header giving the request's ``parse`` (body and request frame), ``plan``
+(the model's projection), ``execute`` (collect) and ``serialize``
+(response dict and body) milliseconds.
 
 Scoring itself delegates to the stateless functions in ``serving.py``
 (LRU model cache included), which align X and y in pandas and start Spark
@@ -46,9 +52,14 @@ from __future__ import annotations
 
 import email
 import json
+import os
+import pickle
 import re
+import time
 import traceback
 from urllib.parse import parse_qs
+
+import pandas as pd
 
 from gordo_spark import __version__ as _version
 from gordo_spark.serving import (
@@ -60,6 +71,7 @@ from gordo_spark.serving import (
 from gordo_spark.sources.serving_io import (
     dataframe_from_parquet_bytes,
     dataframe_into_parquet_bytes,
+    timed,
 )
 from gordo_spark.sources.store import ModelStore
 
@@ -88,8 +100,6 @@ class GordoServer:
 
     # ------------------------------------------------------------ plumbing
     def __call__(self, environ, start_response):
-        import time
-
         t0 = time.perf_counter()
         try:
             status, headers, body = self._dispatch(environ)
@@ -173,8 +183,6 @@ class GordoServer:
         # project-level routes (base.py:183-220)
         if len(parts) == 1 and method == "GET":
             if parts[0] == "models":
-                import os
-
                 rev = store.latest_revision()
                 d = os.path.join(self.store_root, rev) if rev else None
                 models = sorted(os.listdir(d)) if d and os.path.isdir(d) else []
@@ -218,8 +226,6 @@ class GordoServer:
                 return self._stamped(resp, args)
             if route == "download-model" and method == "GET":
                 # serialized copy of the served model (base.py:164-180)
-                import pickle
-
                 model, _, rev = _serving_load(self.store_root, machine, revision)
                 return (
                     "200 OK",
@@ -230,14 +236,17 @@ class GordoServer:
                     ],
                     pickle.dumps(model),
                 )
+            timings: dict[str, float] = {}
             if route == "prediction" and method == "POST":
-                payload = self._payload(environ)
+                with timed(timings, "parse"):
+                    payload = self._payload(environ)
                 resp = prediction_response(
-                    self.spark, self.store_root, machine, payload, revision
+                    self.spark, self.store_root, machine, payload, revision, timings=timings
                 )
-                return self._stamped(resp, args)
+                return self._stamped(resp, args, timings)
             if route == "anomaly/prediction" and method == "POST":
-                payload = self._payload(environ)
+                with timed(timings, "parse"):
+                    payload = self._payload(environ)
                 model, _, rev = _serving_load(self.store_root, machine, revision)
                 if not hasattr(model, "anomaly"):
                     # model has no .anomaly -> 422 (blueprints/anomaly.py:55)
@@ -253,8 +262,9 @@ class GordoServer:
                     # the revision just checked, not a second latest_revision()
                     rev,
                     all_columns=_truthy(args.get("all_columns")),
+                    timings=timings,
                 )
-                return self._stamped(resp, args)
+                return self._stamped(resp, args, timings)
         except FileNotFoundError as exc:
             return self._json(404, {"error": str(exc)})
         except (ValueError, KeyError) as exc:
@@ -307,15 +317,24 @@ class GordoServer:
             _json_bytes(obj),
         )
 
-    def _stamped(self, resp: dict, args: dict):
+    def _stamped(self, resp: dict, args: dict, timings: dict | None = None):
         """Stamp the served revision into body + header; honor
-        ?format=parquet for data-carrying responses."""
+        ?format=parquet for data-carrying responses. With ``timings``, the
+        body's encoding counts as ``serialize`` and a ``Server-Timing``
+        header reports every phase."""
+        with timed(timings, "serialize"):
+            status, headers, body = self._encoded(resp, args)
+        if timings:
+            headers.append(("Server-Timing", ", ".join(
+                f"{phase};dur={1000 * s:.3f}" for phase, s in timings.items()
+            )))
+        return status, headers, body
+
+    def _encoded(self, resp: dict, args: dict):
         rev = str(resp.get("revision", ""))
         if args.get("format") == "parquet" and "data" in resp:
             # the frame the reference sends: ``top__second`` columns indexed
             # by the timestamps (an anomaly row's is its bucket's start)
-            import pandas as pd
-
             flat: dict = {}
             for top, val in resp["data"].items():
                 if isinstance(val, dict) and all(

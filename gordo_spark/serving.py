@@ -13,9 +13,14 @@ pickled model via an LRU cache (the reference caches N_CACHED_MODELS=2,
 gordo/server/utils.py:334-353), shape the request in pandas with
 serving_io (X and y aligned on ``ts`` before Spark, as the reference
 aligns them), start Spark at one ``createDataFrame`` of that request
-frame, run the model's DataFrame plan, shape the response. A REST layer
-(any WSGI app) or a Structured Streaming ``foreachBatch`` can wrap these
-unchanged — the scoring itself never touches driver-side loops.
+frame, apply the model's projection to it and collect the rows on the
+driver. A model builds its projection (its prediction or anomaly Column
+lists) on its first request after it enters the LRU and keeps it, so a
+request only binds those Columns to its frame. Spark folds a projection
+of a local frame on the driver, so a Linear model's request runs 0 Spark
+jobs; a lookback or pandas base runs the jobs its windows or Python pass
+need. A REST layer (any WSGI app) or a Structured Streaming
+``foreachBatch`` can wrap these unchanged.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from gordo_spark.sources.serving_io import (
     dataframe_from_dict,
     dataframe_to_dict,
+    timed,
     verify_columns,
 )
 from gordo_spark.sources.store import ModelStore
@@ -88,12 +94,17 @@ def prediction_response(
     name: str,
     payload: dict,
     revision: str | None = None,
+    timings: dict | None = None,
 ) -> dict:
-    """Base prediction: model output keyed by ts."""
+    """Base prediction: model output keyed by ts. ``timings`` gets the
+    request's ``parse``, ``plan``, ``execute`` and ``serialize`` seconds."""
     model, _, rev = _load(store_root, name, revision)
     base = getattr(model, "base", model)
-    out = base.predict(_frame(spark, model, payload, with_y=False))
-    return {"data": dataframe_to_dict(out), "revision": rev, "name": name}
+    with timed(timings, "parse"):
+        frame = _frame(spark, model, payload, with_y=False)
+    with timed(timings, "plan"):
+        out = base.predict(frame)
+    return {"data": dataframe_to_dict(out, timings=timings), "revision": rev, "name": name}
 
 
 def anomaly_response(
@@ -104,11 +115,13 @@ def anomaly_response(
     revision: str | None = None,
     all_columns: bool = False,
     resolution: str | None = None,
+    timings: dict | None = None,
 ) -> dict:
-    """Full anomaly block; smooth-* columns dropped unless ``all_columns``
+    """Full anomaly block; smooth-* columns only with ``all_columns``
     (gordo/server/blueprints/anomaly.py:17-22,57-62). ``resolution``
     defaults to the trained dataset's resolution from metadata
-    (gordo/server/properties.py:45-49)."""
+    (gordo/server/properties.py:45-49). ``timings`` as for
+    ``prediction_response``."""
     model, metadata, rev = _load(store_root, name, revision)
     if resolution is None:
         resolution = (
@@ -116,7 +129,9 @@ def anomaly_response(
             .get("dataset", {})
             .get("resolution", "10T")
         )
-    out = model.anomaly(_frame(spark, model, payload, with_y=True), resolution=resolution)
-    if not all_columns:
-        out = out.drop(*[c for c in out.columns if c.startswith("smooth_")])
-    return {"data": dataframe_to_dict(out, ts_col="start"), "revision": rev, "name": name}
+    with timed(timings, "parse"):
+        frame = _frame(spark, model, payload, with_y=True)
+    with timed(timings, "plan"):
+        out = model.anomaly(frame, resolution=resolution, all_columns=all_columns)
+    data = dataframe_to_dict(out, ts_col="start", timings=timings)
+    return {"data": data, "revision": rev, "name": name}

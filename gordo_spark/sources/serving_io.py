@@ -14,23 +14,41 @@ Reference semantics:
 
 The request boundary is pandas: requests are small, so they are parsed,
 verified and (in ``serving``) X-with-y aligned as pandas frames before
-the one ``createDataFrame``; only ``dataframe_to_dict`` reads Spark.
+the one ``createDataFrame``; only ``dataframe_to_dict`` reads Spark, by
+collecting the response's rows to the driver.
 """
 
 from __future__ import annotations
 
 import io
-from collections.abc import Sequence
+import math
+import time
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
+from datetime import timezone
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, FloatType, TimestampType
+
+
+@contextmanager
+def timed(timings: dict | None, phase: str) -> Iterator[None]:
+    """Add the seconds the block takes to ``timings[phase]`` (no-op when
+    ``timings`` is None): the request phases a response reports."""
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        if timings is not None:
+            timings[phase] = timings.get(phase, 0.0) + time.perf_counter() - t0
 
 
 def dataframe_from_dict(data: dict | list, ts_col: str = "ts") -> pd.DataFrame:
     """JSON request -> pandas frame. Accepts ``{"X": [[...]]}``-style lists
     of rows (positional columns named c0..cn) or nested ``{col: {ts: val}}``
-    dicts; index parsed as ISO datetimes when possible, else as ints, rows
-    sorted; the index becomes ``ts_col``."""
+    dicts; index parsed as ISO 8601 datetimes when possible, else as ints,
+    rows sorted; the index becomes ``ts_col``."""
     if isinstance(data, list):
         pdf = pd.DataFrame(data, columns=[f"c{i}" for i in range(len(data[0]))])
         # positional payloads carry no timestamps: the row position IS the
@@ -41,32 +59,49 @@ def dataframe_from_dict(data: dict | list, ts_col: str = "ts") -> pd.DataFrame:
         return pdf
     pdf = pd.DataFrame.from_dict(data)
     try:
-        pdf.index = pd.to_datetime(pdf.index, utc=True).tz_localize(None)
+        pdf.index = pd.to_datetime(pdf.index, utc=True, format="ISO8601").tz_localize(None)
     except (ValueError, TypeError):
         pdf.index = pdf.index.astype(int)
     return pdf.sort_index().reset_index(names=ts_col)
 
 
-def dataframe_to_dict(df: DataFrame, ts_col: str = "ts") -> dict:
-    """DataFrame -> nested response dict; ``top__second`` columns regroup
-    into two levels (MultiIndex parity)."""
-    pdf = df.toPandas()
-    if ts_col in pdf.columns:
-        pdf = pdf.set_index(ts_col)
-        # positional payloads carry integer row keys, not timestamps
-        pdf.index = pdf.index.map(
-            lambda t: t.isoformat() if hasattr(t, "isoformat") else t
-        )
-    for col in pdf.columns:
-        if pd.api.types.is_datetime64_any_dtype(pdf[col]):
-            pdf[col] = pdf[col].map(lambda t: t.isoformat())
-    out: dict = {}
-    for col in pdf.columns:
-        if "__" in col:
-            top, second = col.split("__", 1)
-            out.setdefault(top, {})[second] = pdf[col].to_dict()
-        else:
-            out[col] = pdf[col].to_dict()
+def _json_values(dtype, values: list) -> list:
+    """A collected column's values as ``toPandas`` handed them to the JSON
+    encoder: a null float is NaN, a timestamp is the ISO string of its UTC
+    wall clock whatever the process time zone ``collect`` gave it in, and
+    a date is ISO too."""
+    if isinstance(dtype, TimestampType):
+        return [
+            v if v is None else v.astimezone(timezone.utc).replace(tzinfo=None).isoformat()
+            for v in values
+        ]
+    if isinstance(dtype, (DoubleType, FloatType)):
+        return [math.nan if v is None else v for v in values]
+    return [v.isoformat() if hasattr(v, "isoformat") else v for v in values]
+
+
+def dataframe_to_dict(df: DataFrame, ts_col: str = "ts", timings: dict | None = None) -> dict:
+    """DataFrame -> nested response dict keyed by ``ts_col`` (by row number
+    without it); ``top__second`` columns regroup into two levels
+    (MultiIndex parity). The rows are collected to the driver: a request
+    plan over one local frame runs no Spark job. ``timings`` gets the
+    ``execute`` (collect) and ``serialize`` phases."""
+    with timed(timings, "execute"):
+        rows = df.collect()
+    with timed(timings, "serialize"):
+        columns = {
+            f.name: _json_values(f.dataType, [r[i] for r in rows])
+            for i, f in enumerate(df.schema.fields)
+        }
+        keys = columns.pop(ts_col, range(len(rows)))
+        out: dict = {}
+        for col, values in columns.items():
+            series = dict(zip(keys, values))
+            if "__" in col:
+                top, second = col.split("__", 1)
+                out.setdefault(top, {})[second] = series
+            else:
+                out[col] = series
     return out
 
 

@@ -338,3 +338,28 @@ def test_influx_provider_query_generation_and_read(spark):
          "uri": "h:1/u/p/d"}
     )
     assert p2.db_name == "d"
+
+
+def test_from_dict_keys_parse_without_warnings():
+    """ISO keys parse as an explicit ISO 8601 format and integer keys fall
+    back to ints, neither through pandas' per-key dateutil guess (which
+    warns)."""
+    import warnings
+
+    import pandas as pd
+
+    iso = {"a": {"2019-01-01T01:00:00+00:00": 2.0, "2019-01-01T00:30:00+00:00": 1.0}}
+    ints = {"a": {"10": 2.0, "2": 1.0}}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got_iso, got_ints = dataframe_from_dict(iso), dataframe_from_dict(ints)
+    pd.testing.assert_frame_equal(
+        got_iso,
+        pd.DataFrame({
+            "ts": pd.to_datetime(["2019-01-01T00:30:00", "2019-01-01T01:00:00"]),
+            "a": [1.0, 2.0],
+        }),
+    )
+    pd.testing.assert_frame_equal(
+        got_ints, pd.DataFrame({"ts": [2, 10], "a": [1.0, 2.0]})
+    )

@@ -125,7 +125,7 @@ def test_anomaly_detector_end_to_end(spark, xy):
     assert set(det.tag_thresholds_) == {"t1", "t2"}
     assert det.total_threshold_ > 0
     frame = with_targets(X, y, det.base.target_cols)
-    out = det.anomaly(frame, resolution="10T").toPandas().sort_values("start")
+    out = det.anomaly(frame, resolution="10T", all_columns=True).toPandas().sort_values("start")
     expected_cols = {
         "start", "end",
         # model_input block = the X/feature tags (reference

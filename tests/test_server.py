@@ -384,7 +384,7 @@ class _BuggyDetector:
 
     feature_cols = target_cols = TAGS
 
-    def anomaly(self, frame, resolution="10T", ts_col="ts"):
+    def anomaly(self, frame, resolution="10T", ts_col="ts", all_columns=False):
         return None.columns
 
 
@@ -439,8 +439,9 @@ def test_blanket_500_names_the_exception(served, monkeypatch):
 
 
 def test_request_job_counts(served, job_count):
-    """One request frame, no X/y join: an anomaly request runs 1 Spark job
-    (2 with the smooth-* windows of ?all_columns), a prediction 1."""
+    """One local request frame through the model's projection, collected on
+    the driver: an anomaly request and a prediction run no Spark job (the
+    smooth-* windows of ?all_columns run 2)."""
     app, _, payload = served
     paths = {
         "anomaly": "/srv-machine/anomaly/prediction",
@@ -451,7 +452,7 @@ def test_request_job_counts(served, job_count):
     for route, path in paths.items():
         assert call(app, path, "POST", payload)["status"] == 200  # warm
         jobs[route] = job_count(f"request-{route}", lambda: call(app, path, "POST", payload))
-    assert jobs == {"anomaly": 1, "all_columns": 2, "prediction": 1}
+    assert jobs == {"anomaly": 0, "all_columns": 2, "prediction": 0}
 
 
 def test_integer_keyed_prediction_keeps_its_keys(served):
@@ -482,28 +483,45 @@ def test_anomaly_without_timestamps_is_a_400(served, shape):
     assert "timestamps" in json.loads(r["body"])["error"]
 
 
-@pytest.mark.parametrize(
-    "base,expected",
-    [
-        (None, {"anomaly": 1, "all_columns": 2, "prediction": 1}),
-        (_lagged(3, 1), {"anomaly": 2, "all_columns": 2, "prediction": 2}),
-        (_AUTOENCODER, {"anomaly": 1, "all_columns": 2, "prediction": 1}),
-    ],
-    ids=["linear", "lagged", "autoencoder"],
-)
-def test_request_job_counts_per_base(spark, xy_wide, tmp_path, job_count, base, expected):
-    """Every base scores the request frame through its ``outputs``, with no
-    prediction join: a warm 100-row request on the in-memory ``xy`` machine."""
+def _xy_store(spark, xy_wide, root, base=None, smoothing="smm"):
+    """The in-memory ``xy`` machine built into a store at ``root``."""
     wide, _ = xy_wide
-    store = ModelStore(str(tmp_path / "models"))
-    ModelBuilder(_xy_machine(3, base=base), store, wide_frame=wide).build(spark)
-    app = build_app(spark, store.root)
-    rng = np.random.default_rng(7)
-    keys = [t.isoformat() for t in pd.date_range("2019-02-01", periods=100, freq="10min")]
-    payload = {
-        side: {c: dict(zip(keys, rng.random(100))) for c in cols}
+    machine = _xy_machine(3, base=base)
+    machine.model["smoothing_method"] = smoothing
+    store = ModelStore(root)
+    ModelBuilder(machine, store, wide_frame=wide).build(spark)
+    return store
+
+
+def _xy_payload(n=100, seed=7):
+    rng = np.random.default_rng(seed)
+    keys = [t.isoformat() for t in pd.date_range("2019-02-01", periods=n, freq="10min")]
+    return {
+        side: {c: dict(zip(keys, rng.random(n))) for c in cols}
         for side, cols in (("X", ["a", "b"]), ("y", ["t1", "t2"]))
     }
+
+
+@pytest.mark.parametrize(
+    "base,smoothing,expected",
+    [
+        (None, "smm", {"anomaly": 0, "all_columns": 2, "prediction": 0}),
+        (None, "ewma", {"anomaly": 0, "all_columns": 2, "prediction": 0}),
+        (_lagged(3, 1), "smm", {"anomaly": 2, "all_columns": 2, "prediction": 2}),
+        (_AUTOENCODER, "smm", {"anomaly": 1, "all_columns": 2, "prediction": 1}),
+    ],
+    ids=["linear", "linear-ewma", "lagged", "autoencoder"],
+)
+def test_request_job_counts_per_base(
+    spark, xy_wide, tmp_path, job_count, base, smoothing, expected
+):
+    """Every base scores the request frame through its ``outputs``, with no
+    prediction join, and the default anomaly block builds no smoothing (an
+    ``ewma`` detector runs no pandas pass): a warm 100-row request on the
+    in-memory ``xy`` machine."""
+    store = _xy_store(spark, xy_wide, str(tmp_path / "models"), base, smoothing)
+    app = build_app(spark, store.root)
+    payload = _xy_payload()
     paths = {
         "anomaly": "/xy-machine/anomaly/prediction",
         "all_columns": "/xy-machine/anomaly/prediction?all_columns=true",
@@ -512,6 +530,67 @@ def test_request_job_counts_per_base(spark, xy_wide, tmp_path, job_count, base, 
     jobs = {}
     for route, path in paths.items():
         assert call(app, path, "POST", payload)["status"] == 200  # warm
-        group = f"request-{route}-{base and base['kind']}"
+        group = f"request-{route}-{base and base['kind']}-{smoothing}"
         jobs[route] = job_count(group, lambda: call(app, path, "POST", payload))
     assert jobs == expected
+
+
+def test_projection_built_once_per_loaded_model(spark, xy_wide, tmp_path, monkeypatch):
+    """N requests to one loaded model build its anomaly and prediction
+    Column lists once; after the LRU evicts it, its reload builds them once
+    more."""
+    from gordo_spark.ml import models
+
+    store = _xy_store(spark, xy_wide, str(tmp_path / "models"))
+    rev = store.latest_revision()
+    model, metadata = store.load("xy-machine", rev)
+    for other in ("1000000001", "1000000002"):
+        store.dump(model, "xy-machine", metadata, revision=other)
+    builds = {"anomaly": 0, "prediction": 0}
+
+    def counted(fn, key):
+        def wrapper(*args, **kwargs):
+            builds[key] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(models, "anomaly_projection", counted(models.anomaly_projection, "anomaly"))
+    monkeypatch.setattr(
+        models.LinearModel, "_output_columns",
+        counted(models.LinearModel._output_columns, "prediction"),
+    )
+    app = build_app(spark, store.root)
+    payload = _xy_payload()
+
+    def requests(revision, n):
+        for _ in range(n):
+            for path in ("/xy-machine/anomaly/prediction", "/xy-machine/prediction"):
+                r = call(app, path, "POST", payload, headers={"revision": revision})
+                assert r["status"] == 200, r["body"]
+
+    requests(rev, 4)
+    assert builds == {"anomaly": 1, "prediction": 1}
+    requests("1000000001", 1)
+    requests("1000000002", 1)  # two other models fill the 2-entry LRU
+    assert builds == {"anomaly": 3, "prediction": 3}
+    requests(rev, 3)  # reloaded: built once more
+    assert builds == {"anomaly": 4, "prediction": 4}
+
+
+def test_server_timing_header(served):
+    """Scoring routes report their phases in a ``Server-Timing`` header
+    (``<phase>;dur=<ms>``); the metadata route does not."""
+    app, _, payload = served
+    for path in ("/srv-machine/prediction", "/srv-machine/anomaly/prediction",
+                 "/srv-machine/anomaly/prediction?format=parquet"):
+        r = call(app, path, "POST", payload)
+        assert r["status"] == 200
+        phases = {}
+        for entry in r["headers"]["Server-Timing"].split(", "):
+            name, dur = entry.split(";")
+            assert dur.startswith("dur=")
+            phases[name] = float(dur[len("dur="):])
+        assert list(phases) == ["parse", "plan", "execute", "serialize"]
+        assert all(v >= 0 for v in phases.values())
+    assert "Server-Timing" not in call(app, "/srv-machine/metadata")["headers"]
