@@ -327,7 +327,6 @@ class FoldCV:
         if base is not self.model:
             self.model.scaler = self.model._scaler_cls()(self.targets)
             self.model.scaler.stats = self.stats(self.model.scaler_kind, self.n_splits)
-            self.model._forget_projections()
 
 
 def detector_errors(cv: FoldCV, detector: DiffBasedAnomalyDetector) -> list[Column]:

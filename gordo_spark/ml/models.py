@@ -16,7 +16,7 @@ registry (gordo/machine/model/factories/*). Here:
   ``frame``, each row scored by ``models[row[key]]`` (by the model itself
   when ``key`` is None). ``predict``, the fold engine's predictions
   (``ml.cv.FoldCV``), the detector's ``anomaly`` and the streaming select
-  all score through it. A fitted model keeps the Column lists of its own
+  all score through it. A served model keeps the Column lists of its own
   ``outputs``, ``predict`` and ``anomaly`` (``Projections``), so serving a
   request only binds them to the request's frame.
 - ``DiffBasedAnomalyDetector`` — reference diff.py semantics: fit base
@@ -123,20 +123,23 @@ def keyed(key: str | None, values: Mapping) -> Column:
 
 
 class Projections:
-    """Column lists a fitted model keeps and applies to every frame it
+    """Column lists a served model keeps and applies to every frame it
     scores: a Column is an unresolved expression that binds to whichever
-    frame selects it, so a served model builds its lists on its first
-    request, not on every one. Refitting forgets them, and pickles (and
-    copies) leave them out."""
+    frame selects it, so after ``keep_projections`` a model builds each list
+    on its first request, not on every one. Only a model that is scored and
+    never refit keeps them (serving keeps its loaded models'); any other
+    model builds its lists per call, and pickles leave them out."""
+
+    def keep_projections(self) -> None:
+        self._projections = {}
 
     def _projection(self, key: Hashable, build: Callable[[], object]):
-        kept = self.__dict__.setdefault("_projections", {})
+        kept = self.__dict__.get("_projections")
+        if kept is None:
+            return build()
         if key not in kept:
             kept[key] = build()
         return kept[key]
-
-    def _forget_projections(self) -> None:
-        self.__dict__.pop("_projections", None)
 
     def __getstate__(self) -> dict:
         return {k: v for k, v in self.__dict__.items() if k != "_projections"}
@@ -200,7 +203,6 @@ class LinearModel(BaseModel):
         ).collect()[0]
         xtx, xty = gram_blocks(row, len(feats), len(targets))
         self.coef_ = self._solve(xtx, xty)
-        self._forget_projections()
         return self
 
     def _solve(self, xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
@@ -244,7 +246,6 @@ class LinearModel(BaseModel):
         for model, fit in zip(models, fits):
             xtx, xty = reduce(lambda a, b: (a[0] + b[0], a[1] + b[1]), [blocks[g] for g in fit])
             model.coef_ = model._solve(xtx, xty)
-            model._forget_projections()
 
     @property
     def offset(self) -> int:
@@ -325,6 +326,10 @@ class DiffBasedAnomalyDetector(Projections):
         self.tag_thresholds_: dict[str, float] | None = None
         self.total_threshold_: float | None = None
 
+    def keep_projections(self) -> None:
+        super().keep_projections()
+        self.base.keep_projections()
+
     def _scaler_cls(self):
         from gordo_spark.ml.scalers import RobustScalerExpr
 
@@ -339,7 +344,6 @@ class DiffBasedAnomalyDetector(Projections):
         self.base.fit(X, y, ts_col)
         # scaler fit on y AFTER training (diff.py:166-174)
         self.scaler = self._scaler_cls()(self.base.target_cols).fit(y)
-        self._forget_projections()
         return self
 
     def cross_validate(
@@ -355,7 +359,6 @@ class DiffBasedAnomalyDetector(Projections):
         with cached(frame) as data:
             cv = FoldCV(self, data, feats, targets, Folds.timeseries(n_splits), ts_col)
             score_model(cv, detector=self)
-        self._forget_projections()
         return self
 
     def get_metadata(self) -> dict:
@@ -512,7 +515,6 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
             ).collect()[0]
         self.tag_thresholds_ = {t: row[f"_e_{t}"] for t in targets}
         self.total_threshold_ = row["_e_total"]
-        self._forget_projections()
         return self
 
 
@@ -525,15 +527,12 @@ class RowFitModel(BaseModel):
 
     def fit_folds(self, cv, fits: Sequence[tuple[int, ...]], models: Sequence) -> None:
         self._fit_rows(cv.exploded(fits), cv.feats, cv.targets, models, cv.ts_col)
-        for m in models:
-            m._forget_projections()
 
     def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts"):
         self.feature_cols = self.feature_cols or [c for c in X.columns if c != ts_col]
         self.target_cols = self.target_cols or [c for c in y.columns if c != ts_col]
         frame = with_targets(X, y, self.target_cols, ts_col).withColumn(FIT, F.lit(0))
         self._fit_rows(frame, self.feature_cols, self.target_cols, [self], ts_col)
-        self._forget_projections()
         return self
 
 
@@ -588,17 +587,17 @@ class LaggedLinearModel(RowFitModel):
         """``frame`` plus the lag design keyed at the TARGET row: ``<c>__lag<s>``
         is ``c`` from ``s + lookahead`` rows earlier within the row's ``part``
         partition in ts order; rows without a full window are dropped."""
-
-        def columns() -> list[Column]:
-            w = Window.partitionBy(*([part] if part else [])).orderBy(ts_col)
-            return [F.row_number().over(w).alias("_rn")] + [
-                F.lag(_q(c), s + self.lookahead).over(w).alias(f"{c}__lag{s}")
-                for c in feats
-                for s in range(self.lookback)
-            ]
-
-        cols = self._projection(("design", tuple(feats), part, ts_col), columns)
-        return frame.select("*", *cols).filter(F.col("_rn") > self.offset).drop("_rn")
+        w = Window.partitionBy(*([part] if part else [])).orderBy(ts_col)
+        lags = [
+            F.lag(_q(c), s + self.lookahead).over(w).alias(f"{c}__lag{s}")
+            for c in feats
+            for s in range(self.lookback)
+        ]
+        return (
+            frame.select("*", F.row_number().over(w).alias("_rn"), *lags)
+            .filter(F.col("_rn") > self.offset)
+            .drop("_rn")
+        )
 
     def _fit_rows(
         self, frame: DataFrame, feats: Sequence[str], targets: Sequence[str], models: Sequence,
@@ -625,7 +624,7 @@ class LaggedLinearModel(RowFitModel):
         (this model when ``key`` is None) over the lag design, so rows
         without a full window in ``key``'s partition are dropped."""
         design = self._design(frame, self.feature_cols, key, ts_col)
-        ols = models and {g: m._ols for g, m in models.items()}
+        ols = {g: m._ols for g, m in (models or {None: self}).items()}
         out = self._ols.outputs(design, key, ols, prefix, ts_col)
         return out.select(
             *[_q(c) for c in frame.columns], *[_q(f"{prefix}{t}") for t in self.target_cols]

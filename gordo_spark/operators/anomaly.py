@@ -81,11 +81,32 @@ def anomaly_projection(
     feature_tags: Sequence[str] | None = None,
     machine_col: str | None = None,
 ) -> Callable[[DataFrame], DataFrame]:
-    """``anomaly_frame`` with its Columns built once: the function returned
-    computes the anomaly block of any frame of the ``aligned`` shape.
+    """The full anomaly column block, its Columns built once: the function
+    returned computes the block of any frame of the ``aligned`` shape.
     Without smoothing that is one ``select`` (the confidences divide the
     error expressions themselves); with smoothing, the confidences follow
-    the ``smooth_*`` columns."""
+    the ``smooth_*`` columns.
+
+    ``aligned`` must carry ``ts``, one ``<tag>`` column per target tag and
+    one ``model_output__<tag>`` column per tag (the model output side),
+    already tail-aligned (operators.align.tail_align).
+    ``y_prefix``: when set, the truth side of the error is the
+    ``<y_prefix><tag>`` columns (a caller-supplied y differing from the
+    model-input tags, diff.py:356-359 uses y); default: the ``<tag>``
+    columns serve as both model_input and truth (autoencoder case).
+    ``scaler_stats``: per-tag (min, max) from train time; None disables the
+    scaled block. ``thresholds``/``total_threshold``: broadcast scalars from
+    CV; None disables confidences.
+    ``feature_tags``: the X-side tag list for the ``model_input__`` block
+    (the reference's make_base_dataframe emits model-input columns for the
+    feature tags only, gordo/machine/model/utils.py:49-110); default None =
+    ``tags`` (the autoencoder case, where targets == features).
+    ``machine_col``: multi-machine frames — smoothing windows partition by
+    this column (one bounded series per machine) instead of running a
+    global single-partition window; the column is carried through the
+    output. This is the 100 TB path: N machines = N parallel window
+    partitions, never one.
+    """
 
     def ycol(t: str) -> Column:
         return F.col(f"`{y_prefix}{t}`") if y_prefix else F.col("`" + t + "`")
@@ -142,50 +163,14 @@ def anomaly_projection(
         cols += confidences(errors.__getitem__)
         return lambda aligned: aligned.select(*cols)
     smoothed = smoother(list(errors), smoothing_method, smoothing_window, "start", machine_col)
-    conf = confidences(lambda name: F.col(name))
+    conf = confidences(lambda name: F.col(f"`{name}`"))
     return lambda aligned: smoothed(aligned.select(*cols)).select("*", *conf)
 
 
-def anomaly_frame(
-    aligned: DataFrame,
-    tags: Sequence[str],
-    resolution: str = "10T",
-    scaler_stats: Mapping[str, tuple[float, float]] | None = None,
-    smoothing_method: str = "smm",
-    smoothing_window: int | None = 144,
-    thresholds: Mapping[str, float] | None = None,
-    total_threshold: float | None = None,
-    ts_col: str = "ts",
-    y_prefix: str | None = None,
-    feature_tags: Sequence[str] | None = None,
-    machine_col: str | None = None,
-) -> DataFrame:
-    """Compute the full anomaly column block.
-
-    ``aligned`` must carry ``ts``, one ``<tag>`` column per target tag and
-    one ``model_output__<tag>`` column per tag (the model output side),
-    already tail-aligned (operators.align.tail_align).
-    ``y_prefix``: when set, the truth side of the error is the
-    ``<y_prefix><tag>`` columns (a caller-supplied y differing from the
-    model-input tags, diff.py:356-359 uses y); default: the ``<tag>``
-    columns serve as both model_input and truth (autoencoder case).
-    ``scaler_stats``: per-tag (min, max) from train time; None disables the
-    scaled block. ``thresholds``/``total_threshold``: broadcast scalars from
-    CV; None disables confidences.
-    ``feature_tags``: the X-side tag list for the ``model_input__`` block
-    (the reference's make_base_dataframe emits model-input columns for the
-    feature tags only, gordo/machine/model/utils.py:49-110); default None =
-    ``tags`` (the autoencoder case, where targets == features).
-    ``machine_col``: multi-machine frames — smoothing windows partition by
-    this column (one bounded series per machine) instead of running a
-    global single-partition window; the column is carried through the
-    output. This is the 100 TB path: N machines = N parallel window
-    partitions, never one.
-    """
-    return anomaly_projection(
-        tags, resolution, scaler_stats, smoothing_method, smoothing_window, thresholds,
-        total_threshold, ts_col, y_prefix, feature_tags, machine_col,
-    )(aligned)
+def anomaly_frame(aligned: DataFrame, *args, **kwargs) -> DataFrame:
+    """The anomaly block of ``aligned``: ``anomaly_projection(*args,
+    **kwargs)`` applied to it."""
+    return anomaly_projection(*args, **kwargs)(aligned)
 
 
 def fleet_consensus_flags(

@@ -64,8 +64,11 @@ def smoother(
     machine_col: str | None = None,
     prefix: str = "smooth_",
 ) -> Callable[[DataFrame], DataFrame]:
-    """``smooth`` with its window Columns built once: the function returned
-    adds ``<prefix><c>`` to any frame that carries ``cols``."""
+    """W5 — ``<prefix><c>``, column ``c`` through one smoothing method, for
+    N columns in a single select (one window shuffle shared by all
+    columns); any column name works, dotted tag names included. The window
+    Columns are built once: the function returned adds them to any frame
+    that carries ``cols``."""
     if method == "ewma":
         return lambda df: ewma(df, cols, span=window, ts_col=ts_col, machine_col=machine_col, prefix=prefix)
     fn = SMOOTHERS[method]
@@ -74,19 +77,10 @@ def smoother(
     return lambda df: df.select("*", *smoothed)
 
 
-def smooth(
-    df: DataFrame,
-    cols: Sequence[str],
-    method: str = "smm",
-    window: int = 144,
-    ts_col: str = "ts",
-    machine_col: str | None = None,
-    prefix: str = "smooth_",
-) -> DataFrame:
-    """W5 — ``df`` plus ``<prefix><c>``, column ``c`` through one smoothing
-    method, for N columns in a single select (one window shuffle shared by
-    all columns); any column name works, dotted tag names included."""
-    return smoother(cols, method, window, ts_col, machine_col, prefix)(df)
+def smooth(df: DataFrame, *args, **kwargs) -> DataFrame:
+    """``df`` plus the smoothed columns: ``smoother(*args, **kwargs)``
+    applied to it."""
+    return smoother(*args, **kwargs)(df)
 
 
 def ewma(

@@ -30,6 +30,7 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from gordo_spark.ml.models import Projections
 from gordo_spark.sources.serving_io import (
     dataframe_from_dict,
     dataframe_to_dict,
@@ -43,7 +44,12 @@ _N_CACHED_MODELS = 2
 
 @lru_cache(maxsize=_N_CACHED_MODELS)
 def _load_cached(store_root: str, name: str, revision: str):
-    return ModelStore(store_root).load(name, revision)
+    """A model in the LRU is only scored, never refit, so it keeps the
+    Column lists it builds on its first request for the next ones."""
+    model, metadata = ModelStore(store_root).load(name, revision)
+    if isinstance(model, Projections):
+        model.keep_projections()
+    return model, metadata
 
 
 def _load(store_root: str, name: str, revision: str | None):

@@ -165,6 +165,15 @@ def test_anomaly_detector_end_to_end(spark, xy):
         out["tag_anomaly_unscaled__t1"].values / det.tag_thresholds_["t1"],
         rtol=1e-9,
     )
+    # a model scored outside serving keeps no Columns: new thresholds (as
+    # CV writes them) show in its next anomaly block with nothing to reset
+    det.tag_thresholds_ = {t: 2 * v for t, v in det.tag_thresholds_.items()}
+    again = det.anomaly(frame, resolution="10T").toPandas().sort_values("start")
+    np.testing.assert_allclose(
+        again["anomaly_confidence__t1"].values,
+        out["anomaly_confidence__t1"].values / 2,
+        rtol=1e-12,
+    )
 
 
 def test_kfcv_accepts_ewma_smoothing(spark, xy):
@@ -206,13 +215,15 @@ def test_smoothing_on_dotted_tag_names(spark, xy, method):
     aligned = spark.createDataFrame(
         pdf.rename(columns={"a": tag, "t1": f"model_output__{tag}"})
     )
-    out = anomaly_frame(aligned, [tag], smoothing_method=method, smoothing_window=6)
-    out = out.toPandas().sort_values("start")
-    np.testing.assert_allclose(
-        out[f"smooth_tag_anomaly_unscaled__{tag}"].to_numpy(),
-        pandas_smooth((pdf["t1"] - pdf["a"]).abs()),
-        rtol=1e-12,
+    out = anomaly_frame(
+        aligned, [tag], smoothing_method=method, smoothing_window=6, thresholds={tag: 2.0}
     )
+    out = out.toPandas().sort_values("start")
+    err = (pdf["t1"] - pdf["a"]).abs()
+    np.testing.assert_allclose(
+        out[f"smooth_tag_anomaly_unscaled__{tag}"].to_numpy(), pandas_smooth(err), rtol=1e-12
+    )
+    np.testing.assert_allclose(out[f"anomaly_confidence__{tag}"].to_numpy(), err / 2, rtol=1e-12)
 
     def kfcv_thresholds(names):
         machine = Machine.from_config(
@@ -410,10 +421,14 @@ def test_dotted_and_spaced_tag_names_end_to_end(spark, sensor_df):
     det.base.target_cols = tags
     det.fit(X, y)
     det.cross_validate(X, y, n_splits=3)
-    out = det.anomaly(with_targets(X, y, det.base.target_cols), resolution="10T")
-    cols = set(out.columns)
-    assert "tag_anomaly_scaled__GRA-TE  -23-0733.PV" in cols
-    assert out.count() > 100
+    frame = with_targets(X, y, det.base.target_cols)
+    for all_columns in (False, True):
+        out = det.anomaly(frame, resolution="10T", all_columns=all_columns)
+        cols = set(out.columns)
+        assert "tag_anomaly_scaled__GRA-TE  -23-0733.PV" in cols
+        assert "anomaly_confidence__GRA-TE  -23-0733.PV" in cols
+        assert ("smooth_tag_anomaly_scaled__GRA-TE  -23-0733.PV" in cols) == all_columns
+        assert out.count() > 100
 
 
 def test_model_from_definition_import_path_kind():
