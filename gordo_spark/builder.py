@@ -30,6 +30,7 @@ machine.
 from __future__ import annotations
 
 import time
+from collections.abc import Mapping
 from dataclasses import dataclass, fields
 from typing import Any
 
@@ -74,7 +75,10 @@ class BuildResult:
 
 
 class ModelBuilder:
-    """Build one machine: cache-check -> data -> CV -> fit -> persist."""
+    """Build one machine: cache-check -> data -> CV -> fit -> persist.
+
+    Nothing is planned or scanned before the cache check: a cache hit
+    loads the stored model and launches no Spark job."""
 
     def __init__(
         self,
@@ -83,14 +87,21 @@ class ModelBuilder:
         registry: DiskRegistry | None = None,
         version: str = "0.1",
         wide_frame: DataFrame | None = None,
+        frames: Mapping[str, DataFrame] | None = None,
+        revision: str | None = None,
     ):
         self.machine = machine
         self.store = store
         self.registry = registry
         self.version = version
-        # a precomputed aligned frame (e.g. from plans.multi's shared-scan
-        # fan-out) — skips this machine's solo scan entirely
+        # a precomputed aligned frame, or a fleet's frames by machine name
+        # (plans.multi's shared-scan fan-out, each planned on lookup): either
+        # skips this machine's solo scan; ``frames`` is read only on a
+        # cache miss, so a cached machine plans nothing
         self.wide_frame = wide_frame
+        self.frames = frames or {}
+        # the store revision to dump into (default: a fresh one per dump)
+        self.revision = revision
 
     @property
     def cache_key(self) -> str:
@@ -113,7 +124,12 @@ class ModelBuilder:
 
         t0 = time.time()
         dataset = dataset_from_dict(m.dataset)
-        wide = self.wide_frame if self.wide_frame is not None else dataset.wide_frame(spark)
+        if self.wide_frame is not None:
+            wide = self.wide_frame
+        elif m.name in self.frames:
+            wide = self.frames[m.name]
+        else:
+            wide = dataset.wide_frame(spark)
         wide = require_n_samples(wide, dataset.n_samples_threshold)
         query_duration = time.time() - t0
 
@@ -202,7 +218,7 @@ class ModelBuilder:
             )
 
         if cv_mode != "cross_val_only" and self.store is not None:
-            path = self.store.dump(model, m.name, metadata)
+            path = self.store.dump(model, m.name, metadata, self.revision)
             if self.registry is not None:
                 rev = path.split("/")[-2]
                 self.registry.write_key(key, rev)
@@ -229,23 +245,51 @@ def build_machines(
     ``share_scans=True`` groups machines whose dataset plans share a prefix
     (provider/resolution/aggregation/interpolation) and runs ONE
     scan+resample per group instead of one per machine (plans.multi) —
-    at lake scale that is N-machines-1-scan instead of N scans; the shared
-    scans stay cached until the builds return or raise."""
+    at lake scale that is N-machines-1-scan instead of N scans. Each
+    machine's frame is planned in its own build thread after its cache
+    check misses, so planning overlaps the other machines' Spark jobs and
+    a cached machine plans nothing; the shared scans stay cached until
+    the builds return or raise.
+
+    Every machine the call builds lands in one store revision. A machine
+    that fails does not stop the others: they are built and registered,
+    then one ``ExceptionGroup`` names every failed machine."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from gordo_spark.plans import multi
 
     datasets = {m.name: dataset_from_dict(m.dataset) for m in machines}
     wides = multi.shared_wide_frames(spark, datasets) if share_scans else multi.WideFrames()
+    revision = str(int(time.time() * 1000))
 
-    def one(machine: Machine) -> tuple[str, BuildResult]:
-        builder = ModelBuilder(
-            machine, store, registry, wide_frame=wides.get(machine.name)
-        )
-        return machine.name, builder.build(spark)
+    def one(machine: Machine) -> BuildResult:
+        return ModelBuilder(
+            machine, store, registry, frames=wides, revision=revision
+        ).build(spark)
 
+    results: dict[str, BuildResult] = {}
+    errors: dict[str, Exception] = {}
     try:
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            return dict(pool.map(one, machines))
+            # each build inherits the caller's job group and tags through its
+            # own copy of the local properties (Spark sets per-query ones)
+            futures = {
+                m.name: pool.submit(inheritable_thread_target(spark)(one), m)
+                for m in machines
+            }
+            for name, future in futures.items():
+                try:
+                    results[name] = future.result()
+                except Exception as e:  # noqa: BLE001 - reported below, per machine
+                    errors[name] = e
     finally:
         wides.release()
+    if errors:
+        raise ExceptionGroup(
+            f"{len(errors)} of {len(machines)} machines failed: "
+            + "; ".join(f"{n}: {type(e).__name__}: {e}" for n, e in errors.items()),
+            list(errors.values()),
+        )
+    return results

@@ -142,17 +142,20 @@ def main(argv: list[str] | None = None) -> int:
     except Exception as e:  # noqa: BLE001 - exit-code map is the contract
         from gordo_spark.exceptions_reporter import ReportLevel, default_reporter
 
+        # a fleet build's ExceptionGroup reports its first failed machine,
+        # as the reference's one-machine build pod would
+        cause = e.exceptions[0] if isinstance(e, ExceptionGroup) else e
         reporter = default_reporter()
-        code = reporter.exit_code_for(type(e))
+        code = reporter.exit_code_for(type(cause))
         if args.exceptions_reporter_file:
             level = ReportLevel.parse(
                 args.exceptions_report_level, ReportLevel.MESSAGE
             )
             reporter.write_report_safely(
                 level,
-                type(e),
-                e,
-                e.__traceback__,
+                type(cause),
+                cause,
+                cause.__traceback__,
                 args.exceptions_reporter_file,
                 max_message_len=2024,  # k8s termination-message cap
             )

@@ -607,9 +607,11 @@ class LaggedLinearModel(RowFitModel):
         in the design or target; every fit from one aggregation by ``FIT``."""
         names = [f"{c}__lag{s}" for c in feats for s in range(self.lookback)]
         ys = [f"_yt_{t}" for t in targets]
-        design = self._design(frame, feats, FIT, ts_col).select(
-            FIT, *[_q(c) for c in names + ys]
-        ).dropna()
+        # dropna() would resolve a dotted ``a.b__lag0`` as a nested field
+        cols = [_q(c) for c in names + ys]
+        design = self._design(frame, feats, FIT, ts_col).select(FIT, *cols).filter(
+            reduce(Column.__and__, [c.isNotNull() & ~F.isnan(c) for c in cols])
+        )
         rows = {r[FIT]: r for r in design.groupBy(FIT).agg(*gram_aggs(names, ys)).collect()}
         for i, m in enumerate(models):
             m._ols = LinearModel(names, targets)

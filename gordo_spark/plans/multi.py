@@ -8,7 +8,10 @@ identical for machines that agree on provider, resolution, aggregation and
 interpolation — so we group machines by that prefix, run it ONCE over the
 union of their tags and the envelope of their time ranges, cache the long
 filled frame, and fan out only the cheap per-machine tail (pivot over the
-machine's own tags + its filters).
+machine's own tags + its filters). ``shared_wide_frames`` plans none of it
+up front: each machine's tail, and its group's shared prefix on the
+group's first lookup, are planned in the build thread that needs them,
+after that machine's build-cache check.
 
 At 100 TB this is the difference between N full scans and one: the shared
 frame is ~#tags x #buckets rows (tiny relative to raw), and every
@@ -18,8 +21,11 @@ per-machine tail is a narrow filter+pivot over it.
 from __future__ import annotations
 
 import json
+import threading
 from collections import defaultdict
+from collections.abc import Callable, Iterator, Mapping, Sequence
 from dataclasses import replace
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -119,15 +125,68 @@ def _scan_groups(
     return solo, shared
 
 
-class WideFrames(dict):
-    """Machine name -> aligned wide frame; ``cached``: the shared scans
-    cached for them, unpersisted by ``release()``."""
+class _SharedScan:
+    """One group's scan -> resample prefix, planned (and cached) by the
+    first member that needs it; the lock keeps concurrent lookups to one
+    scan."""
 
-    cached: tuple[DataFrame, ...] = ()
+    def __init__(self, spark: SparkSession, proto: TimeSeriesDataset, cache: bool):
+        self.spark, self.proto, self.cache = spark, proto, cache
+        self.frame: DataFrame | None = None
+        self._lock = threading.Lock()
+
+    def get(self) -> DataFrame:
+        with self._lock:
+            if self.frame is None:
+                res = self.proto.long_resampled(self.spark)
+                self.frame = res.cache() if self.cache else res
+            return self.frame
 
     def release(self) -> None:
-        for frame in self.cached:
-            frame.unpersist()
+        if self.cache and self.frame is not None:
+            self.frame.unpersist()
+
+
+class WideFrames(Mapping):
+    """Machine name -> aligned wide frame, each planned on its first
+    lookup, in the thread that looks it up. ``release()`` unpersists the
+    shared scans planned so far."""
+
+    def __init__(
+        self,
+        plans: dict[str, Callable[[], DataFrame]] | None = None,
+        scans: Sequence[_SharedScan] = (),
+    ):
+        self._plans = plans or {}
+        self._scans = scans
+        self._frames: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._frames:
+            self._frames[name] = self._plans[name]()
+        return self._frames[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._plans)
+
+    def __len__(self) -> int:
+        return len(self._plans)
+
+    def release(self) -> None:
+        for scan in self._scans:
+            scan.release()
+
+
+def _member_frame(scan: _SharedScan, ds: TimeSeriesDataset) -> DataFrame:
+    """A member's tail over its group's shared scan: tag and range clip,
+    then fill and pivot."""
+    # multi-aggregation plans melt to <tag>__<agg> series names
+    part = scan.get().filter(F.col("tag").isin(ds._expand(ds.all_tags)))
+    if ds.train_start_date is not None:
+        part = part.filter(F.col("ts") >= F.lit(ds.train_start_date))
+    if ds.train_end_date is not None:
+        part = part.filter(F.col("ts") < F.lit(ds.train_end_date))
+    return ds.finalize_wide(ds.fill(part))
 
 
 def shared_wide_frames(
@@ -137,9 +196,12 @@ def shared_wide_frames(
 ) -> WideFrames:
     """One aligned wide frame per machine, sharing scans across machines.
 
-    Returns lazy DataFrames; the shared long frames are cached (unless
-    ``cache=False``) so the first machine's action materializes the scan
-    and every later machine reuses it, until the caller's ``release()``.
+    Plans nothing up front: it only groups the machines, so a fleet whose
+    builds all hit the build cache never scans or plans. A machine's frame
+    is planned on its first lookup, in the build thread that needs it; a
+    shared group's scan -> resample prefix is planned once, by whichever
+    member is looked up first, and cached (unless ``cache=False``) so every
+    other member reuses it, until the caller's ``release()``.
 
     Only scan -> resample is shared; regularize/interpolate run per machine
     AFTER its range clip, so gap fills never use anchors a solo scan would
@@ -149,21 +211,13 @@ def shared_wide_frames(
     the bit-parity guarantee holds unconditionally.
     """
     solo, shared = _scan_groups(datasets)
-    frames = WideFrames({name: datasets[name].wide_frame(spark) for name in solo})
+    plans = {name: partial(datasets[name].wide_frame, spark) for name in solo}
+    scans = []
     for proto, members in shared:
-        res = proto.long_resampled(spark)
-        if cache and len(members) > 1:
-            res = res.cache()
-            frames.cached += (res,)
-        for name, ds in members.items():
-            # multi-aggregation plans melt to <tag>__<agg> series names
-            part = res.filter(F.col("tag").isin(ds._expand(ds.all_tags)))
-            if ds.train_start_date is not None:
-                part = part.filter(F.col("ts") >= F.lit(ds.train_start_date))
-            if ds.train_end_date is not None:
-                part = part.filter(F.col("ts") < F.lit(ds.train_end_date))
-            frames[name] = ds.finalize_wide(ds.fill(part))
-    return frames
+        scan = _SharedScan(spark, proto, cache and len(members) > 1)
+        scans.append(scan)
+        plans.update({name: partial(_member_frame, scan, ds) for name, ds in members.items()})
+    return WideFrames(plans, scans)
 
 
 def fleet_spec_frame(

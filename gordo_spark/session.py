@@ -5,6 +5,17 @@ logical plans scale to a real cluster: AQE for runtime re-planning (skew
 joins, partition coalescing), UTC session time (the reference rejects naive
 timestamps — gordo/machine/validators.py:234-254), Arrow for the pandas-UDF
 slow path.
+
+DataFrame call-site capture (``spark.python.sql.dataFrameDebugging.enabled``)
+is off. With it on, every PySpark API call walks the Python stack, tries an
+``import IPython``, looks up the active session, reads a conf over py4j and
+sets the origin in the JVM; Spark's docs note "a non-trivial performance
+overhead". A machine build makes hundreds of such calls, and concurrent
+build threads queue for the GIL behind them. What errors lose is the
+Python ``file:line`` "DataFrame query context" of an analysis error; the
+JVM message is unchanged. It is a static SQL conf, so ``extra_conf`` can
+turn it back on only when the session is first built, and PySpark reads it
+once per process.
 """
 
 from __future__ import annotations
@@ -48,6 +59,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Pin native BLAS/OMP pools inside Python workers to ONE thread
         # (guide §4.5): Spark already runs one worker per task slot, so a
         # multi-threaded GEMM inside each of N concurrent workers

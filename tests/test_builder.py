@@ -652,3 +652,155 @@ def test_build_machines_releases_shared_scans(spark, machine):
     with pytest.raises(Exception, match="samples"):
         build_machines(spark, [machine, twin], max_workers=2)
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_get_spark_turns_call_site_capture_off(spark):
+    """PySpark API calls skip DataFrame call-site capture (session.py)."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
+def _count_scans(monkeypatch, delay_s=0.0):
+    """The datasets whose scan -> resample prefix is planned from now on;
+    ``delay_s`` holds each planning open that long."""
+    import time
+
+    scans = []
+    original = TimeSeriesDataset.long_resampled
+
+    def counted(self, spark):
+        scans.append(self)
+        time.sleep(delay_s)
+        return original(self, spark)
+
+    monkeypatch.setattr(TimeSeriesDataset, "long_resampled", counted)
+    return scans
+
+
+def _twin(machine, name="twin-machine", **dataset):
+    twin = Machine.from_config({**machine.to_dict(), "name": name})
+    twin.dataset = {**twin.dataset, **dataset}
+    return twin
+
+
+def test_cached_rebuild_plans_and_scans_nothing(spark, machine, tmp_path, job_count, monkeypatch):
+    """A machine looks up its frame only after its cache check misses, so
+    a fully cached rebuild plans no scan and runs no Spark job (planning
+    every frame up front ran the 2 parquet schema jobs of its scans)."""
+    # two machines sharing one scan and one starting off the 1H grid (solo)
+    fleet = [machine, _twin(machine), _twin(machine, "solo", train_start_date="2024-01-02 00:30:00")]
+    store = ModelStore(str(tmp_path / "models"))
+    registry = DiskRegistry(str(tmp_path / "registry"))
+    scans = _count_scans(monkeypatch)
+    build = lambda: build_machines(spark, fleet, store, registry, max_workers=3)  # noqa: E731
+    results = {}
+    assert job_count("cold-fleet", lambda: results.update(build())) > 0
+    assert len(scans) == 2
+    assert not any(r.cached for r in results.values())
+    assert len(store.revisions()) == 1  # one revision per call
+    scans.clear()
+    assert job_count("cached-fleet", lambda: results.update(build())) == 0
+    assert scans == []
+    assert len(results) == 3 and all(r.cached for r in results.values())
+
+
+def test_shared_scan_planned_once_under_concurrent_lookups(spark, machine, monkeypatch):
+    """Build threads looking up a shared group's frames at the same time
+    plan its scan once; nothing is planned before the lookups."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from gordo_spark.plans import multi
+
+    datasets = {m.name: dataset_from_dict(m.dataset) for m in (machine, _twin(machine))}
+    scans = _count_scans(monkeypatch, delay_s=0.5)
+    frames = multi.shared_wide_frames(spark, datasets)
+    assert set(frames) == set(datasets) and scans == []
+    names = list(datasets) * 4  # more threads than cores
+    barrier = threading.Barrier(len(names))
+
+    def lookup(name):
+        barrier.wait(timeout=60)
+        return frames[name]
+
+    interval = sys.getswitchinterval()
+    try:
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(len(names)) as pool:
+                list(pool.map(lookup, names, timeout=120))
+        finally:
+            sys.setswitchinterval(interval)
+        assert len(scans) == 1
+        counts = [frames[n].count() for n in datasets]
+    finally:
+        frames.release()
+    assert counts == [ds.wide_frame(spark).count() for ds in datasets.values()]
+
+
+def test_build_machines_calls_shared_wide_frames_once(spark, machine, tmp_path, monkeypatch):
+    """fleetbench's traced run wraps ``plans.multi.shared_wide_frames`` on
+    its module and reads the spans of the cached rebuild, so every
+    ``build_machines`` call, cold or cached, goes through it once."""
+    import functools
+
+    from gordo_spark.plans import multi
+
+    calls = []
+    original = multi.shared_wide_frames
+
+    @functools.wraps(original)
+    def wrapper(*args, **kwargs):
+        calls.append(args)
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(multi, "shared_wide_frames", wrapper)
+    store = ModelStore(str(tmp_path / "models"))
+    registry = DiskRegistry(str(tmp_path / "registry"))
+    fleet = [machine, _twin(machine)]
+    cold = build_machines(spark, fleet, store, registry, max_workers=2)
+    assert len(calls) == 1 and not any(r.cached for r in cold.values())
+    cached = build_machines(spark, fleet, store, registry, max_workers=2)
+    assert len(calls) == 2 and all(r.cached for r in cached.values())
+
+
+def test_failing_machine_does_not_stop_the_fleet(spark, machine, tmp_path):
+    """A machine under its n_samples_threshold fails alone: its twin is
+    built and registered, then one error names the failed machine."""
+    from gordo_spark.operators.filters import InsufficientDataError
+
+    store = ModelStore(str(tmp_path / "models"))
+    registry = DiskRegistry(str(tmp_path / "registry"))
+    twin = _twin(machine, n_samples_threshold=10_000_000)
+    with pytest.raises(ExceptionGroup, match="1 of 2 machines failed: twin-machine") as err:
+        build_machines(spark, [machine, twin], store, registry, max_workers=2)
+    assert [type(e) for e in err.value.exceptions] == [InsufficientDataError]
+    assert "test-machine" not in str(err.value)
+    rev = registry.get_value(ModelBuilder(machine).cache_key)
+    assert rev == store.latest_revision()
+    _, metadata = store.load(machine.name, rev)
+    assert metadata["name"] == machine.name
+    assert registry.get_value(ModelBuilder(twin).cache_key) is None
+
+
+def test_lagged_build_on_dotted_tags(spark, xy_wide):
+    """Dotted tag names build the same Lagged model as plain ones: the
+    fit's null filter reads ``a.b__lag0`` as one column, not a field."""
+    wide, _ = xy_wide
+    names = {"a": "a.b", "b": "c", "t1": "t.1", "t2": "t2"}
+    dotted_wide = wide.select("ts", *[wide[k].alias(v) for k, v in names.items()])
+    plain = _xy_machine(3, base=_lagged())
+    dotted = dataclasses.replace(
+        plain, dataset={**plain.dataset, "tag_list": ["a.b", "c"], "target_tag_list": ["t.1", "t2"]}
+    )
+    got = ModelBuilder(dotted, wide_frame=dotted_wide).build(spark)
+    want = ModelBuilder(plain, wide_frame=wide).build(spark)
+    assert got.model.base.feature_cols == ["a.b", "c"]
+    np.testing.assert_array_equal(got.model.base._ols.coef_, want.model.base._ols.coef_)
+    th_got = got.metadata["build-metadata"]["model"]["thresholds"]
+    th_want = want.metadata["build-metadata"]["model"]["thresholds"]
+    assert list(th_got["tags"]) == ["t.1", "t2"]
+    assert [*th_got["tags"].values(), th_got["total"]] == [*th_want["tags"].values(), th_want["total"]]

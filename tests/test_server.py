@@ -258,6 +258,29 @@ def test_project_level_routes(served):
     assert json.loads(r["body"])["expected-models"] == []
 
 
+def test_fleet_build_serves_every_machine_from_one_revision(spark, sf_dir, served_root, tmp_path):
+    """``build_machines`` writes a fleet into one revision, so the latest
+    revision lists every machine and revision-less requests find them."""
+    from gordo_spark.builder import build_machines
+
+    _, payload = served_root
+    root = str(tmp_path / "fleet")
+    config = {
+        "dataset": {
+            "tag_list": TAGS, "resolution": "1H",
+            "data_provider": {"type": "EventsAsSensorProvider", "sf_dir": sf_dir},
+        },
+        "model": {"kind": "DiffBasedAnomalyDetector", "window": 6},
+    }
+    machines = [Machine.from_config({**config, "name": n}) for n in ("fleet-a", "fleet-b")]
+    build_machines(spark, machines, ModelStore(root), max_workers=2)
+    assert len(ModelStore(root).revisions()) == 1
+    app = build_app(spark, root)
+    r = call(app, "/models")
+    assert json.loads(r["body"])["models"] == ["fleet-a", "fleet-b"]
+    assert call(app, "/fleet-a/prediction", "POST", payload)["status"] == 200
+
+
 def test_download_model_and_healthcheck_alias(served, spark):
     import pickle
 
