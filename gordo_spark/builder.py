@@ -2,29 +2,21 @@
 
 Reference flow (gordo/builder/build_model.py:104-339 in /root/reference,
 SURVEY.md §3.1): parse/validate config -> config-hash cache check -> fetch
-data (the whole dataset query executes here, timed as query_duration_sec)
--> cross-validate (per-fold metrics + thresholds) -> fit -> persist
+data -> cross-validate (per-fold metrics + thresholds) -> fit -> persist
 model.pkl + metadata.json with a revision -> registry write.
 
-Spark shape: steps stay driver-side except the data plan — the aligned wide
-frame is one Catalyst DAG, whether the machine scans solo or reads its share
-of a shared scan. Features and targets are one projection of that frame,
-never split into X and y and joined back, and every row is numbered with its
-TimeSeriesSplit segment, so each fold is a filter over ONE cached frame
-(``ml.cv``). One aggregation grouped by segment yields the fold metadata,
-the row count, the MinMax scaler stats and, for LinearModel / RidgeModel,
-every fit; other bases fit every fold in one more pass; one more scores
-every fold and takes the anomaly thresholds of the last. Spark jobs do not
-grow with the folds: an in-memory DiffBasedAnomalyDetector machine takes 4
-with a LinearModel base (9 parquet-backed), 6 with a LaggedLinearModel or
-PythonEstimatorModel base. A KFold detector (DiffBasedKFCVAnomalyDetector)
-adds KFold thresholds over its own ``n_splits`` from the same fold engine
-grouped by fold: 8 jobs in all (7 with modulo fold membership), 11 Lagged.
-Nothing but configs, Gram matrices, fitted estimators, scores and
-thresholds ever reaches the driver, so the same builder drives a
-1000-executor cluster unchanged: thousands of machines = a driver loop or
-thread pool submitting concurrent jobs (SURVEY.md §3.3), not one pod per
-machine.
+Here a build is config -> frame -> ``ml.cv.train`` -> metadata -> store. The
+aligned wide frame is one Catalyst DAG (a solo scan or a share of a shared
+scan), projected to the features and targets; ``train``, the one training
+routine, takes it to the fitted model and checks ``n_samples_threshold``
+against the row count of its fold aggregation. No ``count()`` runs, so
+``query_duration_sec`` is plan time only: the scan runs inside the CV. An
+in-memory DiffBasedAnomalyDetector machine takes 4 Spark jobs with a
+LinearModel base, 6 with a Lagged or PythonEstimatorModel base and 8 as a
+KFold detector (11 Lagged), whatever the folds. Only configs, Gram
+matrices, fitted estimators, scores and thresholds reach the driver:
+thousands of machines are a thread pool submitting concurrent jobs
+(SURVEY.md §3.3), not one pod per machine.
 """
 
 from __future__ import annotations
@@ -37,14 +29,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from gordo_spark.config import Machine
-from gordo_spark.ml.cv import FoldCV, Folds, cached, score_model, with_segments
-from gordo_spark.ml.models import (
-    DiffBasedAnomalyDetector,
-    DiffBasedKFCVAnomalyDetector,
-    _q,
-    model_from_definition,
-)
-from gordo_spark.operators import require_n_samples
+# score_model stays importable here: fleetbench's tracer wraps builder.score_model
+from gordo_spark.ml.cv import score_model, train  # noqa: F401
+from gordo_spark.ml.models import _q, model_from_definition
 from gordo_spark.plans.dataset import TimeSeriesDataset
 from gordo_spark.sources.store import DiskRegistry, ModelStore, calculate_cache_key
 
@@ -130,50 +117,23 @@ class ModelBuilder:
             wide = self.frames[m.name]
         else:
             wide = dataset.wide_frame(spark)
-        wide = require_n_samples(wide, dataset.n_samples_threshold)
         query_duration = time.time() - t0
 
         model = model_from_definition(m.model)
         evaluation = m.evaluation or {}
-        n_splits = int(evaluation.get("n_splits", 3))
         cv_mode = evaluation.get("cv_mode", "full_build")
         base = getattr(model, "base", model)
         feats = base.feature_cols or dataset.x_cols
         targets = base.target_cols or dataset.y_cols
-        if isinstance(model, DiffBasedAnomalyDetector):
-            base.feature_cols, base.target_cols = feats, targets
         frame = wide.select(
             "ts", *[_q(c) for c in feats], *[_q(t).alias(f"_yt_{t}") for t in targets]
         )
-
-        t1 = time.time()
-        # folds, metrics, thresholds and the final fit all read this one
-        # numbered, cached frame, released however the block exits
-        with cached(with_segments(frame, n_splits)) as data:
-            cv = FoldCV(model, data, feats, targets, Folds.timeseries(n_splits))
-            kfold = isinstance(model, DiffBasedKFCVAnomalyDetector)
-            tss = isinstance(model, DiffBasedAnomalyDetector) and not kfold
-            scores = score_model(
-                cv, evaluation.get("scoring_scaler"), model if tss else None
-            )
-            if kfold:
-                # KFold thresholds, over the model's own n_splits, come
-                # from the same fold engine over the groups of fold_column
-                model.kfold_thresholds(data, row_count=cv.row_count)
-            cv_duration = time.time() - t1
-            if cv_mode != "cross_val_only":
-                cv.refit()
-
-        # A5 — per-metric mean/std/min/max across folds + per-fold raws
-        agg_scores: dict[str, dict] = {}
-        for metric in scores[0]["aggregate"]:
-            vals = [s["aggregate"][metric] for s in scores]
-            mean = sum(vals) / len(vals)
-            var = sum((v - mean) ** 2 for v in vals) / len(vals)
-            agg_scores[metric] = {
-                "mean": mean, "std": var ** 0.5,
-                "min": min(vals), "max": max(vals), "raw": vals,
-            }
+        cv = train(
+            model, frame, feats, targets, int(evaluation.get("n_splits", 3)),
+            scoring_scaler=evaluation.get("scoring_scaler"),
+            n_samples_threshold=dataset.n_samples_threshold,
+            refit=cv_mode != "cross_val_only",
+        )
 
         path = None
         metadata = {
@@ -184,12 +144,8 @@ class ModelBuilder:
                     "model_creation_date": time.strftime("%Y-%m-%dT%H:%M:%S%z"),
                     "model_training_duration_sec": time.time() - t0,
                     "query_duration_sec": query_duration,
-                    "cv_duration_sec": cv_duration,
-                    "cross_validation": {
-                        "folds": cv.folds,
-                        "scores": agg_scores,
-                        "per_fold": scores,
-                    },
+                    "cv_duration_sec": cv.cv_duration,
+                    "cross_validation": cv.cross_validation,
                 },
                 "dataset": {
                     "row_count": cv.row_count,
@@ -205,11 +161,8 @@ class ModelBuilder:
             "runtime": m.runtime,
             "user-defined": m.metadata,
         }
-        if isinstance(model, DiffBasedAnomalyDetector):
-            metadata["build-metadata"]["model"]["thresholds"] = {
-                "tags": model.tag_thresholds_,
-                "total": model.total_threshold_,
-            }
+        if cv.thresholds is not None:
+            metadata["build-metadata"]["model"]["thresholds"] = cv.thresholds
         if hasattr(model, "get_metadata"):
             # the reference merges every model's own metadata into the build
             # record (machine.py:249-269 -> GordoBase.get_metadata)

@@ -1,26 +1,28 @@
-"""M3/M4/M5/M7 — cross-validation: splits, fold fits, fold scores.
+"""M3/M4/M5/M7 — training: ``train``, the one routine from a training frame
+to a fitted model, and the fold engine under it.
 
 Reference semantics: default CV is sklearn ``TimeSeriesSplit(n_splits=3)``
 (gordo/builder/build_model.py:256-261 in /root/reference); the KFold variant
 is ``KFold(n_splits=5, shuffle=True, random_state=0)``
 (gordo/machine/model/anomaly/diff.py:566-623).
 
-Spark shape: one fold engine serves both splitters. The training frame
-holds the features plus the targets as ``_yt_<t>``; the builder projects it
-from the aligned wide frame, so no X/y join precedes the numbering. Its rows
-are numbered ONCE and each row carries a fold group: ``_seg`` for
-TimeSeriesSplit (``with_segments``; fold ``i`` trains on segments ``0..i``
-and tests on ``i + 1``) or ``_fold`` for KFold (``fold_column``; fold ``f``
-trains on every other group and tests on ``f``), so every fold is a
-predicate over one frame cached for the CV (``cached``). ``Folds`` names
+``train`` takes the training frame (``ts``, the features, the targets as
+``_yt_<t>``), drops the rows with a null, NaN or ±inf feature or target (the
+reference's inner alignment drops rows with a missing tag), numbers the
+rest ONCE and caches them, and then fits, checks ``n_samples_threshold``,
+scores, sets thresholds and refits. The builder, ``cross_validate`` (no
+refit) and every ``fit(X, y)`` (no folds) run it. Each row carries a fold
+group: ``_seg`` for TimeSeriesSplit (``with_segments``; fold ``i`` trains on
+segments ``0..i`` and tests on ``i + 1``) or ``_fold`` for KFold
+(``fold_column``; fold ``f`` trains on every other group and tests on
+``f``), so every fold is a predicate over one cached frame. ``Folds`` names
 each fold's train groups and test group. ``FoldCV`` gets the fold metadata,
-the MinMax scaler stats and the base model's ``group_aggs`` from ONE
-aggregation grouped by the fold column; the base model then fits every fold
-(``fit_folds``: ``LinearModel`` / ``RidgeModel`` sum per-group Gram blocks,
-other bases train on the rows exploded into their fits), with no Spark work
-per fold. Every fold's test rows are scored at once by the base models' one
-scoring method, ``outputs``, keyed by the fold column: each row by its
-fold's model.
+the row count, the MinMax scaler stats and the base model's ``group_aggs``
+from ONE aggregation grouped by the fold column; the base model then fits
+every fold (``fit_folds``: ``LinearModel`` / ``RidgeModel`` sum per-group
+Gram blocks, other bases train on the rows exploded into their fits), with
+no Spark work per fold. Every fold's test rows are scored at once by the
+base models' one scoring method, ``outputs``, keyed by the fold column.
 Robust-scaler quantiles do not combine across groups, so they take one pass
 of their own, for every fold at once. ``score_model`` scores every fold (and
 takes the anomaly thresholds of the last) in one more aggregation; the KFold
@@ -33,23 +35,26 @@ shuffles ``arange(n)`` with the seeded Mersenne RNG and deals consecutive
 chunks as test folds — the identical permutation comes from
 ``np.random.RandomState(seed).permutation(n)`` on the driver (one machine's
 aligned frame is bounded, ~50k rows/year @10min, so the n-length fold map
-is a broadcast-joinable driver artifact — the same boundary the reference
-crosses by materializing the whole frame in memory). ``membership="modulo"``
+is a broadcast-joinable driver artifact). ``membership="modulo"``
 (``row_number % k``) remains as the engine-portable fallback that a SQL
 oracle can reproduce (used by the m4 contract query).
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
+from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from gordo_spark.ml.models import FIT, DiffBasedAnomalyDetector, _q, keyed, model_from_definition
+from gordo_spark.ml.models import DiffBasedKFCVAnomalyDetector, require_finite
 from gordo_spark.ml.scalers import center_spread
+from gordo_spark.operators.filters import check_n_samples
 from gordo_spark.operators.anomaly import row_mean_square
 from gordo_spark.operators.smoothing import rolling_min
 
@@ -179,8 +184,7 @@ def kfold_split(
 @contextmanager
 def cached(frame: DataFrame) -> Iterator[DataFrame]:
     """``frame`` cached for the duration of the block, released however
-    the block exits — e.g. the training frame (features plus targets as
-    ``_yt_<t>``) numbered by ``with_segments`` or ``fold_column``."""
+    the block exits."""
     data = frame.cache()
     try:
         yield data
@@ -217,9 +221,11 @@ class FoldCV:
     One aggregation grouped by that column gives ``folds`` (train/test
     start/end/count per fold), ``row_count``, the per-group MinMax stats
     and whatever per-group aggregates the base model asks for
-    (``group_aggs``). The base model then fits every fold at once
-    (``fit_folds``); ``models[i]`` is fold i's fitted clone of it, and
-    ``predictions`` scores every fold's test rows through them at once."""
+    (``group_aggs``). Fewer rows than ``n_samples_threshold`` raise
+    ``InsufficientDataError`` before any fold is fit. The base model then
+    fits every fold at once (``fit_folds``); ``models[i]`` is fold i's
+    fitted clone of it, and ``predictions`` scores every fold's test rows
+    through them at once."""
 
     def __init__(
         self,
@@ -229,6 +235,7 @@ class FoldCV:
         targets: Sequence[str],
         folds: Folds,
         ts_col: str = "ts",
+        n_samples_threshold: int = 0,
     ):
         self.model, self.data, self.spec = model, data, folds
         self.base = getattr(model, "base", model)
@@ -245,7 +252,8 @@ class FoldCV:
         aggs += self.base.group_aggs(self.feats, ys)
         rows = {r[folds.col]: r for r in data.groupBy(folds.col).agg(*aggs).collect()}
         self.row_count = sum(r["_n"] for r in rows.values())
-        if any(g not in rows for g in folds.test):
+        check_n_samples(self.row_count, n_samples_threshold)
+        if not rows or any(g not in rows for g in folds.test):
             raise ValueError(f"too few rows ({self.row_count}) for {self.n_splits} splits")
         self.groups = rows
         # train groups per fold, then every group for the final fit
@@ -266,7 +274,8 @@ class FoldCV:
             )
         clone = {**self.base.into_definition(), "feature_cols": self.feats, "target_cols": self.targets}
         self.models = [model_from_definition(clone) for _ in folds.test]
-        self.base.fit_folds(self, folds.train, self.models)
+        if self.models:
+            self.base.fit_folds(self, folds.train, self.models)
 
     def _in(self, groups: Sequence[int]) -> Column:
         return F.col(self.spec.col).isin(*groups)
@@ -322,11 +331,11 @@ class FoldCV:
         """Final fit of the base model on every row, in place; a detector's
         scaler takes every row's target stats (diff.py:166-174)."""
         base = self.base
-        base.feature_cols, base.target_cols = list(self.feats), list(self.targets)
         base.fit_folds(self, [self._train[-1]], [base])
         if base is not self.model:
             self.model.scaler = self.model._scaler_cls()(self.targets)
             self.model.scaler.stats = self.stats(self.model.scaler_kind, self.n_splits)
+            require_finite("scaler stats", [v for s in self.model.scaler.stats.values() for v in s])
 
 
 def detector_errors(cv: FoldCV, detector: DiffBasedAnomalyDetector) -> list[Column]:
@@ -407,3 +416,54 @@ def score_model(
         detector.tag_thresholds_ = {t: last[f"_th_e_{t}"] for t in cv.targets}
         detector.total_threshold_ = last["_th_e_total"]
     return per_fold
+
+
+class Training(NamedTuple):
+    """``train``'s folds, per-fold scores and their A5 mean/std/min/max/raw
+    (``cross_validation``), a detector's thresholds, the rows kept and the
+    seconds before the refit."""
+
+    cross_validation: dict
+    thresholds: dict | None
+    row_count: int
+    cv_duration: float
+
+
+def train(
+    model, frame: DataFrame, feats: Sequence[str], targets: Sequence[str], n_splits: int,
+    scoring_scaler: str | None = None, n_samples_threshold: int = 0, refit: bool = True,
+    ts_col: str = "ts",
+) -> Training:
+    """Train ``model`` on ``frame`` with ``n_splits`` TimeSeriesSplit folds
+    (``scoring_scaler`` scales their scores), then refit it on every row.
+    The folds set a plain detector's thresholds; a KFold detector runs its
+    own KFold CV unless this is a plain fit (a refit with no folds)."""
+    t0 = time.time()
+    base = getattr(model, "base", model)
+    base.feature_cols, base.target_cols = list(feats), list(targets)
+    detector = model if isinstance(model, DiffBasedAnomalyDetector) else None
+    kfold = isinstance(model, DiffBasedKFCVAnomalyDetector)
+    # abs(c) < inf is false for ±inf, for NaN (Spark orders it above inf) and for null
+    finite = [F.abs(_q(c)) < F.lit(float("inf")) for c in [*feats, *[f"_yt_{t}" for t in targets]]]
+    kept = frame.filter(reduce(Column.__and__, finite))
+    numbered = with_segments(kept, n_splits, ts_col) if n_splits else kept.withColumn(SEG, F.lit(0))
+    with cached(numbered) as data:
+        cv = FoldCV(model, data, feats, targets, Folds.timeseries(n_splits), ts_col, n_samples_threshold)
+        per_fold = score_model(cv, scoring_scaler, None if kfold else detector) if n_splits else []
+        if kfold and (n_splits or not refit):
+            model.kfold_thresholds(data, ts_col, row_count=cv.row_count)
+        cv_duration = time.time() - t0
+        if refit:
+            cv.refit()
+    thresholds = None
+    if detector is not None:
+        thresholds = {"tags": detector.tag_thresholds_, "total": detector.total_threshold_}
+        require_finite("thresholds", [*(thresholds["tags"] or {}).values(), thresholds["total"]])
+    scores = {}
+    for metric in per_fold[0]["aggregate"] if per_fold else ():
+        vals = [s["aggregate"][metric] for s in per_fold]
+        mean = sum(vals) / len(vals)
+        var = sum((v - mean) ** 2 for v in vals) / len(vals)
+        scores[metric] = {"mean": mean, "std": var ** 0.5, "min": min(vals), "max": max(vals), "raw": vals}
+    cross_validation = {"folds": cv.folds, "scores": scores, "per_fold": per_fold}
+    return Training(cross_validation, thresholds, cv.row_count, cv_duration)

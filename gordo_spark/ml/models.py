@@ -11,6 +11,8 @@ registry (gordo/machine/model/factories/*). Here:
   training frame (p = #tags is small, so the Gram matrix is tiny); the
   (p+1)x(p+1) solve happens on the driver with numpy; its outputs are pure
   column expressions. Fully distributed fit, codegen'd scoring, zero UDFs.
+- every ``fit(X, y)`` and ``cross_validate(X, y)`` runs the builder's
+  training routine, ``ml.cv.train`` (``train_xy``).
 - one scoring method per base model: ``outputs(frame, key, models,
   prefix)`` appends ``<prefix><t>`` per target to every column of
   ``frame``, each row scored by ``models[row[key]]`` (by the model itself
@@ -38,7 +40,7 @@ from functools import reduce
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from gordo_spark.ml.scalers import MinMaxScalerExpr, center_spread
+from gordo_spark.ml.scalers import MinMaxScalerExpr, RobustScalerExpr, _q, center_spread
 from gordo_spark.operators.anomaly import anomaly_projection
 
 _MODEL_REGISTRY: dict[str, type] = {}
@@ -96,10 +98,6 @@ def model_into_definition(model) -> dict:
     return model.into_definition()
 
 
-def _q(c: str) -> Column:
-    return F.col("`" + c + "`")
-
-
 def with_targets(
     X: DataFrame, y: DataFrame, targets: Sequence[str], ts_col: str = "ts"
 ) -> DataFrame:
@@ -107,6 +105,30 @@ def with_targets(
     that are also inputs stay unambiguous — the one place a separate X and
     y become one training frame."""
     return X.join(y.select(ts_col, *[_q(t).alias(f"_yt_{t}") for t in targets]), ts_col)
+
+
+def train_xy(model, X: DataFrame, y: DataFrame, n_splits: int = 0, refit: bool = True, ts_col: str = "ts"):
+    """``ml.cv.train`` over X joined to y; features and targets default to
+    the columns of X and of y."""
+    from gordo_spark.ml.cv import train
+
+    base = getattr(model, "base", model)
+    feats = base.feature_cols or [c for c in X.columns if c != ts_col]
+    targets = base.target_cols or [c for c in y.columns if c != ts_col]
+    frame = with_targets(X, y, targets, ts_col)
+    train(model, frame, feats, targets, n_splits, refit=refit, ts_col=ts_col)
+    return model
+
+
+class NonFiniteError(ValueError):
+    """A fitted coefficient, scaler stat or threshold came out NaN or ±inf."""
+
+
+def require_finite(what: str, values) -> None:
+    """Raise ``NonFiniteError`` unless each of ``values`` is None or finite."""
+    bad = [v for v in values if v is not None and not np.isfinite(v)]
+    if bad:
+        raise NonFiniteError(f"{len(bad)} non-finite {what}, e.g. {bad[0]}")
 
 
 def keyed(key: str | None, values: Mapping) -> Column:
@@ -195,18 +217,12 @@ class LinearModel(BaseModel):
         self.coef_: np.ndarray | None = None  # shape (p+1, m), row 0 = intercept
 
     def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts") -> "LinearModel":
-        feats = self.feature_cols or [c for c in X.columns if c != ts_col]
-        targets = self.target_cols or [c for c in y.columns if c != ts_col]
-        self.feature_cols, self.target_cols = feats, targets
-        row = with_targets(X, y, targets, ts_col).agg(
-            *gram_aggs(feats, [f"_yt_{t}" for t in targets])
-        ).collect()[0]
-        xtx, xty = gram_blocks(row, len(feats), len(targets))
-        self.coef_ = self._solve(xtx, xty)
-        return self
+        return train_xy(self, X, y, ts_col=ts_col)
 
     def _solve(self, xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
-        return np.linalg.solve(xtx, xty)
+        coef = np.linalg.solve(xtx, xty)
+        require_finite("coefficients", coef.ravel())
+        return coef
 
     def _output_columns(self) -> list[Column]:
         cols = []
@@ -292,7 +308,7 @@ class RidgeModel(LinearModel):
     def _solve(self, xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
         reg = np.eye(xtx.shape[0]) * self.alpha
         reg[0, 0] = 0.0  # never penalize the intercept
-        return np.linalg.solve(xtx + reg, xty)
+        return super()._solve(xtx + reg, xty)
 
     def into_definition(self) -> dict:
         return {
@@ -331,8 +347,6 @@ class DiffBasedAnomalyDetector(Projections):
         self.base.keep_projections()
 
     def _scaler_cls(self):
-        from gordo_spark.ml.scalers import RobustScalerExpr
-
         return MinMaxScalerExpr if self.scaler_kind == "minmax" else RobustScalerExpr
 
     def _spread(self, stat: tuple[float, float]) -> float:
@@ -341,25 +355,13 @@ class DiffBasedAnomalyDetector(Projections):
         return center_spread(self.scaler_kind, stat)[1]
 
     def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts") -> "DiffBasedAnomalyDetector":
-        self.base.fit(X, y, ts_col)
-        # scaler fit on y AFTER training (diff.py:166-174)
-        self.scaler = self._scaler_cls()(self.base.target_cols).fit(y)
-        return self
+        return train_xy(self, X, y, ts_col=ts_col)
 
     def cross_validate(
         self, X: DataFrame, y: DataFrame, n_splits: int = 3, ts_col: str = "ts"
     ) -> "DiffBasedAnomalyDetector":
-        """TimeSeriesSplit fold fits; thresholds from the LAST fold only
-        (the fold-fused routine of ``ml.cv`` that the builder runs too)."""
-        from gordo_spark.ml.cv import FoldCV, Folds, cached, score_model, with_segments
-
-        targets = self.base.target_cols or [c for c in y.columns if c != ts_col]
-        feats = self.base.feature_cols or [c for c in X.columns if c != ts_col]
-        frame = with_segments(with_targets(X, y, targets, ts_col), n_splits, ts_col)
-        with cached(frame) as data:
-            cv = FoldCV(self, data, feats, targets, Folds.timeseries(n_splits), ts_col)
-            score_model(cv, detector=self)
-        return self
+        """TimeSeriesSplit fold fits; thresholds from the LAST fold only."""
+        return train_xy(self, X, y, n_splits, refit=False, ts_col=ts_col)
 
     def get_metadata(self) -> dict:
         """diff.py:88-127 parity: thresholds + smoothing config (keys match
@@ -483,21 +485,15 @@ class DiffBasedKFCVAnomalyDetector(DiffBasedAnomalyDetector):
         """KFold thresholds over X and y, over the model's own ``n_splits``."""
         if n_splits not in (None, self.n_splits):
             raise ValueError(f"n_splits={n_splits} differs from the model's {self.n_splits}")
-        base = self.base
-        base.feature_cols = base.feature_cols or [c for c in X.columns if c != ts_col]
-        base.target_cols = base.target_cols or [c for c in y.columns if c != ts_col]
-        return self.kfold_thresholds(with_targets(X, y, base.target_cols, ts_col), ts_col)
+        return super().cross_validate(X, y, 0, ts_col)
 
     def kfold_thresholds(
         self, frame: DataFrame, ts_col: str = "ts", row_count: int | None = None
     ) -> "DiffBasedKFCVAnomalyDetector":
-        """Thresholds from ``n_splits``-fold CV over ``frame``: the base
-        estimator's feature columns plus its targets as ``_yt_<t>``
-        (``with_targets``), ``row_count`` rows when the caller knows it.
-        Every fold fit and its scaler stats come from ``ml.cv.FoldCV``; the
-        out-of-fold errors are one projection of its predictions, smoothed
-        over the whole frame, then the ``threshold_percentile`` quantile
-        (diff.py:617-635)."""
+        """Thresholds from ``n_splits``-fold CV over ``ml.cv.train``'s frame
+        of ``row_count`` rows: the out-of-fold errors of ``ml.cv.FoldCV``'s
+        fold fits, smoothed over the whole frame, then their
+        ``threshold_percentile`` quantile (diff.py:617-635)."""
         from gordo_spark.ml.cv import FoldCV, Folds, cached, detector_errors, fold_column
         from gordo_spark.operators.smoothing import smooth
 
@@ -529,11 +525,7 @@ class RowFitModel(BaseModel):
         self._fit_rows(cv.exploded(fits), cv.feats, cv.targets, models, cv.ts_col)
 
     def fit(self, X: DataFrame, y: DataFrame, ts_col: str = "ts"):
-        self.feature_cols = self.feature_cols or [c for c in X.columns if c != ts_col]
-        self.target_cols = self.target_cols or [c for c in y.columns if c != ts_col]
-        frame = with_targets(X, y, self.target_cols, ts_col).withColumn(FIT, F.lit(0))
-        self._fit_rows(frame, self.feature_cols, self.target_cols, [self], ts_col)
-        return self
+        return train_xy(self, X, y, ts_col=ts_col)
 
 
 @register_model("LaggedLinearModel")
@@ -603,15 +595,11 @@ class LaggedLinearModel(RowFitModel):
         self, frame: DataFrame, feats: Sequence[str], targets: Sequence[str], models: Sequence,
         ts_col: str,
     ) -> None:
-        """OLS over each fit's lag design, dropping rows with a null or NaN
-        in the design or target; every fit from one aggregation by ``FIT``."""
+        """OLS over each fit's lag design; every fit from one aggregation by
+        ``FIT``."""
         names = [f"{c}__lag{s}" for c in feats for s in range(self.lookback)]
         ys = [f"_yt_{t}" for t in targets]
-        # dropna() would resolve a dotted ``a.b__lag0`` as a nested field
-        cols = [_q(c) for c in names + ys]
-        design = self._design(frame, feats, FIT, ts_col).select(FIT, *cols).filter(
-            reduce(Column.__and__, [c.isNotNull() & ~F.isnan(c) for c in cols])
-        )
+        design = self._design(frame, feats, FIT, ts_col)
         rows = {r[FIT]: r for r in design.groupBy(FIT).agg(*gram_aggs(names, ys)).collect()}
         for i, m in enumerate(models):
             m._ols = LinearModel(names, targets)

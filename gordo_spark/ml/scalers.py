@@ -28,12 +28,22 @@ def center_spread(kind: str, stat: tuple[float, float]) -> tuple[float, float]:
     return a, (spread if spread else 1.0)
 
 
-class MinMaxScalerExpr:
-    """sklearn MinMaxScaler (feature_range (0,1)): (x - min)/(max - min)."""
+class _ColumnScaler:
+    """Per-column ``stats`` from ``fit``; ``transform`` applies ``expr``."""
 
     def __init__(self, cols: Sequence[str]):
         self.cols = list(cols)
         self.stats: dict[str, tuple[float, float]] | None = None
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        out = df
+        for c in self.cols:
+            out = out.withColumn(c, self.expr(c))
+        return out
+
+
+class MinMaxScalerExpr(_ColumnScaler):
+    """sklearn MinMaxScaler (feature_range (0,1)): (x - min)/(max - min)."""
 
     def fit(self, df: DataFrame) -> "MinMaxScalerExpr":
         aggs = []
@@ -48,19 +58,9 @@ class MinMaxScalerExpr:
         rng = (mx - mn) if mx != mn else 1.0
         return (_q(c) - F.lit(mn)) / F.lit(rng)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        out = df
-        for c in self.cols:
-            out = out.withColumn(c, self.expr(c))
-        return out
 
-
-class RobustScalerExpr:
+class RobustScalerExpr(_ColumnScaler):
     """sklearn RobustScaler: (x - median) / IQR (with_centering/scaling)."""
-
-    def __init__(self, cols: Sequence[str]):
-        self.cols = list(cols)
-        self.stats: dict[str, tuple[float, float]] | None = None
 
     def fit(self, df: DataFrame) -> "RobustScalerExpr":
         aggs = []
@@ -79,9 +79,3 @@ class RobustScalerExpr:
     def expr(self, c: str) -> Column:
         md, iqr = self.stats[c]
         return (_q(c) - F.lit(md)) / F.lit(iqr if iqr else 1.0)
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        out = df
-        for c in self.cols:
-            out = out.withColumn(c, self.expr(c))
-        return out

@@ -132,15 +132,20 @@ def filter_periods(
     )
 
 
+def check_n_samples(n: int, n_samples_threshold: int) -> None:
+    """P6 — raise InsufficientDataError if ``n`` rows < threshold."""
+    if n < n_samples_threshold:
+        raise InsufficientDataError(
+            f"{n} rows after filtering < n_samples_threshold={n_samples_threshold}"
+        )
+
+
 def require_n_samples(df: DataFrame, n_samples_threshold: int) -> DataFrame:
-    """P6 — raise InsufficientDataError if count < threshold. This is the
-    one deliberate driver-side action in the dataset plan (a cheap count)."""
+    """``check_n_samples`` on ``df.count()``: the one deliberate driver-side
+    action in the dataset plan. Training reads the row count of its fold
+    aggregation instead (``ml.cv.train``)."""
     if n_samples_threshold > 0:
-        n = df.count()
-        if n < n_samples_threshold:
-            raise InsufficientDataError(
-                f"{n} rows after filtering < n_samples_threshold={n_samples_threshold}"
-            )
+        check_n_samples(df.count(), n_samples_threshold)
     return df
 
 

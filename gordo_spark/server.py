@@ -265,8 +265,10 @@ class GordoServer:
                     timings=timings,
                 )
                 return self._stamped(resp, args, timings)
-        except FileNotFoundError as exc:
-            return self._json(404, {"error": str(exc)})
+        except FileNotFoundError:
+            # the machine and revision only: the exception names server paths
+            rev = revision or store.latest_revision()
+            return self._json(404, {"error": f"no model {machine!r} in revision {rev}"})
         except (ValueError, KeyError) as exc:
             return self._json(400, {"error": str(exc)})
         return self._json(404, {"error": f"no route {method} {path}"})

@@ -10,7 +10,8 @@ import pytest
 from gordo_spark.builder import ModelBuilder, build_machines, dataset_from_dict
 from gordo_spark.config import Machine
 from gordo_spark.ml.cv import sklearn_kfold_membership
-from gordo_spark.ml.models import model_from_definition
+from gordo_spark.ml.models import NonFiniteError, model_from_definition
+from gordo_spark.operators import InsufficientDataError
 from gordo_spark.plans.dataset import TimeSeriesDataset
 from gordo_spark.sources.store import DiskRegistry, ModelStore
 
@@ -268,24 +269,18 @@ def xy_wide(spark):
     return spark.createDataFrame(pdf), pdf
 
 
-def _xy_machine(n_splits, scoring_scaler=None, scaler="minmax", base=None):
+def _xy_machine(n_splits, scoring_scaler=None, scaler="minmax", base=None, n_samples_threshold=0):
     evaluation = {"cv_mode": "full_build", "n_splits": n_splits}
     if scoring_scaler:
         evaluation["scoring_scaler"] = scoring_scaler
     model = {"kind": "DiffBasedAnomalyDetector", "window": 6, "scaler": scaler}
     if base:
         model["base_estimator"] = base
+    dataset = {"tag_list": ["a", "b"], "target_tag_list": ["t1", "t2"], "resolution": "10T"}
+    if n_samples_threshold:
+        dataset["n_samples_threshold"] = n_samples_threshold
     return Machine.from_config(
-        {
-            "name": "xy-machine",
-            "dataset": {
-                "tag_list": ["a", "b"],
-                "target_tag_list": ["t1", "t2"],
-                "resolution": "10T",
-            },
-            "model": model,
-            "evaluation": evaluation,
-        }
+        {"name": "xy-machine", "dataset": dataset, "model": model, "evaluation": evaluation}
     )
 
 
@@ -380,6 +375,47 @@ def _oracle(pdf, n_splits, scoring_scaler, scaler, design=_design(), fit=_lstsq)
     }
 
 
+def _lagged(lookback=3, lookahead=1):
+    return {"kind": "LaggedLinearModel", "lookback": lookback, "lookahead": lookahead}
+
+
+_AUTOENCODER = {
+    "kind": "PythonEstimatorModel",
+    "estimator": "gordo_spark.ml.factories.AutoEncoderEstimator",
+    "estimator_kwargs": {
+        "kind": "feedforward_hourglass", "epochs": 5, "seed": 0, "backend": "numpy",
+    },
+}
+
+
+def _autoencoder_fit(A, Y):
+    """(weights and biases, predict) of the seeded numpy autoencoder."""
+    from gordo_spark.ml.factories import AutoEncoderEstimator
+
+    est = AutoEncoderEstimator(**_AUTOENCODER["estimator_kwargs"]).fit(A[:, 1:], Y)
+    m = est.model_
+    return (
+        np.concatenate([w.ravel() for w in [*m.weights_, *m.biases_]]),
+        lambda At: est.predict(At[:, 1:]),
+    )
+
+
+_RIDGE = {"kind": "RidgeModel", "alpha": 0.5}
+
+
+def _ridge_fit(alpha):
+    """``fit`` of sklearn ``Ridge(alpha, fit_intercept=True)``: the
+    intercept is not penalized."""
+
+    def fit(A, Y):
+        reg = alpha * np.eye(A.shape[1])
+        reg[0, 0] = 0.0
+        coef = np.linalg.solve(A.T @ A + reg, A.T @ Y)
+        return coef, lambda At: At @ coef
+
+    return fit
+
+
 def _params(base):
     """A fitted base estimator's parameters: OLS coefficients, or the
     autoencoder's weights and biases flattened."""
@@ -439,23 +475,59 @@ def test_fused_build_matches_numpy_oracle(spark, xy_wide, n_splits, scoring_scal
 
 
 def test_failed_build_releases_cached_frames(spark, xy_wide):
+    """Too few rows for the folds raise, and so do fewer rows than
+    ``n_samples_threshold``, checked before the folds; either way the
+    numbered frame is released."""
     wide, _ = xy_wide
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     with pytest.raises(ValueError, match="too few rows"):
         ModelBuilder(_xy_machine(3), wide_frame=wide.limit(3)).build(spark)
     assert jsc.getPersistentRDDs().size() == before
+    machine = _xy_machine(3, n_samples_threshold=10)
+    with pytest.raises(InsufficientDataError, match="3 rows after filtering < n_samples_threshold=10"):
+        ModelBuilder(machine, wide_frame=wide.limit(3)).build(spark)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_solo_build_job_budget(spark, xy_wide, job_count):
     """A DiffBasedAnomalyDetector(LinearModel) machine: one aggregation fits
-    every fold, one more scores them and takes the thresholds."""
+    every fold, one more scores them and takes the thresholds. The
+    ``n_samples_threshold`` check reads that aggregation's row count."""
     wide, _ = xy_wide
-    build = ModelBuilder(_xy_machine(3), wide_frame=wide).build
-    jobs = job_count("solo-build", lambda: build(spark))
+    jobs = {}
+    for threshold in (0, 300):
+        build = ModelBuilder(_xy_machine(3, n_samples_threshold=threshold), wide_frame=wide).build
+        jobs[threshold] = job_count(f"solo-build-{threshold}", lambda: build(spark))  # noqa: B023
     # 3 jobs for the fit aggregation (input, numbering, grouping), 1 to
     # score; features and targets are one projection, so no X/y join
-    assert jobs <= 4
+    assert jobs[0] <= 4
+    assert jobs[300] == jobs[0]
+
+
+def test_nonfinite_rows_are_dropped_before_numbering(spark, xy_wide):
+    """A row with an inf feature or a NaN target is not trained on: the
+    build is the oracle's over the other rows, thresholds finite."""
+    _, pdf = xy_wide
+    bad = pdf.copy()
+    bad.loc[50, "a"] = np.inf
+    bad.loc[120, "t1"] = np.nan
+    r = ModelBuilder(_xy_machine(3), wide_frame=spark.createDataFrame(bad)).build(spark)
+    kept = pdf.drop(index=[50, 120]).reset_index(drop=True)
+    _assert_matches_oracle(r, _oracle(kept, 3, None, "minmax"), kept, 3)
+
+
+def test_non_finite_coefficients_raise(spark, xy_wide):
+    """A finite reading whose square overflows makes the Gram matrix
+    infinite: the build raises NonFiniteError and releases its frame."""
+    _, pdf = xy_wide
+    huge = pdf.copy()
+    huge.loc[50, "a"] = 1e200
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(NonFiniteError, match="coefficients"):
+        ModelBuilder(_xy_machine(3), wide_frame=spark.createDataFrame(huge)).build(spark)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 # --------------------------------------------------------------------------
@@ -497,22 +569,44 @@ def _kfcv_oracle(pdf, k, membership, scaler, design=_design()):
     return [th(err[oof, 0]), th(err[oof, 1])], th(total[oof])
 
 
-@pytest.mark.parametrize("scaler", ["minmax", "robust"])
-@pytest.mark.parametrize("membership", ["shuffle", "modulo"])
-def test_kfcv_thresholds_match_numpy_oracle(spark, xy_wide, membership, scaler):
+@pytest.mark.parametrize(
+    "split,scaler,base,design,fit",
+    [
+        *[
+            pytest.param(m, s, None, _design(), _lstsq, id=f"{m}-{s}")
+            for m in ("shuffle", "modulo")
+            for s in ("minmax", "robust")
+        ],
+        pytest.param("tss", "minmax", None, _design(), _lstsq, id="tss-linear"),
+        pytest.param("tss", "minmax", _RIDGE, _design(), _ridge_fit(0.5), id="tss-ridge"),
+        pytest.param("tss", "minmax", _lagged(3, 1), _design(3, 1), _lstsq, id="tss-lagged-3-1"),
+        pytest.param("tss", "minmax", _AUTOENCODER, _design(), _autoencoder_fit, id="tss-autoencoder"),
+    ],
+)
+def test_kfcv_thresholds_match_numpy_oracle(spark, xy_wide, split, scaler, base, design, fit):
+    """The builder and ``cross_validate`` train through the same routine and
+    give the oracle's thresholds: a KFold detector's from its own KFold CV,
+    a TimeSeriesSplit detector's from the last of its folds."""
     wide, pdf = xy_wide
-    tags, total = _kfcv_oracle(pdf, 3, membership, scaler)
+    if split == "tss":
+        machine = _xy_machine(3, base=base)
+        exp = _oracle(pdf, 3, None, scaler, design, fit)
+        tags, total = exp["tags"], exp["total"]
+    else:
+        machine = _kfcv_machine(split, scaler)
+        tags, total = _kfcv_oracle(pdf, 3, split, scaler, design)
     close = dict(rtol=1e-9, atol=0)
-    th = ModelBuilder(_kfcv_machine(membership, scaler), wide_frame=wide).build(
+    th = ModelBuilder(machine, wide_frame=wide).build(
         spark
     ).metadata["build-metadata"]["model"]["thresholds"]
     np.testing.assert_allclose([th["tags"]["t1"], th["tags"]["t2"]], tags, **close)
     np.testing.assert_allclose(th["total"], total, **close)
 
-    det = model_from_definition(_kfcv(membership, scaler))
-    det.cross_validate(wide.select("ts", "a", "b"), wide.select("ts", "t1", "t2"))
-    np.testing.assert_allclose([det.tag_thresholds_["t1"], det.tag_thresholds_["t2"]], tags, **close)
-    np.testing.assert_allclose(det.total_threshold_, total, **close)
+    det = model_from_definition(machine.model)
+    det.cross_validate(wide.select("ts", "a", "b"), wide.select("ts", "t1", "t2"), 3)
+    got = [det.tag_thresholds_["t1"], det.tag_thresholds_["t2"], det.total_threshold_]
+    np.testing.assert_allclose(got, [*tags, total], **close)
+    np.testing.assert_allclose(got, [th["tags"]["t1"], th["tags"]["t2"], th["total"]], rtol=1e-12)
 
 
 def test_kfcv_runs_the_models_own_fold_count(spark, xy_wide):
@@ -555,31 +649,6 @@ def test_kfcv_build_job_budget(spark, xy_wide, job_count):
 
 # --------------------------------------------------------------------------
 # bases without sufficient statistics on the same fold engine
-
-
-def _lagged(lookback=3, lookahead=1):
-    return {"kind": "LaggedLinearModel", "lookback": lookback, "lookahead": lookahead}
-
-
-_AUTOENCODER = {
-    "kind": "PythonEstimatorModel",
-    "estimator": "gordo_spark.ml.factories.AutoEncoderEstimator",
-    "estimator_kwargs": {
-        "kind": "feedforward_hourglass", "epochs": 5, "seed": 0, "backend": "numpy",
-    },
-}
-
-
-def _autoencoder_fit(A, Y):
-    """(weights and biases, predict) of the seeded numpy autoencoder."""
-    from gordo_spark.ml.factories import AutoEncoderEstimator
-
-    est = AutoEncoderEstimator(**_AUTOENCODER["estimator_kwargs"]).fit(A[:, 1:], Y)
-    m = est.model_
-    return (
-        np.concatenate([w.ravel() for w in [*m.weights_, *m.biases_]]),
-        lambda At: est.predict(At[:, 1:]),
-    )
 
 
 @pytest.mark.parametrize("lookback,lookahead", [(3, 1), (2, 0)])

@@ -421,6 +421,10 @@ def test_dotted_and_spaced_tag_names_end_to_end(spark, sensor_df):
     det.base.target_cols = tags
     det.fit(X, y)
     det.cross_validate(X, y, n_splits=3)
+    # the NaN and inf readings are dropped before training, not fit on
+    assert np.isfinite(det.base.coef_).all()
+    assert np.isfinite([*det.tag_thresholds_.values(), det.total_threshold_]).all()
+    assert np.isfinite([v for s in det.scaler.stats.values() for v in s]).all()
     frame = with_targets(X, y, det.base.target_cols)
     for all_columns in (False, True):
         out = det.anomaly(frame, resolution="10T", all_columns=all_columns)

@@ -236,6 +236,19 @@ def test_revision_resolution_and_errors(served):
     assert call(app, "/srv-machine/nope")["status"] == 404
 
 
+def test_not_found_names_machine_and_revision_only(served, served_root):
+    """A 404 for a missing model names the machine and the revision, never
+    a path under the server's store root."""
+    app, rev, _ = served
+    root, _ = served_root
+    for path in ("/no-such-machine/metadata", f"/no-such-machine/download-model?revision={rev}"):
+        r = call(app, path)
+        assert r["status"] == 404
+        error = json.loads(r["body"])["error"]
+        assert error == f"no model 'no-such-machine' in revision {rev}"
+        assert root not in r["body"].decode()
+
+
 def test_runs_under_wsgiref_validator(served):
     """The app is spec-compliant WSGI (what any container would host)."""
     from wsgiref.validate import validator
